@@ -4,16 +4,20 @@ Re-expresses the reference's joblib-parallel fit/predict loop
 (/root/reference/panelsplit/application.py:160-371) in Spark's execution
 model (SURVEY §3.2):
 
-* **fit** — one job: fan-out rows to ``(fold_id, role='train')`` via a
-  broadcast hash join with the fold spec, then ``groupBy(fold_id).
-  applyInPandas(fit_fn)``. Every fold trains concurrently in its own
-  executor task on an Arrow-delivered pandas frame; what returns to the
-  driver is only ``(fold_id, pickled_model)`` — data never leaves the
-  cluster.
-* **apply** — one job, shuffle-free: pickled models are broadcast to
-  executors; ``mapInPandas`` applies ``models[fold_id].method(batch)``
-  per Arrow batch. No groupBy is needed because prediction is row-local
-  given ``fold_id``.
+* **fit** — closed-form estimators (OLS, ridge, mean, scaler) resolve
+  from one per-period moment aggregate shared by every splitter and
+  estimator on the frame (``linear_fastpath.py``). Any other estimator
+  takes one job: fan-out rows to ``(fold_id, role='train')`` with the
+  splitter's literal membership expression (``PanelSplit.assign``),
+  then ``groupBy(fold_id).applyInPandas(fit_fn)``. Every fold trains
+  concurrently in its own executor task on an Arrow-delivered pandas
+  frame; what returns to the driver is only ``(fold_id, pickled_model)``
+  — data never leaves the cluster.
+* **apply** — one job, shuffle-free. Closed-form models become a
+  projection over a literal coefficient array indexed by ``fold_id``;
+  other models are pickled, broadcast to executors, and ``mapInPandas``
+  applies ``models[fold_id].method(batch)`` per Arrow batch. No groupBy
+  is needed because prediction is row-local given ``fold_id``.
 * **reassembly** — the reference restores original row order with an
   argsort permutation (application.py:142-157). Spark DataFrames are
   unordered; instead predictions carry the caller's stable key columns and
@@ -313,10 +317,11 @@ def cross_val_fit(
     """Fit one cloned estimator per fold; returns the fitted models in
     fold order (reference application.py:160-225).
 
-    One Spark job: broadcast-join fan-out → ``groupBy(fold_id)`` (the single
-    shuffle, with map-side combine of nothing but the fold's own rows) →
-    grouped-map fit. Column pruning: only the columns the fit needs are
-    shipped through the shuffle and Arrow.
+    Closed-form estimators: at most one per-period moment aggregate,
+    memoised per frame and columns. Others: one Spark job — literal
+    fan-out → ``groupBy(fold_id)`` (the single shuffle) → grouped-map
+    fit. Column pruning: only the columns the fit needs are shipped
+    through the shuffle and Arrow.
     """
     use_weight = sample_weight_col is not None and supports_sample_weight(
         estimator
@@ -418,9 +423,9 @@ def cross_val_predict(
 
     assigned = cv.assign(df.select(*needed), roles=(return_group,))
 
-    # Closed-form family + plain predict → broadcast-joined coefficient
-    # frame + arithmetic projection: the whole OOF pass stays in
-    # whole-stage codegen, no Python workers, no model broadcast.
+    # Closed-form family + plain predict → literal coefficient array
+    # indexed by fold_id + arithmetic projection: the whole OOF pass
+    # stays in whole-stage codegen, no Python workers, no broadcast.
     if output_type == "double":
         from .linear_fastpath import linear_predict_frame
 

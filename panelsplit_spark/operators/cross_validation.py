@@ -12,9 +12,12 @@ Two physical strategies are exposed (SURVEY §4.2):
 * **loop** — n_splits filtered scans; each filter is a sargable BETWEEN that
   Catalyst pushes into the parquet scan (partition pruning when data is laid
   out by period). Best when folds are few and data is big.
-* **fan-out** — one broadcast join against the driver-small fold-spec table,
-  yielding ``(row, fold_id, role)`` in a single pass. Best for many folds and
-  for single-pass statistics (``drop_splits``, ``gen_snapshots``).
+* **fan-out** — one narrow pass that tags each row with its
+  ``(fold_id, role)`` memberships and explodes them: a literal
+  expression (hash ``IN``-set, then a CASE tree over the sorted
+  membership segments) computes each row's membership array, so there
+  is no join, no broadcast and no extra Spark job. Best for many folds
+  and for single-pass statistics (``drop_splits``, ``gen_snapshots``).
 """
 
 from __future__ import annotations
@@ -22,16 +25,19 @@ from __future__ import annotations
 import datetime
 from typing import Any, Callable, List, Optional, Sequence, Tuple
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F, types as T
 
 from ..plans.fold_spec import (
     FoldSpec,
     build_fold_spec,
     purged_kfold_bounds,
+    spark_order_key,
 )
 
 __all__ = [
     "PanelSplit",
+    "distinct_periods",
+    "explode_memberships",
     "fold_stats",
     "drop_splits",
     "date_period_bounds",
@@ -40,6 +46,99 @@ __all__ = [
     "cpcv_backtest_paths",
     "nested_ridge_cv",
 ]
+
+
+def distinct_periods(df: DataFrame, period_col: str) -> List[Any]:
+    """Sorted distinct non-NULL values of ``period_col``: one
+    distinct aggregate job (partial aggregation map-side, only distinct
+    values cross the wire), sorted on the driver in Spark's order (NaN
+    last) — #periods ≪ #rows, so a Spark sort would only add jobs."""
+    rows = (
+        df.select(F.col(period_col).alias("p"))
+        .where(F.col(period_col).isNotNull())
+        .distinct()
+        .collect()
+    )
+    return sorted((r["p"] for r in rows), key=spark_order_key)
+
+
+def _sql_ident(name: str) -> str:
+    """``name`` as a back-quoted Spark SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _sql_literal(value: Any, dtype) -> str:
+    """``value`` as a Spark SQL literal of column type ``dtype``; a
+    value collected from such a column round-trips exactly."""
+    if value is None:
+        return f"CAST(NULL AS {dtype.simpleString()})"
+    if isinstance(dtype, T.IntegerType):
+        return str(int(value))
+    if isinstance(dtype, T.StringType):
+        text = str(value).replace("\\", "\\\\").replace("'", "\\'")
+        return f"'{text}'"
+    if isinstance(dtype, T.TimestampType):
+        # collected naive datetimes are in the Python process's zone;
+        # toInternal is the exact inverse of that conversion
+        return f"timestamp_micros({dtype.toInternal(value)})"
+    text = repr(value) if isinstance(value, float) else str(value)
+    return f"CAST('{text}' AS {dtype.simpleString()})"
+
+
+def explode_memberships(
+    df: DataFrame,
+    period_col: str,
+    memberships: Sequence[Tuple[Any, Sequence[Tuple[Any, ...]]]],
+    fields: Sequence[Tuple[str, Any]],
+) -> DataFrame:
+    """One row per (data row, membership of its period): ``df``'s
+    columns + one column per ``fields`` entry ``(name, Spark type)``.
+
+    ``memberships`` lists, in Spark's ascending order, every member
+    period with its value tuples (one value per field). Two SQL literal
+    expressions, each handed to Spark in a single call: a hash
+    ``IN``-set filter of the member periods gives exact membership (a
+    value absent from the list is dropped even inside a run of members)
+    and reaches the scan as a pushed filter; then a binary CASE tree
+    over the runs of periods sharing one membership list picks the
+    row's literal array — O(log #runs) comparisons per row — and the
+    explode (``inline``) keeps the pass narrow: no join, no broadcast,
+    no extra job.
+    """
+    ptype = df.schema[period_col].dataType
+    col = _sql_ident(period_col)
+    struct = ", ".join(f"{n}: {t.simpleString()}" for n, t in fields)
+
+    def leaf(members) -> str:
+        return "array(" + ", ".join(
+            "named_struct(" + ", ".join(
+                f"'{n}', {_sql_literal(v, t)}"
+                for (n, t), v in zip(fields, m)
+            ) + ")"
+            for m in members
+        ) + ")"
+
+    runs: List[Tuple[Any, Sequence[Tuple[Any, ...]]]] = []
+    for p, m in memberships:
+        if not runs or runs[-1][1] != m:
+            runs.append((p, m))
+
+    def tree(lo: int, hi: int) -> str:
+        if hi - lo == 1:
+            return leaf(runs[lo][1])
+        mid = (lo + hi) // 2
+        return (
+            f"CASE WHEN {col} < {_sql_literal(runs[mid][0], ptype)} "
+            f"THEN {tree(lo, mid)} ELSE {tree(mid, hi)} END"
+        )
+
+    if not runs:
+        empty = f"CAST(NULL AS array<struct<{struct}>>)"
+        return df.select("*", F.inline(F.expr(empty)))
+    in_set = ", ".join(_sql_literal(p, ptype) for p, _ in memberships)
+    return df.where(F.expr(f"{col} IN ({in_set})")).select(
+        "*", F.inline(F.expr(tree(0, len(runs))))
+    )
 
 
 class _DatePeriodBounds:
@@ -135,17 +234,7 @@ class PanelSplit:
         if unique_periods is None:
             if df is None:
                 raise ValueError("provide either df or unique_periods")
-            # O(|distinct periods|) driver collect — #periods ≪ #rows.
-            # Partial aggregation happens map-side; only distinct values
-            # cross the wire.
-            rows = (
-                df.select(F.col(period_col).alias("p"))
-                .where(F.col(period_col).isNotNull())
-                .distinct()
-                .orderBy("p")
-                .collect()
-            )
-            unique_periods = [r["p"] for r in rows]
+            unique_periods = distinct_periods(df, period_col)
         snapshot_min = None
         if snapshot_col is not None:
             if df is None:
@@ -196,13 +285,14 @@ class PanelSplit:
         ps.scan_col = scan_col
         ps.period_bounds = period_bounds
         all_periods = sorted(
-            {p for tr, te in folds for p in list(tr) + list(te)}
+            {p for tr, te in folds for p in list(tr) + list(te)},
+            key=spark_order_key,
         )
 
         def ranges(vals):
             """Merge sorted period values into contiguous runs w.r.t.
             the global unique-period axis."""
-            vals = sorted(set(vals))
+            vals = sorted(set(vals), key=spark_order_key)
             if not vals:
                 return []
             idx = {p: i for i, p in enumerate(all_periods)}
@@ -222,8 +312,8 @@ class PanelSplit:
             built.append(
                 Fold(
                     fold_id=i,
-                    train_periods=sorted(set(tr)),
-                    test_periods=sorted(set(te)),
+                    train_periods=sorted(set(tr), key=spark_order_key),
+                    test_periods=sorted(set(te), key=spark_order_key),
                     train_ranges=ranges(tr),
                     test_ranges=ranges(te),
                 )
@@ -269,20 +359,53 @@ class PanelSplit:
     def _snap(self):
         return F.col(self.snapshot_col) if self.snapshot_col else None
 
+    def _scan_bounds(
+        self, ranges: List[Tuple[Any, Any]]
+    ) -> List[Tuple[Any, Any]]:
+        """Raw-column ``[lo, hi)`` bounds of the given period ranges
+        (empty when no scan mapping is configured)."""
+        if not (self.scan_col and self.period_bounds):
+            return []
+        return [
+            (self.period_bounds(lo)[0], self.period_bounds(hi)[1])
+            for lo, hi in ranges
+        ]
+
     def _scan_range(self, ranges: List[Tuple[Any, Any]]):
         """Sargable raw-column OR-of-ranges for the given period ranges
         (None when no scan mapping is configured)."""
-        if not (self.scan_col and self.period_bounds and ranges):
-            return None
         pred = None
-        for lo, hi in ranges:
-            raw_lo = self.period_bounds(lo)[0]
-            raw_hi = self.period_bounds(hi)[1]
+        for raw_lo, raw_hi in self._scan_bounds(ranges):
             p = (F.col(self.scan_col) >= F.lit(raw_lo)) & (
                 F.col(self.scan_col) < F.lit(raw_hi)
             )
             pred = p if pred is None else (pred | p)
         return pred
+
+    def _train_scope(self, df: DataFrame) -> Tuple[Any, Any]:
+        """``(predicate, key)``: a row filter that keeps every row any
+        fold trains on, and a hashable key naming it (the moment cube
+        is memoised under it). It is the raw-column scan range of the
+        merged train periods when a scan mapping is configured and,
+        with a snapshot column, an ``IN``-set of the folds' snapshot
+        values; ``predicate`` is None when neither applies."""
+        ranges = self.spec.union_ranges("train")
+        pred = self._scan_range(ranges)
+        snaps = None
+        if self.snapshot_col:
+            snaps = sorted(
+                {f.snapshot_value for f in self.spec.folds} - {None},
+                key=spark_order_key,
+            )
+            dtype = df.schema[self.snapshot_col].dataType
+            in_set = ", ".join(_sql_literal(v, dtype) for v in snaps)
+            p = (
+                F.expr(f"{_sql_ident(self.snapshot_col)} IN ({in_set})")
+                if snaps else F.lit(False)
+            )
+            pred = p if pred is None else (pred & p)
+            snaps = tuple(snaps)
+        return pred, (tuple(self._scan_bounds(ranges)), snaps)
 
     def _role_filter(self, fold_id: int, role: str):
         pred = self.spec.predicate(
@@ -301,29 +424,19 @@ class PanelSplit:
     # fan-out strategy
     # ------------------------------------------------------------------
 
-    def fold_spec_df(self, spark) -> DataFrame:
-        """The fold spec as a broadcast-tagged small DataFrame."""
-        return self.spec.spec_df(spark)
-
     def assign(
         self, df: DataFrame, roles: Tuple[str, ...] = ("train", "test")
     ) -> DataFrame:
         """Fan-out: one row per (data row, fold membership).
 
-        Implemented as a **broadcast hash join** against the driver-small
-        fold-spec table — a single pass over the data, no shuffle of the
-        big side, regardless of n_splits. Output columns = df's +
-        ``fold_id`` + ``role``.
+        A single narrow pass (:func:`explode_memberships`): each row's
+        membership array is a literal expression over its period — no
+        join and no broadcast, regardless of n_splits — exploded in
+        place. Rows whose period is NULL or in no requested
+        ``(fold, role)`` produce nothing; with a snapshot column a row
+        only joins a fold at that fold's snapshot value. Output columns
+        = df's + ``fold_id`` + ``role``.
         """
-        spec = (
-            self.spec.spec_df(df.sparkSession)
-            .withColumnRenamed("period", "__fold_period")
-        )
-        if roles != ("train", "test"):
-            spec = spec.where(F.col("role").isin(list(roles)))
-        cond = df[self.period_col] == spec["__fold_period"]
-        if self.snapshot_col:
-            cond = cond & (df[self.snapshot_col] == spec["snapshot_value"])
         # pre-prune the scan to the union of all folds' periods when a
         # sargable raw-column mapping is configured
         all_ranges = []
@@ -333,9 +446,22 @@ class PanelSplit:
         extra = self._scan_range(all_ranges)
         if extra is not None:
             df = df.where(extra)
+        fields = [("fold_id", T.IntegerType()), ("role", T.StringType())]
+        memberships = self.spec.memberships(roles)
+        if not self.snapshot_col:
+            return explode_memberships(
+                df, self.period_col, memberships, fields
+            )
+        snaps = [f.snapshot_value for f in self.spec.folds]
+        fields.append(("__snap", df.schema[self.snapshot_col].dataType))
+        memberships = [
+            (p, [(fid, role, snaps[fid]) for fid, role in m])
+            for p, m in memberships
+        ]
         return (
-            df.join(F.broadcast(spec), cond, "inner")
-            .drop("__fold_period", "snapshot_value")
+            explode_memberships(df, self.period_col, memberships, fields)
+            .where(F.col(self.snapshot_col) == F.col("__snap"))
+            .drop("__snap")
         )
 
     # ------------------------------------------------------------------
@@ -498,34 +624,26 @@ def purged_panel_assign(
 
     Plan shape at 100 TB: identical to ``PanelSplit.assign`` — the
     distinct-period collect is the same driver-small boundary every
-    splitter pays (periods ≪ rows), the (fold, role, period) spec is
-    folds×periods rows, and the fan-out is a single BROADCAST hash
-    join: one pass over the data, no shuffle of the big side.
+    splitter pays (periods ≪ rows), and the fan-out is one narrow
+    literal-membership explode (:func:`explode_memberships`): one pass
+    over the data, no join, no shuffle.
     """
-    periods = [
-        r[0]
-        for r in df.select(period_col)
-        .where(F.col(period_col).isNotNull())
-        .distinct()
-        .orderBy(period_col)
-        .collect()
-    ]
+    periods = distinct_periods(df, period_col)
     bounds = purged_kfold_bounds(len(periods), n_splits, purge, embargo)
-    rows = []
-    for i, (tlo, thi, xlo, xhi) in enumerate(bounds):
-        for rk, p in enumerate(periods):
+    members = []
+    for rk, p in enumerate(periods):
+        m = []
+        for i, (tlo, thi, xlo, xhi) in enumerate(bounds):
             if tlo <= rk < thi:
-                rows.append((i, "test", p))
+                m.append((i, "test"))
             elif rk < xlo or rk >= xhi:
-                rows.append((i, "train", p))
-    spec = df.sparkSession.createDataFrame(
-        rows, ["fold_id", "role", "__fold_period"]
+                m.append((i, "train"))
+        if m:
+            members.append((p, m))
+    return explode_memberships(
+        df, period_col, members,
+        [("fold_id", T.LongType()), ("role", T.StringType())],
     )
-    return df.join(
-        F.broadcast(spec),
-        df[period_col] == spec["__fold_period"],
-        "inner",
-    ).drop("__fold_period")
 
 
 def cpcv_panel_assign(
@@ -545,40 +663,36 @@ def cpcv_panel_assign(
     period from one assignment.
 
     Plan shape: identical to :func:`purged_panel_assign` — driver-small
-    distinct-period collect, a (split, role, period) spec of
-    C(G,k)·periods rows, ONE broadcast fan-out join of the fact table.
+    distinct-period collect, then ONE narrow literal-membership explode
+    of the fact table with up to C(G,k) memberships per row.
     """
     from ..plans.fold_spec import cpcv_splits
 
-    periods = [
-        r[0]
-        for r in df.select(period_col)
-        .where(F.col(period_col).isNotNull())
-        .distinct()
-        .orderBy(period_col)
-        .collect()
-    ]
+    periods = distinct_periods(df, period_col)
     n = len(periods)
     splits = cpcv_splits(n, n_groups, n_test_groups, purge, embargo)
-    rows = []
-    for sid, blocks in splits:
-        excl = [
-            (max(0, lo - purge), min(n, hi + embargo))
-            for lo, hi in blocks
-        ]
-        for rk, p in enumerate(periods):
+    windows = [
+        (
+            sid,
+            blocks,
+            [(max(0, lo - purge), min(n, hi + embargo)) for lo, hi in blocks],
+        )
+        for sid, blocks in splits
+    ]
+    members = []
+    for rk, p in enumerate(periods):
+        m = []
+        for sid, blocks, excl in windows:
             if any(lo <= rk < hi for lo, hi in blocks):
-                rows.append((sid, "test", p))
+                m.append((sid, "test"))
             elif not any(lo <= rk < hi for lo, hi in excl):
-                rows.append((sid, "train", p))
-    spec = df.sparkSession.createDataFrame(
-        rows, ["split_id", "role", "__fold_period"]
+                m.append((sid, "train"))
+        if m:
+            members.append((p, m))
+    return explode_memberships(
+        df, period_col, members,
+        [("split_id", T.LongType()), ("role", T.StringType())],
     )
-    return df.join(
-        F.broadcast(spec),
-        df[period_col] == spec["__fold_period"],
-        "inner",
-    ).drop("__fold_period")
 
 
 def cpcv_backtest_paths(
@@ -662,14 +776,7 @@ def cpcv_backtest_paths(
     )
 
     # group of each period rank, replayed from the SAME split geometry
-    periods = [
-        r[0]
-        for r in df.select(period_col)
-        .where(F.col(period_col).isNotNull())
-        .distinct()
-        .orderBy(period_col)
-        .collect()
-    ]
+    periods = distinct_periods(df, period_col)
     n = len(periods)
     q, r = divmod(n, n_groups)
     grp_rows = []

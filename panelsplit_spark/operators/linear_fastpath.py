@@ -4,16 +4,23 @@ The generic per-fold fit ships every train row of a fold into one
 ``applyInPandas`` task (reference semantics, application.py:54-139) —
 correct, but a single task must hold a whole fold, which is the
 documented skew ceiling at scale (SURVEY §4.2). For estimators whose fit
-is a function of second-order moments — OLS / ridge / mean — the fold fit
-collapses to ONE distributed aggregation:
+is a function of second-order moments — OLS / ridge / mean / scaler —
+the fold fit collapses to ONE distributed aggregation over the raw rows,
+grouped by period instead of by fold:
 
-    groupBy(fold_id).agg(Σw, Σwy, Σwxᵢ, Σwxᵢy, Σwxᵢxⱼ)
+    groupBy(period[, snapshot]).agg(Σw, Σwy, Σwxᵢ, Σwxᵢy, Σwxᵢxⱼ, null flags)
 
-i.e. map-side partial aggregation over however many partitions the fold
-spans (no fold-sized task anywhere), a shuffle of a few dozen doubles per
-fold, and an O(d³) driver-side solve. Prediction similarly needs no
-Python: per-fold coefficients fold into a literal CASE expression, so the
-whole OOF pass stays inside whole-stage codegen.
+Fold moments are sums of period moments, so the driver gets every
+fold's moments from one numpy product — a fold × period 0/1 train
+membership matrix times that per-period cube, with a NaN or ±Inf period
+moment kept out of the folds that do not train on it — followed by an
+O(d³) solve. No row is fanned out to its folds before aggregating, and
+the cube serves every splitter, estimator and null rule on the same
+frame and columns; only a splitter's scan range or snapshot values,
+which bound the rows it aggregates, make it a separate cube.
+Prediction needs no Python either: per-fold coefficients are a literal
+array indexed by ``fold_id``, so the whole OOF pass stays inside
+whole-stage codegen.
 
 The produced models are ordinary estimator objects (coef_/intercept_/
 mean_ set), indistinguishable from pandas-path fits to downstream code.
@@ -21,8 +28,10 @@ mean_ set), indistinguishable from pandas-path fits to downstream code.
 
 from __future__ import annotations
 
+import json
 import threading
 import weakref
+from dataclasses import dataclass
 from typing import Any, List, Optional, Sequence
 
 import numpy as np
@@ -38,20 +47,20 @@ from ..estimators import (
 
 __all__ = ["suffstats_fit", "linear_predict_frame", "sweep_scores", "logistic_irls", "glm_irls", "huber_irls"]
 
-# Moment aggregates are a function of (data, folds, columns, null rule) —
-# NOT of the estimator's hyper-parameters. A hyper-parameter search over
-# the closed-form family therefore needs exactly ONE distributed
-# aggregate: every candidate resolves from the cached moments with an
-# O(d³) driver solve. Two-level weak keying (df, then cv) scopes cache
-# lifetime to the objects themselves; the lock makes concurrent candidate
-# threads (BaseSearch n_jobs) compute the aggregate once and share it.
+# Per-period moment cubes are a function of (data, columns, period and
+# snapshot column, and the splitter's train scope: its raw scan range
+# and snapshot values, when set) — NOT of the folds, the estimator's
+# null rule or its hyper-parameters. OLS, a ridge grid and a scaler
+# on several splitters of one frame therefore need exactly ONE distributed
+# aggregate: every fit resolves from the cached cube with a numpy
+# product and an O(d³) driver solve. Weak keying on the frame scopes
+# cache lifetime to it; the lock makes concurrent candidate threads
+# (BaseSearch n_jobs) compute the aggregate once and share it.
 _MOMENT_CACHE: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 _CACHE_LOCK = threading.Lock()
 
 #: fast path covers at most this many features (d² aggregate columns)
 _MAX_FEATURES = 16
-#: ...and at most this many folds for the literal predict expression
-_MAX_FOLDS_FOR_EXPR = 64
 
 
 def _eligible_fit(estimator: Any) -> bool:
@@ -66,7 +75,7 @@ def _eligible_fit(estimator: Any) -> bool:
 def _null_rule(estimator: Any) -> str:
     """Which columns' NULLs poison this estimator's numpy fit:
     MeanRegressor only looks at y; linear models at X and y; the scaler
-    only at X."""
+    only at X. A NULL weight poisons every fit."""
     t = type(estimator)
     if t is MeanRegressor:
         return "y"
@@ -75,29 +84,36 @@ def _null_rule(estimator: Any) -> str:
     return "xy"
 
 
+@dataclass
+class _MomentCube:
+    """Collected per-(period[, snapshot]) moments: ``sums[r, k]`` is
+    moment ``cols[k]`` over the rows of group ``r``; ``nulls[r]`` holds
+    0/1 any-NULL flags for (x, y, weight)."""
+
+    periods: List[Any]
+    snapshots: Optional[List[Any]]
+    cols: List[str]
+    sums: np.ndarray
+    nulls: np.ndarray
+
+
 def _fold_moments(
     df: DataFrame,
-    cv,
+    period_col: str,
+    snapshot_col: Optional[str],
     feats: List[str],
     y_col: str,
     sample_weight_col: Optional[str],
     drop_na_in_y: bool,
-    null_rule: str,
-) -> dict:
-    """One grouped aggregate: per-fold (Σw, Σwy, Σwxᵢ, Σwxᵢy, Σwxᵢxⱼ,
-    any-null flag), collected to a tiny driver dict."""
-    needed = list(dict.fromkeys(feats + [y_col]))
-    if sample_weight_col is not None:
-        needed.append(sample_weight_col)
-    if cv.period_col not in needed:
-        needed.append(cv.period_col)
-    if cv.snapshot_col and cv.snapshot_col not in needed:
-        needed.append(cv.snapshot_col)
-
-    assigned = cv.assign(df.select(*needed), roles=("train",))
+    where: Optional[Column] = None,
+) -> _MomentCube:
+    """One grouped aggregate over the raw rows that pass ``where``: per
+    (period[, snapshot]) Σw, Σwy, Σwxᵢ, Σwxᵢy, Σwxᵢxⱼ plus separate
+    any-NULL flags for x, y and the weight, collected to a driver-small
+    cube."""
+    src = df if where is None else df.where(where)
     if drop_na_in_y:
-        assigned = assigned.where(F.col(y_col).isNotNull())
-
+        src = src.where(F.col(y_col).isNotNull())
     w = (
         F.col(sample_weight_col).cast("double")
         if sample_weight_col is not None
@@ -106,32 +122,105 @@ def _fold_moments(
     y = F.col(y_col).cast("double")
     xs = [F.col(c).cast("double") for c in feats]
     # The pandas path converts Spark NULLs to NaN, which poisons numpy
-    # sums; Spark aggregates SKIP nulls, so reproduce the poisoning with
-    # an explicit any-null flag per fold. MeanRegressor never looks at X,
-    # so only y (and the weight) can poison it.
-    null_cond = (
-        y.isNull()
-        if "y" in null_rule and not drop_na_in_y
+    # sums; Spark aggregates SKIP nulls, so the cube carries explicit
+    # any-null flags and each fit reproduces the poisoning for the
+    # columns its estimator looks at.
+    x_null = F.lit(False)
+    for c in feats:
+        x_null = x_null | F.col(c).isNull()
+    w_null = (
+        F.col(sample_weight_col).isNull()
+        if sample_weight_col is not None
         else F.lit(False)
     )
-    if sample_weight_col is not None:
-        null_cond = null_cond | F.col(sample_weight_col).isNull()
-    if "x" in null_rule:
-        for c in feats:
-            null_cond = null_cond | F.col(c).isNull()
-    aggs = [
-        F.sum(w).alias("n"),
-        F.sum(w * y).alias("sy"),
-        F.max(F.when(null_cond, 1).otherwise(0)).alias("has_null"),
-    ]
+    cols = ["n", "sy"]
+    aggs = [F.sum(w).alias("n"), F.sum(w * y).alias("sy")]
     for i, xi in enumerate(xs):
+        cols += [f"sx_{i}", f"sxy_{i}"]
         aggs.append(F.sum(w * xi).alias(f"sx_{i}"))
         aggs.append(F.sum(w * xi * y).alias(f"sxy_{i}"))
         for j in range(i, len(xs)):
+            cols.append(f"sxx_{i}_{j}")
             aggs.append(F.sum(w * xi * xs[j]).alias(f"sxx_{i}_{j}"))
+    flags = ["__null_x", "__null_y", "__null_w"]
+    for name, cond in zip(flags, (x_null, y.isNull(), w_null)):
+        aggs.append(F.max(F.when(cond, 1.0).otherwise(0.0)).alias(name))
+    keys = [F.col(period_col).alias("__p")]
+    if snapshot_col is not None:
+        keys.append(F.col(snapshot_col).alias("__s"))
+    rows = src.groupBy(*keys).agg(*aggs).collect()
+    # an all-NULL sum comes back NULL; its flag poisons the fits that
+    # read it, so 0 is the right additive identity (a NaN sum stays NaN)
+    grid = np.array(
+        [[0.0 if r[c] is None else r[c] for c in cols + flags]
+         for r in rows],
+        dtype=float,
+    ).reshape(len(rows), len(cols) + len(flags))
+    return _MomentCube(
+        periods=[r["__p"] for r in rows],
+        snapshots=(
+            [r["__s"] for r in rows] if snapshot_col is not None else None
+        ),
+        cols=cols,
+        sums=grid[:, : len(cols)],
+        nulls=grid[:, len(cols):],
+    )
+
+
+def _masked_sum(member: np.ndarray, values: np.ndarray) -> np.ndarray:
+    """``member @ values`` for a 0/1 ``member`` matrix, except that a 0
+    leaves the row out instead of multiplying it by 0 (0·NaN and 0·Inf
+    are NaN): a NaN or ±Inf moment reaches only the folds whose train
+    set holds its row, with IEEE sum semantics there."""
+    finite = np.isfinite(values)
+    out = member @ np.where(finite, values, 0.0)
+    if finite.all():
+        return out
+    pos = member @ (values == np.inf).astype(float) > 0
+    neg = member @ (values == -np.inf).astype(float) > 0
+    nan = member @ np.isnan(values).astype(float) > 0
+    out[pos] = np.inf
+    out[neg] = -np.inf
+    out[nan | (pos & neg)] = np.nan
+    return out
+
+
+def _moment_rows(
+    df: DataFrame,
+    cv,
+    feats: List[str],
+    y_col: str,
+    sample_weight_col: Optional[str],
+    drop_na_in_y: bool,
+    null_rule: str,
+) -> dict:
+    """Per-fold moment rows for ``cv``'s train sets, from the frame's
+    memoised cube: ``{fold_id: {"n", "sy", "sx_i", ..., "has_null"}}``,
+    folds without train rows left out. The cube covers only the rows
+    inside the splitter's train scope (scan range, snapshot values),
+    which is part of the memo key."""
+    where, scope = cv._train_scope(df)
+    key = (
+        tuple(feats), y_col, sample_weight_col, bool(drop_na_in_y),
+        cv.period_col, cv.snapshot_col, scope,
+    )
+    with _CACHE_LOCK:
+        per_df = _MOMENT_CACHE.setdefault(df, {})
+        cube = per_df.get(key)
+        if cube is None:
+            cube = _fold_moments(
+                df, cv.period_col, cv.snapshot_col, feats, y_col,
+                sample_weight_col, drop_na_in_y, where,
+            )
+            per_df[key] = cube
+    member = cv.spec.train_matrix(cube.periods, cube.snapshots)
+    sums = _masked_sum(member, cube.sums)
+    # columns of cube.nulls: x, y, weight
+    poison = {"x": [0, 2], "y": [1, 2], "xy": [0, 1, 2]}[null_rule]
+    has_null = (member @ cube.nulls[:, poison]).sum(axis=1) > 0
     return {
-        r["fold_id"]: r
-        for r in assigned.groupBy("fold_id").agg(*aggs).collect()
+        int(fid): dict(zip(cube.cols, sums[fid]), has_null=has_null[fid])
+        for fid in np.flatnonzero(member.sum(axis=1))
     }
 
 
@@ -153,26 +242,10 @@ def suffstats_fit(
     feats = list(feature_cols)
     if len(feats) > _MAX_FEATURES:
         return None
-
-    rule = _null_rule(estimator)
-    ckey = (
-        tuple(feats),
-        y_col,
-        sample_weight_col,
-        bool(drop_na_in_y),
-        rule,
+    rows = _moment_rows(
+        df, cv, feats, y_col, sample_weight_col, drop_na_in_y,
+        _null_rule(estimator),
     )
-    with _CACHE_LOCK:
-        per_df = _MOMENT_CACHE.setdefault(df, weakref.WeakKeyDictionary())
-        per_cv = per_df.setdefault(cv, {})
-        rows = per_cv.get(ckey)
-        if rows is None:
-            rows = _fold_moments(
-                df, cv, feats, y_col, sample_weight_col,
-                drop_na_in_y, rule,
-            )
-            per_cv[ckey] = rows
-
     return _solve_from_moments(estimator, rows, feats, cv.n_splits)
 
 
@@ -255,6 +328,40 @@ def _solve_from_moments(
     return models
 
 
+def _literal_table(values: list, depth: int) -> Column:
+    """``depth`` levels of nested lists of doubles as ONE array literal:
+    a single JSON string parsed by ``from_json``, which the optimizer
+    folds into a literal — a constant number of Py4J calls whatever its
+    size, and NaN/±Infinity survive (JSON's non-numeric numbers)."""
+    schema = "array<" * depth + "double" + ">" * depth
+    return F.from_json(F.lit(json.dumps(values)), schema)
+
+
+def _linear_terms(m: Any) -> Optional[List[float]]:
+    """``[intercept, coef...]`` of a fitted closed-form predictor
+    (``[mean]`` for MeanRegressor), or ``None`` if unfitted or outside
+    the family."""
+    if type(m) is MeanRegressor:
+        return None if m.mean_ is None else [float(m.mean_)]
+    if type(m) in (LinearRegression, Ridge) and m.coef_ is not None:
+        return [float(m.intercept_)] + [
+            float(b) for b in np.asarray(m.coef_).reshape(-1)
+        ]
+    return None
+
+
+def _linear_pred(terms: Column, feature_cols: Sequence[str],
+                 mean_only: bool) -> Column:
+    """``terms[0] + Σ terms[i+1]·xᵢ`` — MeanRegressor ignores X entirely
+    (NaN features must not poison it), so feature terms are added only
+    for linear models."""
+    pred: Column = terms[0]
+    if not mean_only:
+        for i, c in enumerate(feature_cols):
+            pred = pred + terms[i + 1] * F.col(c).cast("double")
+    return pred
+
+
 def linear_predict_frame(
     assigned: DataFrame,
     fitted_estimators: List[Any],
@@ -263,56 +370,24 @@ def linear_predict_frame(
     out_fields: Sequence[str],
     output_col: str,
 ) -> Optional[DataFrame]:
-    """Apply closed-form models as a broadcast join against a tiny
-    (fold_id, intercept, coefs) frame + one arithmetic projection —
-    whole pass stays in codegen, no Python workers, no model broadcast.
-
-    Coefficients travel as DATA (a joined frame), not as literals: the
-    generated code is identical across fits, so warmed-up compiled
-    classes are reused no matter what the model learned. Returns ``None``
-    when any model is outside the closed-form family (caller falls back
-    to the broadcast-model pandas apply)."""
+    """Apply closed-form models as one arithmetic projection: each row
+    looks its fold's ``[intercept, coef...]`` up in a literal array
+    indexed by ``fold_id`` — the whole pass stays in codegen, with no
+    Python workers, no join and no broadcast job. Returns ``None`` when
+    any model is outside the closed-form family (caller falls back to
+    the broadcast-model pandas apply)."""
     if method != "predict":
         return None
-    if len(fitted_estimators) > _MAX_FOLDS_FOR_EXPR:
+    terms = [_linear_terms(m) for m in fitted_estimators]
+    if not terms or any(t is None for t in terms):
         return None
-    mean_only = all(type(m) is MeanRegressor for m in fitted_estimators)
-    for m in fitted_estimators:
-        if type(m) is MeanRegressor:
-            if m.mean_ is None:
-                return None
-        elif type(m) in (LinearRegression, Ridge):
-            if m.coef_ is None:
-                return None
-        else:
-            return None
-        if (type(m) is MeanRegressor) != mean_only:
-            return None  # mixed families: keep the generic path
-
-    spark = assigned.sparkSession
-    rows = []
-    for fid, m in enumerate(fitted_estimators):
-        if mean_only:
-            rows.append((fid, float(m.mean_), []))
-        else:
-            rows.append(
-                (
-                    fid,
-                    float(m.intercept_),
-                    [float(b) for b in np.asarray(m.coef_).reshape(-1)],
-                )
-            )
-    coefs = spark.createDataFrame(
-        rows, "fold_id int, __b0 double, __bs array<double>"
-    )
-    joined = assigned.join(F.broadcast(coefs), "fold_id")
-    pred: Column = F.col("__b0")
-    if not mean_only:
-        # MeanRegressor ignores X entirely (NaN features must not
-        # poison it), so feature terms are added only for linear models
-        for i, c in enumerate(feature_cols):
-            pred = pred + F.col("__bs")[i] * F.col(c).cast("double")
-    return joined.select(*out_fields, pred.alias(output_col))
+    families = {type(m) is MeanRegressor for m in fitted_estimators}
+    if len(families) > 1:
+        return None  # mixed families: keep the generic path
+    mean_only = families == {True}
+    row = _literal_table(terms, 2)[F.col("fold_id")]
+    pred = _linear_pred(row, feature_cols, mean_only)
+    return assigned.select(*out_fields, pred.alias(output_col))
 
 
 def scaler_transform_frame(
@@ -322,34 +397,80 @@ def scaler_transform_frame(
     out_fields: Sequence[str],
     output_col: str,
 ) -> Optional[DataFrame]:
-    """Per-fold StandardScaler transform as a broadcast join against a
-    tiny (fold_id, mean, scale) frame + one array projection — the OOF
-    feature pass of a scaler pipeline step stays entirely in codegen
-    (no Python workers, no pickled-model broadcast)."""
+    """Per-fold StandardScaler transform as one array projection: each
+    row looks its fold's ``[mean..., scale...]`` up in a literal array
+    indexed by ``fold_id`` — the OOF feature pass of a scaler pipeline
+    step stays entirely in codegen (no Python workers, no join)."""
     for m in fitted_estimators:
         if type(m) is not StandardScaler or m.mean_ is None:
             return None
-    spark = assigned.sparkSession
-    rows = [
-        (
-            fid,
-            [float(x) for x in np.asarray(m.mean_).reshape(-1)],
-            [float(x) for x in np.asarray(m.scale_).reshape(-1)],
-        )
-        for fid, m in enumerate(fitted_estimators)
-    ]
-    coefs = spark.createDataFrame(
-        rows, "fold_id int, __mu array<double>, __sc array<double>"
-    )
-    joined = assigned.join(F.broadcast(coefs), "fold_id")
+    d = len(feature_cols)
+    params = _literal_table([
+        [float(x) for x in np.asarray(m.mean_).reshape(-1)]
+        + [float(x) for x in np.asarray(m.scale_).reshape(-1)]
+        for m in fitted_estimators
+    ], 2)[F.col("fold_id")]
     arr = F.array(
         *[
-            (F.col(c).cast("double") - F.col("__mu")[i])
-            / F.col("__sc")[i]
+            (F.col(c).cast("double") - params[i]) / params[d + i]
             for i, c in enumerate(feature_cols)
         ]
     )
-    return joined.select(*out_fields, arr.alias(output_col))
+    return assigned.select(*out_fields, arr.alias(output_col))
+
+
+def _grid_score_frame(
+    assigned: DataFrame,
+    models_per_cand: List[List[Any]],
+    feats: List[str],
+    y_col: str,
+    metrics: "dict",
+) -> Optional[DataFrame]:
+    """Every candidate × fold × metric aggregate of ``assigned`` in one
+    grouped pass: each row is paired with every candidate by exploding
+    its fold's literal ``[candidate][intercept, coef...]`` array."""
+    from .metrics import metric_agg_expr
+
+    mean_like = type(models_per_cand[0][0]) is MeanRegressor
+    n_folds = len(models_per_cand[0])
+    by_fold = []
+    for fid in range(n_folds):
+        terms = [_linear_terms(models[fid]) for models in models_per_cand]
+        if any(t is None for t in terms):
+            return None
+        by_fold.append(terms)
+    nan = F.lit(float("nan"))
+    cand = assigned.select(
+        "role",
+        "fold_id",
+        # NULL→NaN so Spark aggregates reproduce numpy poisoning
+        F.coalesce(F.col(y_col).cast("double"), nan).alias("__y"),
+        *feats,
+        F.posexplode(_literal_table(by_fold, 3)[F.col("fold_id")]).alias(
+            "__cand", "__b"
+        ),
+    )
+    base = cand.select(
+        "__cand", "role", "fold_id", "__y",
+        F.coalesce(_linear_pred(F.col("__b"), feats, mean_like), nan)
+        .alias("__p"),
+    )
+    aggs = []
+    for mname, key in metrics.items():
+        if key != "r2":
+            aggs.append(
+                metric_agg_expr(
+                    key, F.col("__y"), F.col("__p"), nan_aware=True
+                ).alias(f"__m_{mname}")
+            )
+    if "r2" in metrics.values():
+        aggs += [
+            F.sum((F.col("__y") - F.col("__p")) ** 2).alias("__ss_res"),
+            F.sum(F.col("__y") ** 2).alias("__ss_y2"),
+            F.sum("__y").alias("__s_y"),
+            F.count(F.lit(1)).alias("__n"),
+        ]
+    return base.groupBy("__cand", "role", "fold_id").agg(*aggs)
 
 
 def sweep_scores(
@@ -363,15 +484,16 @@ def sweep_scores(
     sample_weight_col: Optional[str] = None,
     drop_na_in_y: bool = False,
 ):
-    """Score an ENTIRE candidate grid of closed-form estimators in two
-    Spark jobs, independent of grid size.
+    """Score an ENTIRE candidate grid of closed-form estimators with at
+    most two Spark aggregates, independent of grid size.
 
-    1. one cached moment aggregate (shared with ``suffstats_fit``) fits
-       every candidate with an O(d³) driver solve each;
-    2. one pass over the fact rows joined against the tiny broadcast
-       ``(candidate, fold, coefficients)`` frame computes every
-       candidate × fold × metric aggregate simultaneously — map-side
-       partial aggregation, a few doubles per group on the wire.
+    1. the frame's cached moment cube (shared with ``suffstats_fit``)
+       fits every candidate with an O(d³) driver solve each;
+    2. one pass over the fact rows, each paired with every candidate
+       through a literal ``(fold, candidate) → coefficients`` array,
+       computes every candidate × fold × metric aggregate
+       simultaneously — map-side partial aggregation, a few doubles per
+       group on the wire, no join and no broadcast job.
 
     A 1000-point grid therefore costs the same cluster work as a single
     candidate — versus 1000 fit + 1000 score jobs on the generic path
@@ -384,7 +506,7 @@ def sweep_scores(
     is the per-fold score list, or ``None`` if anything falls outside the
     closed-form/SQL-expressible envelope (caller uses the generic path).
     """
-    from .metrics import _SQL_METRICS, metric_agg_expr
+    from .metrics import _SQL_METRICS
 
     if not estimators or y_col is None:
         return None
@@ -399,56 +521,17 @@ def sweep_scores(
     for key in metrics.values():
         if key != "r2" and key not in _SQL_METRICS:
             return None
-
-    mean_like = type(est0) is MeanRegressor
     if type(est0) is StandardScaler:
         return None  # transformers have no predict metrics to sweep
-    rule = _null_rule(est0)
-    ckey = (
-        tuple(feats),
-        y_col,
-        sample_weight_col,
-        bool(drop_na_in_y),
-        rule,
-    )
-    with _CACHE_LOCK:
-        per_df = _MOMENT_CACHE.setdefault(df, weakref.WeakKeyDictionary())
-        per_cv = per_df.setdefault(cv, {})
-        rows = per_cv.get(ckey)
-        if rows is None:
-            rows = _fold_moments(
-                df, cv, feats, y_col, sample_weight_col,
-                drop_na_in_y, rule,
-            )
-            per_cv[ckey] = rows
 
+    rows = _moment_rows(
+        df, cv, feats, y_col, sample_weight_col, drop_na_in_y,
+        _null_rule(est0),
+    )
     models_per_cand = [
         _solve_from_moments(e, rows, feats, cv.n_splits)
         for e in estimators
     ]
-
-    crows = []
-    for ci, models in enumerate(models_per_cand):
-        for fid, m in enumerate(models):
-            if mean_like:
-                if m.mean_ is None:
-                    return None
-                crows.append((ci, fid, float(m.mean_), []))
-            else:
-                if m.coef_ is None:
-                    return None
-                crows.append(
-                    (
-                        ci,
-                        fid,
-                        float(m.intercept_),
-                        [float(b) for b in np.asarray(m.coef_).reshape(-1)],
-                    )
-                )
-    spark = df.sparkSession
-    coefs = spark.createDataFrame(
-        crows, "__cand int, fold_id int, __b0 double, __bs array<double>"
-    )
 
     needed = list(dict.fromkeys(feats + [y_col]))
     if cv.period_col not in needed:
@@ -456,40 +539,13 @@ def sweep_scores(
     if cv.snapshot_col and cv.snapshot_col not in needed:
         needed.append(cv.snapshot_col)
     assigned = cv.assign(df.select(*needed), roles=tuple(roles))
-
-    pred: Column = F.col("__b0")
-    if not mean_like:
-        for i, c in enumerate(feats):
-            pred = pred + F.col("__bs")[i] * F.col(c).cast("double")
-    nan = F.lit(float("nan"))
-    base = assigned.join(F.broadcast(coefs), "fold_id").select(
-        "__cand",
-        "role",
-        "fold_id",
-        # NULL→NaN so Spark aggregates reproduce numpy poisoning
-        F.coalesce(F.col(y_col).cast("double"), nan).alias("__y"),
-        F.coalesce(pred, nan).alias("__p"),
-    )
-    aggs = []
-    need_r2 = any(k == "r2" for k in metrics.values())
-    for mname, key in metrics.items():
-        if key != "r2":
-            aggs.append(
-                metric_agg_expr(
-                    key, F.col("__y"), F.col("__p"), nan_aware=True
-                ).alias(f"__m_{mname}")
-            )
-    if need_r2:
-        aggs += [
-            F.sum((F.col("__y") - F.col("__p")) ** 2).alias("__ss_res"),
-            F.sum(F.col("__y") ** 2).alias("__ss_y2"),
-            F.sum("__y").alias("__s_y"),
-            F.count(F.lit(1)).alias("__n"),
-        ]
-    out = base.groupBy("__cand", "role", "fold_id").agg(*aggs).collect()
+    grid = _grid_score_frame(assigned, models_per_cand, feats, y_col,
+                             metrics)
+    if grid is None:
+        return None
 
     scores: dict = {}
-    for r in out:
+    for r in grid.collect():
         for mname, key in metrics.items():
             if key == "r2":
                 denom = r["__ss_y2"] - r["__s_y"] ** 2 / r["__n"]

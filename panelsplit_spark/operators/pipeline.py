@@ -10,11 +10,14 @@ is Spark:
 * step input/output are DataFrames; "X" is a set of feature columns that
   each transforming step *replaces* (``<step>__f0..fk``), while passthrough
   columns (keys, period, y) ride along untouched;
-* a CV step's fit = one grouped-map job (all folds concurrently); its OOF
-  transform = broadcast models + ``mapInPandas`` (application.py ops);
+* a CV step's fit and OOF transform are the application.py ops: a
+  moment aggregate plus a literal-coefficient projection for the
+  closed-form family, a grouped-map job plus broadcast models +
+  ``mapInPandas`` otherwise;
 * intermediate OOF frames are ``.cache()``-ed — the next step consumes
   them repeatedly (its own fit + transform jobs), so re-computing the
-  whole upstream chain per job would be quadratic;
+  whole upstream chain per job would be quadratic — and released before
+  ``fit`` returns, once every step's models are on the driver;
 * there is no positional reassembly: fold predicates are period-based, so
   the next step's splitter applies directly to the (possibly reduced) OOF
   frame — the Spark-native replacement for the reference's argsort
@@ -31,7 +34,7 @@ from typing import Any, Dict, List, Optional, Sequence, Tuple
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..estimators import clone
+from ..estimators import StandardScaler, clone
 from .application import apply_model, cross_val_fit, cross_val_predict
 from .cross_validation import PanelSplit
 
@@ -313,32 +316,38 @@ class SequentialCVPipeline:
         features = list(self.feature_cols)
         n = len(self.steps)
         cached: List[DataFrame] = []
-        for i, (name, est) in enumerate(self.steps):
-            is_final = i == n - 1
-            cv = self.cv_steps[i]
-            if self.verbose:
-                print(f"[SequentialCVPipeline] fitting step {i}: {name}")
-            if _is_passthrough(est):
-                self.fitted_steps_[name] = None
-                continue
-            if cv is None:
-                model = self._fit_single(est, cur, features)
-                self.fitted_steps_[name] = ("single", model)
-                if not is_final:
-                    cur, features = self._transform_single(
-                        model, cur, features, name
+        try:
+            for i, (name, est) in enumerate(self.steps):
+                is_final = i == n - 1
+                cv = self.cv_steps[i]
+                if self.verbose:
+                    print(f"[SequentialCVPipeline] fitting step {i}: {name}")
+                if _is_passthrough(est):
+                    self.fitted_steps_[name] = None
+                    continue
+                if cv is None:
+                    model = self._fit_single(est, cur, features)
+                    self.fitted_steps_[name] = ("single", model)
+                    if not is_final:
+                        cur, features = self._transform_single(
+                            model, cur, features, name
+                        )
+                else:
+                    models = cross_val_fit(
+                        est, cur, features, self.y_col, cv
                     )
-            else:
-                models = cross_val_fit(
-                    est, cur, features, self.y_col, cv
-                )
-                self.fitted_steps_[name] = ("cv", models)
-                if not is_final:
-                    cur, features = self._transform_cv(
-                        models, cur, features, cv, name
-                    )
-                    cur = cur.cache()
-                    cached.append(cur)
+                    self.fitted_steps_[name] = ("cv", models)
+                    if not is_final:
+                        cur, features = self._transform_cv(
+                            models, cur, features, cv, name
+                        )
+                        cur = cur.cache()
+                        cached.append(cur)
+        finally:
+            # every step's models are on the driver by now; nothing
+            # reads the intermediate OOF frames again
+            for frame in cached:
+                frame.unpersist()
         self._fitted_features_ = features
         return self
 
@@ -402,6 +411,15 @@ class SequentialCVPipeline:
 
     def _probe_width(self, model, method: str, df: DataFrame,
                      features: Sequence[str]) -> int:
+        """Output width of ``model.method``: known without a Spark job
+        for a fitted closed-form StandardScaler (one column per
+        feature); other models are probed on one row."""
+        if (
+            type(model) is StandardScaler
+            and method == "transform"
+            and model.mean_ is not None
+        ):
+            return len(model.mean_)
         sample = df.select(*features).limit(1).toPandas()
         import numpy as np
 

@@ -27,6 +27,7 @@ from dataclasses import dataclass, field
 from typing import Any, List, Optional, Sequence, Tuple
 
 __all__ = [
+    "spark_order_key",
     "time_series_fold_bounds",
     "FoldSpec",
     "build_fold_spec",
@@ -164,14 +165,35 @@ def _ranges_from_index_spans(
     return [(unique_periods[lo], unique_periods[hi - 1]) for lo, hi in merged]
 
 
+_NAN = object()
+
+
+def spark_order_key(value: Any):
+    """Sort key reproducing Spark's ascending order on the driver: NaN
+    sorts after every other value (Spark treats it as the largest
+    double), everything else in its natural order."""
+    if isinstance(value, float) and value != value:
+        return (1,)
+    return (0, value)
+
+
+def _axis_key(value: Any):
+    """Hashable identity of a period value; every NaN maps to one key,
+    as Spark's equality treats NaN = NaN."""
+    if isinstance(value, float) and value != value:
+        return _NAN
+    return value
+
+
 @dataclass
 class FoldSpec:
     """Driver-small description of every fold: the engine's central IR.
 
-    Everything downstream (filters, fan-out joins, OOF reassembly) derives
-    from this object. It is O(n_splits × |periods|) in the worst case but
-    in practice tiny (#periods ≪ #rows), so it lives on the driver and is
-    broadcast when joined against data.
+    Everything downstream (filters, fold assignment, moment sums, OOF
+    reassembly) derives from this object. It is O(n_splits × |periods|)
+    in the worst case but in practice tiny (#periods ≪ #rows), so it
+    lives on the driver and reaches the executors as literal
+    expressions, never as a table.
     """
 
     unique_periods: List[Any]
@@ -183,6 +205,17 @@ class FoldSpec:
     def _role_ranges(self, fold_id: int, role: str) -> List[Tuple[Any, Any]]:
         f = self.folds[fold_id]
         return f.train_ranges if role == "train" else f.test_ranges
+
+    def union_ranges(self, role: str) -> List[Tuple[Any, Any]]:
+        """Inclusive period ranges covering every fold's ``role`` set,
+        merged along the unique-period axis."""
+        pos = self._axis_index()
+        spans = [
+            (pos[_axis_key(lo)], pos[_axis_key(hi)] + 1)
+            for f in self.folds
+            for lo, hi in self._role_ranges(f.fold_id, role)
+        ]
+        return _ranges_from_index_spans(self.unique_periods, spans)
 
     def predicate(self, period_col, fold_id: int, role: str,
                   snapshot_col=None):
@@ -214,7 +247,10 @@ class FoldSpec:
                                          snapshot_col)
         return pred
 
-    # ---- tabular form (fan-out strategy) ------------------------------
+    # ---- membership form (fold assignment, moment sums) ---------------
+
+    def _axis_index(self) -> dict:
+        return {_axis_key(p): i for i, p in enumerate(self.unique_periods)}
 
     def rows(self) -> List[Tuple[int, str, Any, Any]]:
         """Exploded ``(fold_id, role, period, snapshot_value)`` rows."""
@@ -226,48 +262,49 @@ class FoldSpec:
                 out.append((f.fold_id, "test", p, f.snapshot_value))
         return out
 
-    def spec_df(self, spark, period_type=None):
-        """The fold spec as a small Spark DataFrame
-        ``(fold_id, role, period, snapshot_value)`` — broadcast-join this
-        against data for single-pass fan-out (one shuffle-free broadcast
-        hash join, regardless of fold count)."""
-        from pyspark.sql import functions as F
-        from pyspark.sql import types as T
+    def memberships(
+        self, roles: Sequence[str] = ("train", "test")
+    ) -> List[Tuple[Any, List[Tuple[int, str]]]]:
+        """``(period, [(fold_id, role), ...])`` in axis order for every
+        period that belongs to at least one requested ``(fold, role)``."""
+        pos = self._axis_index()
+        members: List[List[Tuple[int, str]]] = [
+            [] for _ in self.unique_periods
+        ]
+        for f in self.folds:
+            for role in ("train", "test"):
+                if role not in roles:
+                    continue
+                ps = f.train_periods if role == "train" else f.test_periods
+                for p in ps:
+                    members[pos[_axis_key(p)]].append((f.fold_id, role))
+        return [(p, m) for p, m in zip(self.unique_periods, members) if m]
 
-        ptype = period_type or _infer_spark_type(self.unique_periods[0])
-        stype = (
-            _infer_spark_type(self.folds[0].snapshot_value)
-            if self.folds and self.folds[0].snapshot_value is not None
-            else ptype
-        )
-        schema = T.StructType(
-            [
-                T.StructField("fold_id", T.IntegerType(), False),
-                T.StructField("role", T.StringType(), False),
-                T.StructField("period", ptype, False),
-                T.StructField("snapshot_value", stype, True),
-            ]
-        )
-        df = spark.createDataFrame(self.rows(), schema=schema)
-        return F.broadcast(df)
+    def train_matrix(
+        self, periods: Sequence[Any], snapshots: Optional[Sequence[Any]] = None
+    ):
+        """Fold × row 0/1 matrix of train membership for rows keyed by
+        ``periods`` (and ``snapshots`` when the splitter has a snapshot
+        column). A NULL period, or one absent from the spec, belongs to
+        no fold; with snapshots a row counts for a fold only at that
+        fold's snapshot value, and a NULL snapshot matches nothing."""
+        import numpy as np
 
-
-def _infer_spark_type(value: Any):
-    import datetime
-
-    from pyspark.sql import types as T
-
-    if isinstance(value, bool):
-        return T.BooleanType()
-    if isinstance(value, int):
-        return T.LongType()
-    if isinstance(value, float):
-        return T.DoubleType()
-    if isinstance(value, datetime.datetime):
-        return T.TimestampType()
-    if isinstance(value, datetime.date):
-        return T.DateType()
-    return T.StringType()
+        pos = self._axis_index()
+        absent = len(self.unique_periods)
+        by_axis = np.zeros((len(self.folds), absent + 1))
+        for f in self.folds:
+            idx = [pos[_axis_key(p)] for p in f.train_periods]
+            by_axis[f.fold_id, idx] = 1.0
+        m = by_axis[:, [pos.get(_axis_key(p), absent) for p in periods]]
+        if snapshots is not None:
+            keys = [_axis_key(s) for s in snapshots]
+            for f in self.folds:
+                want = _axis_key(f.snapshot_value)
+                m[f.fold_id] *= [
+                    k is not None and k == want for k in keys
+                ]
+        return m
 
 
 def build_fold_spec(
@@ -286,9 +323,7 @@ def build_fold_spec(
     snapshots are in play); it drives the reference's vintage-selection
     fallback rule (cross_validation.py:172-193).
     """
-    up = list(unique_periods)
-    if sorted(up) != up:
-        up = sorted(up)
+    up = sorted(unique_periods, key=spark_order_key)
     bounds = time_series_fold_bounds(
         len(up), n_splits=n_splits, gap=gap, test_size=test_size,
         max_train_size=max_train_size,

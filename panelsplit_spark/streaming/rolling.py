@@ -3,14 +3,14 @@ scoring over unbounded event streams.
 
 The reference engine is batch-only (SURVEY §2.8: streaming N/A); these
 operators are the engine's forward extension: the *same* FoldSpec
-predicates and broadcast-model scoring used in batch run unchanged on
-streams, because both are expressed as stream-static joins / narrow
-projections — exactly what Structured Streaming supports incrementally.
+memberships and broadcast-model scoring used in batch run unchanged on
+streams, because both are expressed as narrow projections — exactly
+what Structured Streaming supports incrementally.
 
 Scale design: watermarks bound state; windowed aggregations use
-micro-batch partial aggregation; fold assignment is a broadcast
-stream-static join (no stateful shuffle); scoring is a stateless
-``mapInPandas`` — all safe at production stream rates.
+micro-batch partial aggregation; fold assignment is a stateless literal
+projection + explode (no join, no stateful shuffle); scoring is a
+stateless ``mapInPandas`` — all safe at production stream rates.
 """
 
 from __future__ import annotations
@@ -91,9 +91,10 @@ def windowed_panel_features(
 def stream_fold_assign(
     stream_df: DataFrame, cv: PanelSplit, roles=("test",)
 ) -> DataFrame:
-    """Assign streaming rows to folds: the batch fan-out's broadcast
-    stream-static join, unchanged. Incoming events join against the tiny
-    fold-spec table; no streaming state is created."""
+    """Assign streaming rows to folds: the batch fan-out, unchanged.
+    Each incoming event's fold memberships come from a literal
+    expression over its period and are exploded in place — a narrow,
+    stateless step; no join and no streaming state."""
     return cv.assign(stream_df, roles=tuple(roles))
 
 
@@ -106,7 +107,7 @@ def stream_score(
     output_col: str = "prediction",
 ) -> DataFrame:
     """Score a stream with per-fold fitted models: fold assignment
-    (stream-static broadcast join) + stateless Arrow-batched apply.
+    (literal membership explode) + stateless Arrow-batched apply.
 
     This is online inference for the batch-trained panel-CV models — e.g.
     score each arriving event with the model whose test window covers its

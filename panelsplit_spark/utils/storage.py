@@ -36,17 +36,18 @@ def release_all_pinned(spark, blocking: bool = False) -> int:
     blocks). Returns how many were released. Call only when all
     outstanding query results have been fully consumed.
 
-    Also drops the suffstats moment memo (linear_fastpath._MOMENT_CACHE):
-    that memo exists so ONE query invocation (a hyper-parameter sweep)
-    computes its fold moments once, but it is keyed on session-lived
-    (df, cv) objects, so left alone it would also serve a LATER query —
-    or a bench median re-run — collected aggregate rows it never
-    computed. This function is the between-queries terminal, so clearing
+    Also drops the suffstats moment memo (linear_fastpath._MOMENT_CACHE,
+    under its lock): that memo exists so ONE query invocation (a
+    hyper-parameter sweep) computes its per-period moment cube once, but
+    it is keyed on session-lived frames, so left alone it would also
+    serve a LATER query — or a bench median re-run — collected
+    aggregate rows it never computed. This function is the between-queries terminal, so clearing
     here scopes the memo to a single invocation: within-query reuse
     keeps working, cross-invocation reuse cannot."""
-    from ..operators.linear_fastpath import _MOMENT_CACHE
+    from ..operators.linear_fastpath import _CACHE_LOCK, _MOMENT_CACHE
 
-    _MOMENT_CACHE.clear()
+    with _CACHE_LOCK:
+        _MOMENT_CACHE.clear()
     jmap = spark.sparkContext._jsc.getPersistentRDDs()
     n = 0
     for rid in list(jmap.keySet().toArray()):

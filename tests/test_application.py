@@ -432,3 +432,277 @@ def test_oof_target_encode_matches_hand_computation(spark):
                 # category unseen in THIS fold's train window must
                 # collapse to the fold's global prior
                 assert got[(rid_, f)] == pytest.approx(gm, abs=1e-9)
+
+
+def test_one_moment_cube_serves_splitters_and_null_rules(spark):
+    """OLS on one splitter, a scaler on another splitter of the same
+    frame, and a ridge on the first again all resolve from ONE
+    per-period aggregate — and every fit equals a cold fit on a fresh
+    frame (no memo)."""
+    import numpy as np
+
+    from panelsplit_spark.estimators import Ridge
+    from panelsplit_spark.operators import linear_fastpath as lf
+
+    rows = [
+        (float(i % 5), float(i % 3), 2000 + i % 8,
+         None if i == 6 else 1.0 + 2.0 * (i % 5) - (i % 3))
+        for i in range(160)
+    ]
+    schema = "x1 double, x2 double, period int, y double"
+    df = spark.createDataFrame(rows, schema)
+    ps = PanelSplit(df, "period", n_splits=3)
+    ps_scale = PanelSplit(df, "period", n_splits=2,
+                          include_first_train_in_test=True)
+    feats = ["x1", "x2"]
+
+    calls = []
+    orig = lf._fold_moments
+
+    def counting(*a, **k):
+        calls.append(1)
+        return orig(*a, **k)
+
+    lf._fold_moments = counting
+    try:
+        ols = lf.suffstats_fit(LinearRegression(), df, feats, "y", ps)
+        scl = lf.suffstats_fit(StandardScaler(), df, feats, "y", ps_scale)
+        rdg = lf.suffstats_fit(Ridge(alpha=3.0), df, feats, "y", ps)
+    finally:
+        lf._fold_moments = orig
+    assert len(calls) == 1
+
+    def cold(est, cv):
+        fresh = spark.createDataFrame(rows, schema)
+        return lf.suffstats_fit(est, fresh, feats, "y", cv)
+
+    for got, want in (
+        (ols, cold(LinearRegression(), ps)),
+        (rdg, cold(Ridge(alpha=3.0), ps)),
+    ):
+        for a, b in zip(got, want):
+            np.testing.assert_allclose(a.coef_, b.coef_, equal_nan=True)
+            assert a.intercept_ == pytest.approx(b.intercept_, nan_ok=True)
+    for a, b in zip(scl, cold(StandardScaler(), ps_scale)):
+        np.testing.assert_allclose(a.mean_, b.mean_)
+        np.testing.assert_allclose(a.scale_, b.scale_)
+    # the NULL y (period 2006, only in the last train set) poisons the
+    # linear fits that see it, never the scaler
+    assert np.isnan(ols[-1].coef_).all() and not np.isnan(ols[0].coef_).any()
+    assert not any(np.isnan(m.mean_).any() for m in scl)
+
+
+def _panel_rows(nan_col=None):
+    """200 rows over periods 2000..2005; ``nan_col`` ("x1" or "y") gets
+    one NaN (not NULL) in period 2004, which with ``n_splits=3`` only
+    the last fold trains on."""
+    rows = []
+    for i in range(200):
+        x1, x2, p = float(i % 7 + 1), float(i % 5), 2000 + i % 6
+        y = 3.0 + 1.5 * x1 - 0.5 * x2 + 0.01 * (i % 11)
+        if i == 4 and nan_col == "x1":
+            x1 = float("nan")
+        if i == 4 and nan_col == "y":
+            y = float("nan")
+        rows.append((x1, x2, p, y))
+    return rows
+
+
+@pytest.mark.parametrize("nan_col", ["y", "x1"])
+def test_nan_moment_poisons_only_folds_that_train_on_it(spark, nan_col):
+    """A NaN value (not NULL) in one period's y or x reaches only the
+    folds whose train set holds that period: earlier folds stay finite
+    and equal the grouped-pandas fit, and the last fold is NaN on both
+    paths."""
+    import numpy as np
+
+    df = spark.createDataFrame(
+        _panel_rows(nan_col), "x1 double, x2 double, period int, y double"
+    )
+    ps = PanelSplit(df, "period", n_splits=3)
+    assert [2004 in f.train_periods for f in ps.spec.folds] == [
+        False, False, True
+    ]
+    if nan_col == "y":
+        fast = cross_val_fit(_FastLinearRegression(), df, ["x1", "x2"],
+                             "y", ps)
+        slow = cross_val_fit(SlowLinearRegression(), df, ["x1", "x2"],
+                             "y", ps)
+        got = [np.r_[m.intercept_, m.coef_] for m in fast]
+        want = [np.r_[m.intercept_, m.coef_] for m in slow]
+    else:
+        fast = cross_val_fit(_Scaler(), df, ["x1", "x2"], "y", ps)
+        slow = cross_val_fit(SlowScaler(), df, ["x1", "x2"], "y", ps)
+        got = [np.r_[m.mean_, m.scale_] for m in fast]
+        want = [np.r_[m.mean_, m.scale_] for m in slow]
+    for a, b in zip(got[:2], want[:2]):
+        assert np.isfinite(a).all()
+        np.testing.assert_allclose(a, b, atol=1e-8)
+    assert np.isnan(got[2]).any() and np.isnan(want[2]).any()
+    np.testing.assert_allclose(got[2], want[2], atol=1e-8, equal_nan=True)
+
+
+def test_masked_fold_sum_keeps_ieee_semantics_per_fold():
+    """Fold sums over a cube with NaN / ±Inf entries: a fold sees only
+    the entries of its own member rows, summed as numpy would."""
+    import numpy as np
+
+    from panelsplit_spark.operators.linear_fastpath import _masked_sum
+
+    inf, nan = float("inf"), float("nan")
+    cube = np.array([
+        [1.0, 2.0, inf, 1.0],
+        [2.0, nan, -inf, 1.0],
+        [3.0, 4.0, 5.0, inf],
+    ])
+    member = np.array([
+        [1.0, 0.0, 0.0],
+        [0.0, 0.0, 1.0],
+        [1.0, 1.0, 0.0],
+        [1.0, 0.0, 1.0],
+        [0.0, 0.0, 0.0],
+    ])
+    with np.errstate(invalid="ignore"):  # inf + -inf
+        want = np.array([cube[m > 0].sum(axis=0) for m in member])
+    np.testing.assert_array_equal(_masked_sum(member, cube), want)
+
+
+def _capture_cubes(lf):
+    cubes = []
+    orig = lf._fold_moments
+
+    def capture(*a, **k):
+        cubes.append(orig(*a, **k))
+        return cubes[-1]
+
+    return cubes, orig, capture
+
+
+def test_moment_cube_aggregates_only_fold_snapshots(spark):
+    """With a snapshot column the cube keeps only the vintages some fold
+    reads, not every (period, snapshot) pair, and the fits still equal
+    the grouped-pandas path."""
+    import numpy as np
+
+    from panelsplit_spark.operators import linear_fastpath as lf
+
+    rows = [
+        (float(i % 7), p, s, 1.0 + 2.0 * (i % 7) + 0.1 * s + 0.01 * i)
+        for p in range(1, 7) for s in range(4, 8) for i in range(8)
+    ]
+    df = spark.createDataFrame(
+        rows, "x1 double, period int, snap int, y double"
+    )
+    ps = PanelSplit(df, "period", snapshot_col="snap", n_splits=2)
+    assert [f.snapshot_value for f in ps.spec.folds] == [5, 6]
+    cubes, orig, capture = _capture_cubes(lf)
+    lf._fold_moments = capture
+    try:
+        fast = cross_val_fit(_FastLinearRegression(), df, ["x1"], "y", ps)
+    finally:
+        lf._fold_moments = orig
+    assert len(cubes) == 1 and set(cubes[0].snapshots) == {5, 6}
+    slow = cross_val_fit(SlowLinearRegression(), df, ["x1"], "y", ps)
+    for a, b in zip(fast, slow):
+        np.testing.assert_allclose(
+            np.r_[a.intercept_, a.coef_], np.r_[b.intercept_, b.coef_],
+            atol=1e-8,
+        )
+
+
+def test_moment_cube_applies_splitter_scan_range(spark):
+    """A splitter with a raw-column scan mapping aggregates only the
+    raw range of its train periods (and memoises that cube apart from
+    the unscoped one); the fits equal the unscoped splitter's."""
+    import numpy as np
+
+    from panelsplit_spark.operators import linear_fastpath as lf
+
+    df = spark.range(400).select(
+        (F.col("id") % 100).alias("t"),
+        (F.col("id") % 7).cast("double").alias("x1"),
+        (F.col("id") % 5 + 2 * (F.col("id") % 7)).cast("double").alias("y"),
+    ).withColumn("period", (F.col("t") / 10).cast("int"))
+    plain = PanelSplit(df, "period", n_splits=2, max_train_size=3)
+    scoped = PanelSplit(
+        df, "period", n_splits=2, max_train_size=3, scan_col="t",
+        period_bounds=lambda p: (p * 10, p * 10 + 10),
+    )
+    cubes, orig, capture = _capture_cubes(lf)
+    lf._fold_moments = capture
+    try:
+        got = cross_val_fit(_FastLinearRegression(), df, ["x1"], "y", scoped)
+        want = cross_val_fit(_FastLinearRegression(), df, ["x1"], "y", plain)
+    finally:
+        lf._fold_moments = orig
+    assert len(cubes) == 2
+    assert sorted(cubes[0].periods) == [5, 6, 7, 8]
+    assert sorted(cubes[1].periods) == list(range(10))
+    for a, b in zip(got, want):
+        np.testing.assert_allclose(
+            np.r_[a.intercept_, a.coef_], np.r_[b.intercept_, b.coef_]
+        )
+
+
+def _assert_literal_plan(df):
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastExchange" not in plan, plan
+    assert "LocalTableScan" not in plan, plan
+
+
+def test_closed_form_apply_and_sweep_plans_have_no_broadcast(spark):
+    """The closed-form OOF projections and the grid-scoring pass look
+    coefficients up in literal arrays: no broadcast of a driver-built
+    table anywhere in their plans."""
+    from panelsplit_spark.estimators import Ridge
+    from panelsplit_spark.operators import linear_fastpath as lf
+
+    df = spark.range(300).select(
+        (F.col("id") % 12).alias("period"),
+        (F.col("id") % 7).cast("double").alias("x"),
+        (F.col("id") % 5 + 2 * (F.col("id") % 7)).cast("double").alias("y"),
+    )
+    ps = PanelSplit(df, "period", n_splits=3)
+    assigned = ps.assign(df, roles=("test",))
+    _assert_literal_plan(assigned)
+    models = cross_val_fit(LinearRegression(), df, ["x"], "y", ps)
+    pred = lf.linear_predict_frame(
+        assigned, models, ["x"], "predict", ["y", "fold_id"], "p"
+    )
+    _assert_literal_plan(pred)
+    scalers = cross_val_fit(StandardScaler(), df, ["x"], "y", ps)
+    scaled = lf.scaler_transform_frame(
+        assigned, scalers, ["x"], ["fold_id"], "z"
+    )
+    _assert_literal_plan(scaled)
+
+    frames = []
+    orig = lf._grid_score_frame
+
+    def capture(*a, **k):
+        frames.append(orig(*a, **k))
+        return frames[-1]
+
+    lf._grid_score_frame = capture
+    try:
+        res = lf.sweep_scores(
+            [Ridge(alpha=0.1), Ridge(alpha=10.0)], df, ["x"], "y", ps,
+            {"mse": "mse"},
+        )
+    finally:
+        lf._grid_score_frame = orig
+    assert res is not None and len(frames) == 1
+    _assert_literal_plan(frames[0])
+    # the grid pass scores each candidate exactly like its own OOF pass
+    _, folded = res
+    for ci, alpha in enumerate((0.1, 10.0)):
+        preds, _ = cross_val_fit_predict(
+            Ridge(alpha=alpha), df, ["x"], "y", ps, keep_cols=["y"]
+        )
+        by_fold = {}
+        for r in preds.collect():
+            by_fold.setdefault(r["fold_id"], []).append(
+                (r["y"] - r["prediction"]) ** 2
+            )
+        want = [sum(v) / len(v) for _, v in sorted(by_fold.items())]
+        assert folded[(ci, "test", "mse")] == pytest.approx(want)

@@ -231,3 +231,160 @@ def test_cv_cache_is_per_session_object(spark):
     assert all(k is not None for k in _CV_CACHE.keys())
     del s3
     _CV_CACHE.clear()
+
+
+# ----------------------------------------------------------------------
+# Literal fan-out: ``assign`` must give exactly the rows of a join against
+# the exploded fold spec, with no join and no broadcast in its plan.
+# ----------------------------------------------------------------------
+
+
+def _join_assign(spark, ps, df, roles=("train", "test")):
+    """Reference fan-out: an inner equi-join of ``df`` against the
+    exploded ``(fold_id, role, period, snapshot_value)`` spec rows."""
+    from pyspark.sql import types as T
+
+    ptype = df.schema[ps.period_col].dataType
+    stype = (
+        df.schema[ps.snapshot_col].dataType if ps.snapshot_col else ptype
+    )
+    spec = spark.createDataFrame(
+        [r for r in ps.spec.rows() if r[1] in roles],
+        T.StructType([
+            T.StructField("fold_id", T.IntegerType()),
+            T.StructField("role", T.StringType()),
+            T.StructField("__fold_period", ptype),
+            T.StructField("snapshot_value", stype),
+        ]),
+    )
+    cond = df[ps.period_col] == spec["__fold_period"]
+    if ps.snapshot_col:
+        cond = cond & (df[ps.snapshot_col] == spec["snapshot_value"])
+    return df.join(spec, cond, "inner").drop(
+        "__fold_period", "snapshot_value"
+    )
+
+
+def _bag(df):
+    return sorted(
+        tuple((k, str(v)) for k, v in sorted(r.asDict().items()))
+        for r in df.collect()
+    )
+
+
+def _assert_same_as_join(spark, ps, df, roles=("train", "test")):
+    got = ps.assign(df, roles=roles)
+    assert got.columns == df.columns + ["fold_id", "role"]
+    want = _join_assign(spark, ps, df, roles)
+    assert _bag(got) == _bag(want)
+    return got
+
+
+def _panel_with_nulls(spark):
+    rows = [(i, p) for i, p in enumerate([1, 1, 2, 3, 3, 4, 5, 6, 6, 7])]
+    rows += [(100, None), (101, None)]
+    return spark.createDataFrame(rows, "rid int, period int")
+
+
+@pytest.mark.parametrize("kwargs", [
+    {"n_splits": 3},
+    {"n_splits": 2, "gap": 1, "test_size": 2},
+    {"n_splits": 3, "include_train_in_test": True},
+    {"n_splits": 3, "include_first_train_in_test": True,
+     "max_train_size": 2},
+])
+def test_assign_matches_spec_join(spark, kwargs):
+    df = _panel_with_nulls(spark)
+    ps = PanelSplit(df, "period", **kwargs)
+    for roles in (("train", "test"), ("train",), ("test",)):
+        _assert_same_as_join(spark, ps, df, roles)
+
+
+def test_assign_matches_spec_join_snapshots(spark):
+    rows = [
+        (i, p, s)
+        for i, (p, s) in enumerate(
+            [(p, s) for p in range(1, 6) for s in (2, 3, 4, 5, None)]
+        )
+    ]
+    df = spark.createDataFrame(rows, "rid int, period int, snap int")
+    ps = PanelSplit(df, "period", snapshot_col="snap", n_splits=2)
+    got = _assert_same_as_join(spark, ps, df)
+    assert got.count() > 0
+
+
+def test_assign_from_folds_noncontiguous_and_absent_period(spark):
+    # period 3 lies inside fold 0's train range [2, 5] but belongs to
+    # no fold: exact membership must drop it (a BETWEEN would admit it)
+    df = spark.createDataFrame(
+        [(i, p) for i, p in enumerate([1, 2, 3, 4, 5, 6, None, 3])],
+        "rid int, period int",
+    )
+    ps = PanelSplit.from_folds(
+        [([2, 5], [6]), ([1, 4], [2, 5]), ([6], [1])], "period"
+    )
+    got = _assert_same_as_join(spark, ps, df)
+    assert 3 not in {r["period"] for r in got.collect()}
+    ps2 = PanelSplit(unique_periods=[1, 2, 4, 5, 6], period_col="period",
+                     n_splits=2)
+    got2 = _assert_same_as_join(spark, ps2, df)
+    assert 3 not in {r["period"] for r in got2.collect()}
+
+
+def test_assign_string_and_date_periods(spark):
+    months = ["2024-01", "2024-02", "2024-03", "2024-04", "it's"]
+    df = spark.createDataFrame(
+        [(i, m) for i, m in enumerate(months * 2)], "rid int, period string"
+    )
+    _assert_same_as_join(spark, PanelSplit(df, "period", n_splits=3), df)
+    dates = [datetime.date(2022, 1, d) for d in range(1, 7)]
+    ddf = spark.createDataFrame(
+        [(i, d) for i, d in enumerate(dates)], "rid int, period date"
+    )
+    _assert_same_as_join(spark, PanelSplit(ddf, "period", n_splits=2), ddf)
+
+
+def test_assign_plan_has_no_broadcast(spark):
+    df = spark.range(400).select(
+        "id", (F.col("id") % 20).alias("period")
+    )
+    ps = PanelSplit(df, "period", n_splits=5)
+    plan = ps.assign(df)._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastExchange" not in plan
+    assert "LocalTableScan" not in plan
+    assert "Join" not in plan
+
+
+def test_distinct_periods_sorted_on_driver(spark):
+    """Driver-side sort reproduces Spark's ascending order, NaN last,
+    for string, date and float periods."""
+    import math
+
+    from panelsplit_spark.operators.cross_validation import distinct_periods
+
+    s = spark.createDataFrame(
+        [("b",), ("a",), ("c",), (None,), ("a",)], "p string"
+    )
+    assert distinct_periods(s, "p") == ["a", "b", "c"]
+    d = spark.createDataFrame(
+        [(datetime.date(2022, 1, k),) for k in (3, 1, 2, 1)], "p date"
+    )
+    assert distinct_periods(d, "p") == [
+        datetime.date(2022, 1, k) for k in (1, 2, 3)
+    ]
+    f = spark.createDataFrame(
+        [(2.5,), (float("nan"),), (-1.0,), (None,), (0.5,)], "p double"
+    )
+    got = distinct_periods(f, "p")
+    want = [r["p"] for r in f.where(F.col("p").isNotNull())
+            .distinct().orderBy("p").collect()]
+    assert got[:3] == want[:3] == [-1.0, 0.5, 2.5]
+    assert math.isnan(got[3]) and math.isnan(want[3])
+    # a splitter on NaN-bearing float periods assigns like the join
+    rows = [(i, p) for i, p in enumerate(
+        [0.5, -1.0, 2.5, float("nan"), 0.5, float("nan"), None]
+    )]
+    fdf = spark.createDataFrame(rows, "rid int, period double")
+    ps = PanelSplit(fdf, "period", n_splits=2)
+    assert math.isnan(ps.spec.unique_periods[-1])
+    _assert_same_as_join(spark, ps, fdf)

@@ -493,3 +493,40 @@ def test_y_signature_cache_is_weak():
     assert not any(
         c.__name__ == "Ephemeral" for c in _METHOD_SIGNATURE_CACHE
     )
+
+
+def test_fit_releases_cached_oof_frames(spark, panel):
+    """Intermediate OOF frames are cached while the chain fits and
+    released before ``fit`` returns: the persistent-RDD count comes
+    back to its starting value."""
+    from panelsplit_spark.utils.storage import pinned_rdd_ids
+
+    ps1 = PanelSplit(panel, "period", n_splits=3,
+                     include_first_train_in_test=True)
+    ps2 = PanelSplit(panel, "period", n_splits=3)
+    before = len(pinned_rdd_ids(spark))
+    pipe = SequentialCVPipeline(
+        [("scale", StandardScaler()), ("scale2", StandardScaler()),
+         ("lr", LinearRegression())],
+        [ps1, ps1, ps2], ["x1", "x2"], y_col="y",
+    )
+    pipe.fit(panel)
+    assert len(pinned_rdd_ids(spark)) == before
+    assert pipe.predict_df(panel).count() > 0
+
+
+def test_scaler_width_known_without_probe(spark, panel):
+    """A fitted closed-form scaler knows its output width, so no probe
+    job runs (the frame is never touched); opaque models are probed."""
+    pipe = SequentialCVPipeline(
+        [("scale", StandardScaler())], [None], ["x1", "x2"], y_col="y"
+    )
+    scaler = StandardScaler().fit(
+        panel.select("x1", "x2").toPandas()
+    )
+    assert pipe._probe_width(scaler, "transform", None, ["x1", "x2"]) == 2
+    lr = LinearRegression().fit(
+        panel.select("x1", "x2").toPandas(),
+        panel.select("y").toPandas()["y"],
+    )
+    assert pipe._probe_width(lr, "predict", panel, ["x1", "x2"]) == 1
