@@ -23,6 +23,7 @@ Two physical strategies are exposed (SURVEY §4.2):
 from __future__ import annotations
 
 import datetime
+import json
 from typing import Any, Callable, List, Optional, Sequence, Tuple
 
 from pyspark.sql import DataFrame, functions as F, types as T
@@ -33,6 +34,7 @@ from ..plans.fold_spec import (
     purged_kfold_bounds,
     spark_order_key,
 )
+from .timeseries import dec38, exact_line
 
 __all__ = [
     "PanelSplit",
@@ -44,6 +46,7 @@ __all__ = [
     "purged_panel_assign",
     "cpcv_panel_assign",
     "cpcv_backtest_paths",
+    "fold_line_fit",
     "nested_ridge_cv",
 ]
 
@@ -715,23 +718,23 @@ def cpcv_backtest_paths(
 
     Everything stays exact: per-split train moments are one filtered
     grouped aggregate over the fan-out assignment (integer-quantized
-    ``x_col``/``y_col``), slopes are single divisions of decimal-exact
-    integers, per-row squared residuals quantize to MILLI-units after
-    the engine-identical double prediction, and each path's MSE is ONE
-    division of the exact residual sum. Path membership (split, group)
-    → path is pure combination arithmetic, broadcast as a literal map.
+    ``x_col``/``y_col``), slopes come from
+    :func:`~.timeseries.exact_line`, per-row squared residuals quantize
+    to MILLI-units after the engine-identical double prediction, and
+    each path's MSE is ONE division of the exact residual sum. Path
+    membership is pure combination arithmetic applied as two literal
+    lookups — a CASE over the group start periods gives a row's group,
+    a JSON ``path[split][group]`` table its path — so no driver-built
+    table is joined in.
 
     100 TB shape: the fact table passes twice (train-moment aggregate;
     test-residual aggregate), both keyed by split — C(G,k) multiplies
-    only the driver-small spec frames, never the data passes.
+    only the per-split fit frame, never the data passes.
 
     Output: one row per path — ``path_id n_rows sse_milli mse``.
     """
     from itertools import combinations
 
-    from ..plans.fold_spec import cpcv_splits
-
-    d = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     assign = cpcv_panel_assign(
         df, period_col, n_groups, n_test_groups, purge, embargo
     )
@@ -744,61 +747,54 @@ def cpcv_backtest_paths(
             F.count(F.lit(1)).alias("n"),
             F.sum(x).alias("sx"),
             F.sum(y).alias("sy"),
-            F.sum(d(x) * x).alias("sxx"),
-            F.sum(d(x) * y).alias("sxy"),
+            F.sum(dec38(x) * x).alias("sxx"),
+            F.sum(dec38(x) * y).alias("sxy"),
         )
     )
-    num = d(F.col("n")) * F.col("sxy") - d(F.col("sx")) * F.col("sy")
-    den = d(F.col("n")) * F.col("sxx") - d(F.col("sx")) * F.col("sx")
-    b1 = num.cast("double") / den.cast("double")
-    b0 = (
-        F.col("sy").cast("double") - b1 * F.col("sx").cast("double")
-    ) / F.col("n").cast("double")
+    b1, b0 = exact_line("n", "sx", "sy", "sxx", "sxy")
     fit = fit.select("split_id", b1.alias("b1"), b0.alias("b0"))
 
-    # (split, group) → path: for each group, the p-th split testing it
-    # (lexicographic combo order) belongs to path p — combination
-    # arithmetic only, independent of the data
-    by_group = {}
-    for sid, combo in enumerate(
-        combinations(range(n_groups), n_test_groups)
-    ):
+    # path[split][group]: the p-th split (lexicographic combo order)
+    # testing a group belongs to path p; NULL where the split does not
+    # test the group
+    paths: List[List[Optional[int]]] = []
+    tested = [0] * n_groups
+    for combo in combinations(range(n_groups), n_test_groups):
+        row: List[Optional[int]] = [None] * n_groups
         for g in combo:
-            by_group.setdefault(g, []).append(sid)
-    path_rows = [
-        (sid, g, p)
-        for g, sids in by_group.items()
-        for p, sid in enumerate(sids)
-    ]
-    spark = df.sparkSession
-    path_map = spark.createDataFrame(
-        path_rows, ["split_id", "__g", "path_id"]
+            row[g] = tested[g]
+            tested[g] += 1
+        paths.append(row)
+    path_of = F.from_json(F.lit(json.dumps(paths)), "array<array<bigint>>")
+
+    # group of a period, replayed from the SAME split geometry: the
+    # groups are contiguous period-rank blocks, so comparisons against
+    # the first period of groups 1..G-1 decide it
+    periods = distinct_periods(df, period_col)
+    ptype = df.schema[period_col].dataType
+    q, r = divmod(len(periods), n_groups)
+    group = F.expr(
+        "CASE "
+        + " ".join(
+            f"WHEN {_sql_ident(period_col)} < "
+            f"{_sql_literal(periods[g * q + min(g, r)], ptype)} "
+            f"THEN {g - 1}"
+            for g in range(1, n_groups)
+        )
+        + f" ELSE {n_groups - 1} END"
     )
 
-    # group of each period rank, replayed from the SAME split geometry
-    periods = distinct_periods(df, period_col)
-    n = len(periods)
-    q, r = divmod(n, n_groups)
-    grp_rows = []
-    for g in range(n_groups):
-        lo, hi = g * q + min(g, r), (g + 1) * q + min(g + 1, r)
-        for rk in range(lo, hi):
-            grp_rows.append((periods[rk], g))
-    grp = spark.createDataFrame(grp_rows, [period_col, "__g"])
-
-    test = (
-        assign.where(F.col("role") == "test")
-        .join(F.broadcast(fit), "split_id")
-        .join(F.broadcast(grp), period_col)
-        .join(F.broadcast(path_map), ["split_id", "__g"])
+    test = assign.where(F.col("role") == "test").join(
+        F.broadcast(fit), "split_id"
     )
     resid = y.cast("double") - (
         F.col("b0") + F.col("b1") * x.cast("double")
     )
     sq_milli = F.round(resid * resid * F.lit(1000.0)).cast("long")
-    out = test.groupBy("path_id").agg(
+    path_id = path_of[F.col("split_id")][group]
+    out = test.groupBy(path_id.alias("path_id")).agg(
         F.count(F.lit(1)).alias("n_rows"),
-        F.sum(d(sq_milli)).alias("__sse"),
+        F.sum(dec38(sq_milli)).alias("__sse"),
     )
     return out.select(
         "path_id",
@@ -809,6 +805,47 @@ def cpcv_backtest_paths(
             / F.col("n_rows").cast("double")
             / F.lit(1000.0)
         ).alias("mse"),
+    )
+
+
+def fold_line_fit(
+    assigned: DataFrame, key: str, x_col: str, y_col: str
+) -> DataFrame:
+    """Per-fold one-regressor OLS of ``y_col`` on ``x_col`` over the
+    ``role = 'train'`` rows of an assigned frame (``PanelSplit.assign``,
+    ``cpcv_panel_assign``): ONE ``groupBy(key)`` of LONG moments
+    (n, Σx, Σy, Σx², Σxy — both columns integer-quantized by the
+    caller, the products kept in int64), then
+    :func:`~.timeseries.exact_line` for the slope ``b1`` and intercept
+    ``b0``, plus the train mean ``ybar`` for the mean baseline.
+
+    Output: one row per key — ``key n sx sy b1 b0 ybar``; columns a
+    caller never reads are pruned from its plan. The frame is tiny
+    (one row per fold), so callers broadcast it onto the test rows.
+    """
+    x, y = F.col(x_col), F.col(y_col)
+    mom = (
+        assigned.where(F.col("role") == "train")
+        .groupBy(key)
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(x).alias("sx"),
+            F.sum(y).alias("sy"),
+            F.sum(x * x).alias("sxx"),
+            F.sum(x * y).alias("sxy"),
+        )
+    )
+    b1, b0 = exact_line("n", "sx", "sy", "sxx", "sxy")
+    return mom.select(
+        key,
+        "n",
+        "sx",
+        "sy",
+        b1.alias("b1"),
+        b0.alias("b0"),
+        (
+            F.col("sy").cast("double") / F.col("n").cast("double")
+        ).alias("ybar"),
     )
 
 
@@ -856,7 +893,6 @@ def nested_ridge_cv(
     """
     from pyspark.sql import types as T
 
-    d = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     x = F.col(x_col).cast("long")
     y = F.col(y_col).cast("long")
     g = (
@@ -868,9 +904,9 @@ def nested_ridge_cv(
             F.count(F.lit(1)).alias("n"),
             F.sum(x).alias("sx"),
             F.sum(y).alias("sy"),
-            F.sum(d(x) * x).alias("sxx"),
-            F.sum(d(x) * y).alias("sxy"),
-            F.sum(d(y) * y).alias("syy"),
+            F.sum(dec38(x) * x).alias("sxx"),
+            F.sum(dec38(x) * y).alias("sxy"),
+            F.sum(dec38(y) * y).alias("syy"),
         )
         .collect()
     )

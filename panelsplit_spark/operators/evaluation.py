@@ -25,6 +25,8 @@ from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from .timeseries import dec38, exact_comoment, exact_line
+
 __all__ = ["auc_ranksum", "calibration_bins", "mutual_info_cells",
            "chi2_2x2", "weighted_median", "cuped_adjust",
            "split_conformal_ols", "learning_curve_ols", "power_mde",
@@ -360,22 +362,20 @@ def cuped_adjust(
     x = F.col(x_col).cast("long")
     y = F.col(y_col).cast("long")
     t = F.col(treated_col).cast("int") == F.lit(1)
-    d = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     g = df.agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(x).alias("sx"),
         F.sum(y).alias("sy"),
-        F.sum(d(x) * x).alias("sxx"),
-        F.sum(d(x) * y).alias("sxy"),
-        F.sum(d(y) * y).alias("syy"),
+        F.sum(dec38(x) * x).alias("sxx"),
+        F.sum(dec38(x) * y).alias("sxy"),
+        F.sum(dec38(y) * y).alias("syy"),
         F.count(F.when(t, F.lit(1))).alias("n_t"),
         F.sum(F.when(t, x).otherwise(F.lit(0))).alias("sx_t"),
         F.sum(F.when(t, y).otherwise(F.lit(0))).alias("sy_t"),
     )
-    n = d(F.col("n"))
-    cxy = n * F.col("sxy") - d(F.col("sx")) * F.col("sy")
-    vx = n * F.col("sxx") - d(F.col("sx")) * F.col("sx")
-    vy = n * F.col("syy") - d(F.col("sy")) * F.col("sy")
+    cxy = exact_comoment("n", "sx", "sy", "sxy")
+    vx = exact_comoment("n", "sx", "sx", "sxx")
+    vy = exact_comoment("n", "sy", "sy", "syy")
     theta = cxy.cast("double") / vx.cast("double")
     n_c = F.col("n") - F.col("n_t")
     mean = lambda s, cnt: s.cast("double") / cnt.cast("double")  # noqa: E731
@@ -389,7 +389,7 @@ def cuped_adjust(
         * cxy.cast("double")
         / (vx.cast("double") * vy.cast("double"))
     )
-    nz = vx != F.lit(0).cast("decimal(38,0)")
+    nz = vx != dec38(F.lit(0))
     return g.select(
         F.col("n_t"),
         n_c.alias("n_c"),
@@ -452,21 +452,15 @@ def split_conformal_ols(
         (F.col("__b") >= _BP // 2) & (F.col("__b") < 3 * _BP // 4)
     )
     test = base.where(F.col("__b") >= 3 * _BP // 4)
-    d = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     x, y = F.col("__x"), F.col("__y")
     fit = train.agg(
         F.count(F.lit(1)).alias("n_train"),
         F.sum(x).alias("sx"),
         F.sum(y).alias("sy"),
-        F.sum(d(x) * x).alias("sxx"),
-        F.sum(d(x) * y).alias("sxy"),
+        F.sum(dec38(x) * x).alias("sxx"),
+        F.sum(dec38(x) * y).alias("sxy"),
     )
-    num = d(F.col("n_train")) * F.col("sxy") - d(F.col("sx")) * F.col("sy")
-    den = d(F.col("n_train")) * F.col("sxx") - d(F.col("sx")) * F.col("sx")
-    b1 = num.cast("double") / den.cast("double")
-    b0 = (
-        F.col("sy").cast("double") - b1 * F.col("sx").cast("double")
-    ) / F.col("n_train").cast("double")
+    b1, b0 = exact_line("n_train", "sx", "sy", "sxx", "sxy")
     # the 1-row fit is consumed by BOTH the calibration and the test
     # scoring scans (and the final n_train projection): checkpoint it so
     # the train scan+aggregate runs once, not once per consumer
@@ -579,7 +573,6 @@ def learning_curve_ols(
     for i, c in enumerate(reversed(cuts)):
         band = F.when(b < c, F.lit(len(cuts) - i)).otherwise(band)
     band = F.when(b >= int(test_lo_bp), F.lit(0)).otherwise(band)
-    d = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     x = F.col(x_col).cast("long")
     y = F.col(y_col).cast("long")
     base = df.select(
@@ -590,9 +583,9 @@ def learning_curve_ols(
         F.count(F.lit(1)).alias("n"),
         F.sum(xx).alias("sx"),
         F.sum(yy).alias("sy"),
-        F.sum(d(xx) * xx).alias("sxx"),
-        F.sum(d(xx) * yy).alias("sxy"),
-        F.sum(d(yy) * yy).alias("syy"),
+        F.sum(dec38(xx) * xx).alias("sxx"),
+        F.sum(dec38(xx) * yy).alias("sxy"),
+        F.sum(dec38(yy) * yy).alias("syy"),
     ).localCheckpoint(eager=True)
     # ≤ len(cuts)+1 rows; checkpointing stops the full input scan from
     # replaying once for the cumulative train frame and once for the
@@ -620,12 +613,7 @@ def learning_curve_ols(
         F.col("sxy").alias("tsxy"),
         F.col("syy").alias("tsyy"),
     )
-    num = d(F.col("n")) * F.col("sxy") - d(F.col("sx")) * F.col("sy")
-    den = d(F.col("n")) * F.col("sxx") - d(F.col("sx")) * F.col("sx")
-    b1 = num.cast("double") / den.cast("double")
-    b0 = (
-        F.col("sy").cast("double") - b1 * F.col("sx").cast("double")
-    ) / F.col("n").cast("double")
+    b1, b0 = exact_line("n", "sx", "sy", "sxx", "sxy")
     joined = tr.crossJoin(F.broadcast(te)).select(
         "__band", "n", b1.alias("b1"), b0.alias("b0"),
         "tn", "tsx", "tsy", "tsxx", "tsxy", "tsyy",
@@ -697,11 +685,10 @@ def mde_moments(
     moments of the union, which is what the streaming gate exploits."""
     y = F.col(value_col).cast("long")
     t = F.col(treated_col).cast("int") == F.lit(1)
-    d = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     return df.groupBy(*group_cols).agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(y).alias("sy"),
-        F.sum(d(y) * y).alias("syy"),
+        F.sum(dec38(y) * y).alias("syy"),
         F.count(F.when(t, F.lit(1))).alias("n_t"),
     )
 
@@ -713,9 +700,8 @@ def mde_from_moments(
     z_power: float = Z_POWER_80,
 ) -> DataFrame:
     """Finish :func:`power_mde` from a (merged) moment frame."""
-    d = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     n_c = F.col("n") - F.col("n_t")
-    var_num = d(F.col("n")) * F.col("syy") - d(F.col("sy")) * F.col("sy")
+    var_num = exact_comoment("n", "sy", "sy", "syy")
     var = var_num.cast("double") / (
         F.col("n").cast("double") * (F.col("n").cast("double") - F.lit(1.0))
     )

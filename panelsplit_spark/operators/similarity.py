@@ -330,8 +330,11 @@ def ivf_probe_sweep(
     over the dominant interpreted-lambda cost).
 
     Returns ``{p: DataFrame}`` with the same columns as ivf_topk.
+    Raises ``ValueError`` on an empty ``probes``.
     """
     probes = sorted({int(p) for p in probes})
+    if not probes:
+        raise ValueError("ivf_probe_sweep needs at least one probe count")
     pmax = probes[-1]
     if centroids is None:
         centroids = corpus.orderBy(F.col(id_col)).limit(n_cells)

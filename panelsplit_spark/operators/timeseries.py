@@ -20,7 +20,7 @@ Scale notes:
 
 from __future__ import annotations
 
-from typing import Optional, Sequence
+from typing import Optional, Sequence, Tuple
 
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
@@ -30,6 +30,9 @@ __all__ = [
     "asof_join",
     "resample_daily_ffill",
     "group_trend_ols",
+    "dec38",
+    "exact_comoment",
+    "exact_line",
     "group_ols2",
     "acf_lags",
     "gap_detect",
@@ -666,6 +669,41 @@ def cusum_detect(
     )
 
 
+def dec38(c: Column) -> Column:
+    """``c`` cast to decimal(38,0), the type exact integer products and
+    moments are carried in (the DuckDB oracles' HUGEINT)."""
+    return c.cast("decimal(38,0)")
+
+
+def exact_comoment(n: str, a: str, b: str, ab: str) -> Column:
+    """The centered co-moment ``n·Σab − Σa·Σb`` of the integer moment
+    columns named ``n``, ``a`` (Σa), ``b`` (Σb) and ``ab`` (Σab),
+    multiplied in decimal(38,0) — the oracle's ``CAST(.. AS HUGEINT)``
+    twin — so n·Σab never wraps at 2⁶³. With ``a = b`` and ``ab = Σa²``
+    it is n² times the variance. Overflow contract: the products must
+    stay below 10³⁸."""
+    return dec38(F.col(n)) * F.col(ab) - dec38(F.col(a)) * F.col(b)
+
+
+def exact_line(
+    n: str, sx: str, sy: str, sxx: str, sxy: str
+) -> Tuple[Column, Column]:
+    """``(b1, b0)`` of the one-regressor OLS line y = b0 + b1·x from the
+    exact integer moment columns n, Σx, Σy, Σx², Σxy: the slope is ONE
+    double division of two exact co-moments and the intercept the
+    fixed-order double expression ``(Σy − b1·Σx) / n``, so every engine
+    that follows the same cast order (the DuckDB oracles do) gets the
+    same bits. A constant x gives a 0/0 slope; callers that can see one
+    guard it on ``exact_comoment(n, sx, sx, sxx) != 0``."""
+    cxy = exact_comoment(n, sx, sy, sxy)
+    cxx = exact_comoment(n, sx, sx, sxx)
+    b1 = cxy.cast("double") / cxx.cast("double")
+    b0 = (
+        F.col(sy).cast("double") - b1 * F.col(sx).cast("double")
+    ) / F.col(n).cast("double")
+    return b1, b0
+
+
 def group_ols2(
     df: DataFrame,
     group_cols: Sequence[str],
@@ -718,13 +756,11 @@ def group_ols2(
         F.sum(x1 * y).alias("sx1y"),
         F.sum(x2 * y).alias("sx2y"),
     )
-    d = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    n = d(F.col("n"))
-    a11 = n * F.col("sx1x1") - d(F.col("sx1")) * F.col("sx1")
-    a12 = n * F.col("sx1x2") - d(F.col("sx1")) * F.col("sx2")
-    a22 = n * F.col("sx2x2") - d(F.col("sx2")) * F.col("sx2")
-    b1n = n * F.col("sx1y") - d(F.col("sx1")) * F.col("sy")
-    b2n = n * F.col("sx2y") - d(F.col("sx2")) * F.col("sy")
+    a11 = exact_comoment("n", "sx1", "sx1", "sx1x1")
+    a12 = exact_comoment("n", "sx1", "sx2", "sx1x2")
+    a22 = exact_comoment("n", "sx2", "sx2", "sx2x2")
+    b1n = exact_comoment("n", "sx1", "sy", "sx1y")
+    b2n = exact_comoment("n", "sx2", "sy", "sx2y")
     det = a11 * a22 - a12 * a12
     beta1 = (a22 * b1n - a12 * b2n).cast("double") / det.cast("double")
     beta2 = (a11 * b2n - a12 * b1n).cast("double") / det.cast("double")
@@ -733,7 +769,7 @@ def group_ols2(
         - beta1 * F.col("sx1").cast("double")
         - beta2 * F.col("sx2").cast("double")
     ) / F.col("n").cast("double")
-    nz = det != F.lit(0).cast("decimal(38,0)")
+    nz = det != dec38(F.lit(0))
     return g.select(
         *group_cols,
         "n",
@@ -792,25 +828,21 @@ def acf_lags(
         )
     )
     pairs = left.join(right, F.col("day") == F.col("mday"))
-    d = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     g = pairs.groupBy("lag").agg(
         F.count(F.lit(1)).alias("n_pairs"),
         F.sum("x").alias("sx"),
         F.sum("y").alias("sy"),
-        F.sum(d(F.col("x")) * F.col("y")).alias("sxy"),
-        F.sum(d(F.col("x")) * F.col("x")).alias("sxx"),
-        F.sum(d(F.col("y")) * F.col("y")).alias("syy"),
+        F.sum(dec38(F.col("x")) * F.col("y")).alias("sxy"),
+        F.sum(dec38(F.col("x")) * F.col("x")).alias("sxx"),
+        F.sum(dec38(F.col("y")) * F.col("y")).alias("syy"),
     )
-    n = d(F.col("n_pairs"))
-    num = n * F.col("sxy") - d(F.col("sx")) * F.col("sy")
-    vx = n * F.col("sxx") - d(F.col("sx")) * F.col("sx")
-    vy = n * F.col("syy") - d(F.col("sy")) * F.col("sy")
+    num = exact_comoment("n_pairs", "sx", "sy", "sxy")
+    vx = exact_comoment("n_pairs", "sx", "sx", "sxx")
+    vy = exact_comoment("n_pairs", "sy", "sy", "syy")
     corr = num.cast("double") / (
         F.sqrt(vx.cast("double")) * F.sqrt(vy.cast("double"))
     )
-    nz = (vx > F.lit(0).cast("decimal(38,0)")) & (
-        vy > F.lit(0).cast("decimal(38,0)")
-    )
+    nz = (vx > dec38(F.lit(0))) & (vy > dec38(F.lit(0)))
     return g.select(
         "lag", "n_pairs", F.when(nz, corr).alias("acf")
     ).orderBy("lag")

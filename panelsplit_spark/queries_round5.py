@@ -30,6 +30,7 @@ from typing import Callable, Dict
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from .functions.hashing import word_ngrams, word_tokens
+from .operators.timeseries import exact_line
 from .sources.tables import load_table
 
 # ======================================================================
@@ -377,24 +378,8 @@ def q_feat_seasonal_decompose(spark: SparkSession, sf_dir: str
         F.sum(F.col("x") * F.col("y")).alias("sxy"),
         F.sum(F.col("x") * F.col("x")).alias("sxx"),
     )
-    dec = "cast({} as decimal(38,0))"
-    b_num = F.expr(
-        f"{dec.format('n')} * sxy - {dec.format('sx')} * sy"
-    ).cast("double")
-    b_den = F.expr(
-        f"{dec.format('n')} * sxx - {dec.format('sx')} * sx"
-    ).cast("double")
-    tr = g.select(
-        "event_type",
-        (b_num / b_den).alias("b"),
-        (
-            (
-                F.col("sy").cast("double")
-                - (b_num / b_den) * F.col("sx").cast("double")
-            )
-            / F.col("n").cast("double")
-        ).alias("a"),
-    )
+    b, a = exact_line("n", "sx", "sy", "sxx", "sxy")
+    tr = g.select("event_type", b.alias("b"), a.alias("a"))
     h = ev.groupBy("event_type", "hour").agg(
         F.count(F.lit(1)).alias("n_h"),
         F.sum("y").alias("sy_h"),

@@ -9,6 +9,8 @@ from typing import Callable, Dict
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .operators.cross_validation import fold_line_fit
+from .operators.timeseries import dec38, exact_line
 from .sources.tables import load_table
 
 # ======================================================================
@@ -194,8 +196,9 @@ def q_cv_stack_blend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stacked generalization (Wolpert 1992) in closed form: two base
     learners — per-fold OLS (cents ~ hour-of-day) and the per-fold mean
     — produce out-of-fold predictions from ONE grouped moment aggregate
-    over train rows; their dollar-quantized OOF predictions become the
-    meta-features of a global two-regressor OLS
+    over train rows (operators.cross_validation.fold_line_fit); their
+    dollar-quantized OOF predictions become the meta-features of a
+    global two-regressor OLS
     (operators/timeseries.group_ols2, exact decimal-guarded Cramer),
     whose single coefficient row broadcasts back onto the OOF frame for
     the per-row blend. Three shuffles total (fold moments, meta
@@ -216,32 +219,7 @@ def q_cv_stack_blend(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("value")).cast("long").alias("yd"),
     )
     asg = ps.assign(evq)
-    train = asg.where(F.col("role") == "train")
-    d = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    mom = train.groupBy("fold_id").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("x").alias("sx"),
-        F.sum("yc").alias("sy"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-        F.sum(F.col("x") * F.col("yc")).alias("sxy"),
-    )
-    b1 = (
-        (d(F.col("n")) * F.col("sxy") - d(F.col("sx")) * F.col("sy"))
-        .cast("double")
-        / (d(F.col("n")) * F.col("sxx") - d(F.col("sx")) * F.col("sx"))
-        .cast("double")
-    )
-    coef = mom.select(
-        "fold_id",
-        b1.alias("b1"),
-        (
-            (F.col("sy").cast("double") - b1 * F.col("sx").cast("double"))
-            / F.col("n").cast("double")
-        ).alias("b0"),
-        (F.col("sy").cast("double") / F.col("n").cast("double")).alias(
-            "mu"
-        ),
-    )
+    coef = fold_line_fit(asg, "fold_id", "x", "yc")
     feats = (
         asg.where(F.col("role") == "test")
         .join(F.broadcast(coef), "fold_id")
@@ -255,7 +233,7 @@ def q_cv_stack_blend(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .cast("long")
             .alias("x1"),
-            F.round(F.col("mu") / F.lit(100)).cast("long").alias("x2"),
+            F.round(F.col("ybar") / F.lit(100)).cast("long").alias("x2"),
         )
     )
     # meta fit is ONE global coefficient row; checkpoint the feature
@@ -640,9 +618,9 @@ def q_text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     or machine-generated spam bends the tail). Both logs take ONE exact
     integer input; each is micro-quantized before the moment sums, so
     the slope is a double division of two decimal-exact integers
-    (group_ols pattern). Shape: one token explode + count shuffle, one
-    rank window over the distinct-term frame, one 1-row moment
-    aggregate."""
+    (operators.timeseries.exact_line). Shape: one token explode +
+    count shuffle, one rank window over the distinct-term frame, one
+    1-row moment aggregate."""
     from pyspark.sql.window import Window
 
     from .functions.hashing import word_tokens
@@ -663,27 +641,18 @@ def q_text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("ly"),
     )
-    d = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     m = pts.groupBy().agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("lx").alias("sx"),
         F.sum("ly").alias("sy"),
-        F.sum(d(F.col("lx")) * F.col("lx")).alias("sxx"),
-        F.sum(d(F.col("lx")) * F.col("ly")).alias("sxy"),
+        F.sum(dec38(F.col("lx")) * F.col("lx")).alias("sxx"),
+        F.sum(dec38(F.col("lx")) * F.col("ly")).alias("sxy"),
     )
-    num = d(F.col("n")) * F.col("sxy") - d(F.col("sx")) * F.col("sy")
-    den = d(F.col("n")) * F.col("sxx") - d(F.col("sx")) * F.col("sx")
-    slope = num.cast("double") / den.cast("double")
+    slope, intercept = exact_line("n", "sx", "sy", "sxx", "sxy")
     return m.select(
         F.col("n").alias("n_terms"),
         slope.alias("zipf_slope"),
-        (
-            (
-                F.col("sy").cast("double")
-                - slope * F.col("sx").cast("double")
-            )
-            / F.col("n").cast("double")
-        ).alias("zipf_intercept_micro"),
+        intercept.alias("zipf_intercept_micro"),
     )
 
 
@@ -1997,10 +1966,11 @@ def q_cv_residual_dw(spark: SparkSession, sf_dir: str) -> DataFrame:
     a walk-forward CV owes its user: DW ≈ 2 means the per-fold model
     left no temporal structure on the table, DW → 0 exposes positive
     autocorrelation the iid-style MSE hides. Residuals come from the
-    same exact-integer-moment per-fold OLS as cv_stack_blend (bit-
-    identical doubles), are quantized to integer cents, and DW is ONE
-    double division of two exact integer sums (Σ(eᵗ−eᵗ⁻¹)² / Σe²) —
-    the lag runs inside a fold-keyed window, one shuffle."""
+    per-fold OLS of operators.cross_validation.fold_line_fit (exact
+    moments, exact_line coefficients — bit-identical doubles), are
+    quantized to integer cents, and DW is ONE double division of two
+    exact integer sums (Σ(eᵗ−eᵗ⁻¹)² / Σe²) — the lag runs inside a
+    fold-keyed window, one shuffle."""
     from pyspark.sql.window import Window
 
     from .queries import _events_cv
@@ -2013,32 +1983,7 @@ def q_cv_residual_dw(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("value") * 100).cast("long").alias("yc"),
     )
     asg = ps.assign(evq)
-    d = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    mom = (
-        asg.where(F.col("role") == "train")
-        .groupBy("fold_id")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("x").alias("sx"),
-            F.sum("yc").alias("sy"),
-            F.sum(F.col("x") * F.col("x")).alias("sxx"),
-            F.sum(F.col("x") * F.col("yc")).alias("sxy"),
-        )
-    )
-    b1 = (
-        (d(F.col("n")) * F.col("sxy") - d(F.col("sx")) * F.col("sy"))
-        .cast("double")
-        / (d(F.col("n")) * F.col("sxx") - d(F.col("sx")) * F.col("sx"))
-        .cast("double")
-    )
-    coef = mom.select(
-        "fold_id",
-        b1.alias("b1"),
-        (
-            (F.col("sy").cast("double") - b1 * F.col("sx").cast("double"))
-            / F.col("n").cast("double")
-        ).alias("b0"),
-    )
+    coef = fold_line_fit(asg, "fold_id", "x", "yc")
     res = (
         asg.where(F.col("role") == "test")
         .join(F.broadcast(coef), "fold_id")
@@ -2141,10 +2086,10 @@ def q_cv_horizon_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
     that tells you how far a refreshed model stays usable (the per-fold
     MSE hides it by averaging horizons together). Errors quantize to
     integer cents before the horizon rollup, so each horizon's MSE is
-    one double division of exact integers. Shape: the same single
-    fold-moment aggregate as the other CV gates + one K·T-row
-    arithmetic join; horizon = the period's rank inside its test
-    block."""
+    one double division of exact integers. Shape: the single
+    fold-moment aggregate of fold_line_fit (exact_line coefficients)
+    + one K·T-row arithmetic join; horizon = the period's rank inside
+    its test block."""
     from pyspark.sql.window import Window
 
     from .queries_data import _li_cv
@@ -2156,32 +2101,7 @@ def q_cv_horizon_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("l_extendedprice")).cast("long").alias("y"),
     )
     asg = ps.assign(liq)
-    d = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    mom = (
-        asg.where(F.col("role") == "train")
-        .groupBy("fold_id")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("x").alias("sx"),
-            F.sum("y").alias("sy"),
-            F.sum(F.col("x") * F.col("x")).alias("sxx"),
-            F.sum(F.col("x") * F.col("y")).alias("sxy"),
-        )
-    )
-    b1 = (
-        (d(F.col("n")) * F.col("sxy") - d(F.col("sx")) * F.col("sy"))
-        .cast("double")
-        / (d(F.col("n")) * F.col("sxx") - d(F.col("sx")) * F.col("sx"))
-        .cast("double")
-    )
-    coef = mom.select(
-        "fold_id",
-        b1.alias("b1"),
-        (
-            (F.col("sy").cast("double") - b1 * F.col("sx").cast("double"))
-            / F.col("n").cast("double")
-        ).alias("b0"),
-    )
+    coef = fold_line_fit(asg, "fold_id", "x", "y")
     test = asg.where(F.col("role") == "test")
     wh = Window.partitionBy("fold_id").orderBy("period")
     horizons = (

@@ -28,16 +28,18 @@ from typing import Callable, Dict
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
+from .operators.cross_validation import fold_line_fit
+from .operators.timeseries import (
+    dec38 as _dec,
+    exact_comoment,
+    exact_line,
+)
 from .sources.tables import load_table
 
 # ======================================================================
-# shared: exact-integer per-fold OLS on the events CV (the same
-# moment arithmetic as queries_round6.q_cv_residual_dw, bit-identical)
+# shared: exact-integer per-fold OLS on the events CV
+# (operators.cross_validation.fold_line_fit, as in cv_residual_dw)
 # ======================================================================
-
-
-def _dec(c):
-    return c.cast("decimal(38,0)")
 
 
 def _events_oof_residuals(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -54,36 +56,7 @@ def _events_oof_residuals(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("value") * 100).cast("long").alias("yc"),
     )
     asg = ps.assign(evq)
-    mom = (
-        asg.where(F.col("role") == "train")
-        .groupBy("fold_id")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("x").alias("sx"),
-            F.sum("yc").alias("sy"),
-            F.sum(F.col("x") * F.col("x")).alias("sxx"),
-            F.sum(F.col("x") * F.col("yc")).alias("sxy"),
-        )
-    )
-    b1 = (
-        (_dec(F.col("n")) * F.col("sxy") - _dec(F.col("sx")) * F.col("sy"))
-        .cast("double")
-        / (
-            _dec(F.col("n")) * F.col("sxx")
-            - _dec(F.col("sx")) * F.col("sx")
-        ).cast("double")
-    )
-    coef = mom.select(
-        "fold_id",
-        b1.alias("b1"),
-        (
-            (F.col("sy").cast("double") - b1 * F.col("sx").cast("double"))
-            / F.col("n").cast("double")
-        ).alias("b0"),
-        (
-            F.col("sy").cast("double") / F.col("n").cast("double")
-        ).alias("ybar"),
-    )
+    coef = fold_line_fit(asg, "fold_id", "x", "yc")
     return (
         asg.where(F.col("role") == "test")
         .join(F.broadcast(coef), "fold_id")
@@ -183,10 +156,7 @@ def q_cv_dm_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     dbar = F.col("sum_d").cast("double") / F.col("n").cast("double")
     # s²_d = (Σd² − (Σd)²/n) / (n−1), carried as exact integers until
     # the single ::DOUBLE conversion of the numerator
-    var_num = (
-        _dec(F.col("n")) * F.col("_sdd")
-        - _dec(F.col("sum_d")) * F.col("sum_d")
-    ).cast("double")
+    var_num = exact_comoment("n", "sum_d", "sum_d", "_sdd").cast("double")
     var_d = var_num / (
         F.col("n").cast("double")
         * F.col("n").cast("double")
@@ -335,36 +305,7 @@ def q_cv_skill_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round("l_extendedprice").cast("long").alias("y"),
     )
     asg = ps.assign(liq)
-    mom = (
-        asg.where(F.col("role") == "train")
-        .groupBy("fold_id")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("x").alias("sx"),
-            F.sum("y").alias("sy"),
-            F.sum(F.col("x") * F.col("x")).alias("sxx"),
-            F.sum(F.col("x") * F.col("y")).alias("sxy"),
-        )
-    )
-    b1 = (
-        (_dec(F.col("n")) * F.col("sxy") - _dec(F.col("sx")) * F.col("sy"))
-        .cast("double")
-        / (
-            _dec(F.col("n")) * F.col("sxx")
-            - _dec(F.col("sx")) * F.col("sx")
-        ).cast("double")
-    )
-    coef = mom.select(
-        "fold_id",
-        b1.alias("b1"),
-        (
-            (F.col("sy").cast("double") - b1 * F.col("sx").cast("double"))
-            / F.col("n").cast("double")
-        ).alias("b0"),
-        (
-            F.col("sy").cast("double") / F.col("n").cast("double")
-        ).alias("ybar"),
-    )
+    coef = fold_line_fit(asg, "fold_id", "x", "y")
     scored = (
         asg.where(F.col("role") == "test")
         .join(F.broadcast(coef), "fold_id")
@@ -855,9 +796,9 @@ def q_cv_mincer_zarnowitz(spark: SparkSession, sf_dir: str) -> DataFrame:
     exposes over-dispersion (the model should be shrunk), intercept ≠ 0
     a level bias. Forecasts quantize to integer cents before the
     moment sums (the suffstat discipline), so slope and intercept are
-    double divisions of exact integer cross-moments. Shape: the same
-    broadcast-coefficient OOF apply as the other CV gates + ONE
-    fold-keyed moment aggregate."""
+    double divisions of exact integer cross-moments (exact_line).
+    Shape: the same broadcast-coefficient OOF apply (fold_line_fit) as
+    the other CV gates + ONE fold-keyed moment aggregate."""
     from .queries import _events_cv
 
     ev, ps = _events_cv(spark, sf_dir)
@@ -868,33 +809,7 @@ def q_cv_mincer_zarnowitz(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("value") * 100).cast("long").alias("yc"),
     )
     asg = ps.assign(evq)
-    mom = (
-        asg.where(F.col("role") == "train")
-        .groupBy("fold_id")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("x").alias("sx"),
-            F.sum("yc").alias("sy"),
-            F.sum(F.col("x") * F.col("x")).alias("sxx"),
-            F.sum(F.col("x") * F.col("yc")).alias("sxy"),
-        )
-    )
-    b1 = (
-        (_dec(F.col("n")) * F.col("sxy") - _dec(F.col("sx")) * F.col("sy"))
-        .cast("double")
-        / (
-            _dec(F.col("n")) * F.col("sxx")
-            - _dec(F.col("sx")) * F.col("sx")
-        ).cast("double")
-    )
-    coef = mom.select(
-        "fold_id",
-        b1.alias("b1"),
-        (
-            (F.col("sy").cast("double") - b1 * F.col("sx").cast("double"))
-            / F.col("n").cast("double")
-        ).alias("b0"),
-    )
+    coef = fold_line_fit(asg, "fold_id", "x", "yc")
     oof = (
         asg.where(F.col("role") == "test")
         .join(F.broadcast(coef), "fold_id")
@@ -915,25 +830,12 @@ def q_cv_mincer_zarnowitz(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(_dec(F.col("p")) * F.col("p")).alias("spp"),
         F.sum(_dec(F.col("p")) * F.col("y")).alias("spy"),
     )
-    slope = (
-        (_dec(F.col("n")) * F.col("spy") - _dec(F.col("sp")) * F.col("sy"))
-        .cast("double")
-        / (
-            _dec(F.col("n")) * F.col("spp")
-            - _dec(F.col("sp")) * F.col("sp")
-        ).cast("double")
-    )
+    slope, intercept = exact_line("n", "sp", "sy", "spp", "spy")
     return mz.select(
         "fold_id",
         "n",
         slope.alias("mz_slope"),
-        (
-            (
-                F.col("sy").cast("double")
-                - slope * F.col("sp").cast("double")
-            )
-            / F.col("n").cast("double")
-        ).alias("mz_intercept"),
+        intercept.alias("mz_intercept"),
     ).orderBy("fold_id")
 
 
@@ -1107,21 +1009,13 @@ def q_feat_adf_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(_dec(F.col("x")) * F.col("x")).alias("sxx"),
         F.sum(_dec(F.col("x")) * F.col("dy")).alias("sxy"),
     )
-    den = _dec(F.col("n")) * F.col("sxx") - _dec(F.col("sx")) * F.col("sx")
-    b1 = (
-        (_dec(F.col("n")) * F.col("sxy") - _dec(F.col("sx")) * F.col("sy"))
-        .cast("double")
-        / den.cast("double")
-    )
+    b1, b0 = exact_line("n", "sx", "sy", "sxx", "sxy")
     coef = mom.select(
         "event_type",
         "n",
         b1.alias("b1"),
-        (
-            (F.col("sy").cast("double") - b1 * F.col("sx").cast("double"))
-            / F.col("n").cast("double")
-        ).alias("b0"),
-        den.cast("double").alias("den"),
+        b0.alias("b0"),
+        exact_comoment("n", "sx", "sx", "sxx").cast("double").alias("den"),
     )
     res = (
         pairs.join(F.broadcast(coef), "event_type")
@@ -1246,38 +1140,7 @@ def q_cv_purge_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
             ev, "period", n_groups=_PE_G, n_test_groups=_PE_K,
             purge=purge, embargo=embargo,
         )
-        mom = (
-            asg.where(F.col("role") == "train")
-            .groupBy("split_id")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum("x").alias("sx"),
-                F.sum("yc").alias("sy"),
-                F.sum(F.col("x") * F.col("x")).alias("sxx"),
-                F.sum(F.col("x") * F.col("yc")).alias("sxy"),
-            )
-        )
-        b1 = (
-            (
-                _dec(F.col("n")) * F.col("sxy")
-                - _dec(F.col("sx")) * F.col("sy")
-            ).cast("double")
-            / (
-                _dec(F.col("n")) * F.col("sxx")
-                - _dec(F.col("sx")) * F.col("sx")
-            ).cast("double")
-        )
-        coef = mom.select(
-            "split_id",
-            b1.alias("b1"),
-            (
-                (
-                    F.col("sy").cast("double")
-                    - b1 * F.col("sx").cast("double")
-                )
-                / F.col("n").cast("double")
-            ).alias("b0"),
-        )
+        coef = fold_line_fit(asg, "split_id", "x", "yc")
         scored = (
             asg.where(F.col("role") == "test")
             .join(F.broadcast(coef), "split_id")
@@ -1417,9 +1280,10 @@ def q_cv_loco_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the monthly lineitem CV: per fold, fit the 2-regressor OLS
     (extendedprice ~ quantity + discount_bp) AND both 1-regressor
     ablations from the SAME nine exact integer moments (one grouped
-    aggregate — the full model is group_ols2's Cramer solve, each
-    ablation a 1-var closed form on the same sums), then charge each
-    covariate the OOF SSE its removal adds. The honest, refit-based
+    aggregate — the full model is group_ols2's Cramer solve over
+    exact_comoment entries, each ablation an exact_line on the same
+    sums), then charge each covariate the OOF SSE its removal adds.
+    The honest, refit-based
     importance a panel CV can actually certify — unlike permutation
     importance it prices the model's ability to COMPENSATE. All
     residuals re-quantize to integer dollars, so every SSE and every
@@ -1449,12 +1313,11 @@ def q_cv_loco_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("x2") * F.col("y")).alias("sx2y"),
         )
     )
-    n = _dec(F.col("n"))
-    a11 = n * F.col("sx1x1") - _dec(F.col("sx1")) * F.col("sx1")
-    a12 = n * F.col("sx1x2") - _dec(F.col("sx1")) * F.col("sx2")
-    a22 = n * F.col("sx2x2") - _dec(F.col("sx2")) * F.col("sx2")
-    b1n = n * F.col("sx1y") - _dec(F.col("sx1")) * F.col("sy")
-    b2n = n * F.col("sx2y") - _dec(F.col("sx2")) * F.col("sy")
+    a11 = exact_comoment("n", "sx1", "sx1", "sx1x1")
+    a12 = exact_comoment("n", "sx1", "sx2", "sx1x2")
+    a22 = exact_comoment("n", "sx2", "sx2", "sx2x2")
+    b1n = exact_comoment("n", "sx1", "sy", "sx1y")
+    b2n = exact_comoment("n", "sx2", "sy", "sx2y")
     det = a11 * a22 - a12 * a12
     fb1 = (a22 * b1n - a12 * b2n).cast("double") / det.cast("double")
     fb2 = (a11 * b2n - a12 * b1n).cast("double") / det.cast("double")
@@ -1464,14 +1327,8 @@ def q_cv_loco_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
         - fb2 * F.col("sx2").cast("double")
     ) / F.col("n").cast("double")
     # ablations from the SAME moments: y ~ x2 only, y ~ x1 only
-    s2b = b2n.cast("double") / a22.cast("double")
-    s2a = (
-        F.col("sy").cast("double") - s2b * F.col("sx2").cast("double")
-    ) / F.col("n").cast("double")
-    s1b = b1n.cast("double") / a11.cast("double")
-    s1a = (
-        F.col("sy").cast("double") - s1b * F.col("sx1").cast("double")
-    ) / F.col("n").cast("double")
+    s2b, s2a = exact_line("n", "sx2", "sy", "sx2x2", "sx2y")
+    s1b, s1a = exact_line("n", "sx1", "sy", "sx1x1", "sx1y")
     coef = g.select(
         "fold_id",
         fb0.alias("fb0"), fb1.alias("fb1"), fb2.alias("fb2"),
@@ -1957,7 +1814,7 @@ def q_cv_coef_stability(spark: SparkSession, sf_dir: str) -> DataFrame:
     is fitting noise even when every fold's MSE looks fine (the
     parameter-constancy complement of cv_fold_mse; cf. the
     Chow-test/rolling-beta tradition). Exact arithmetic: slopes come
-    from the usual decimal moment Cramer form, quantize to nano BEFORE
+    from fold_line_fit's exact_line form, quantize to nano BEFORE
     the cross-fold mean, so mean and absolute deviations are exact
     integer algebra (mean·K kept as the integer sum to avoid a
     division: dev_K = K·b − Σb)."""
@@ -1970,28 +1827,11 @@ def q_cv_coef_stability(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round("l_extendedprice").cast("long").alias("y"),
     )
     asg = ps.assign(liq)
-    mom = (
-        asg.where(F.col("role") == "train")
-        .groupBy("fold_id")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("x").alias("sx"),
-            F.sum("y").alias("sy"),
-            F.sum(F.col("x") * F.col("x")).alias("sxx"),
-            F.sum(F.col("x") * F.col("y")).alias("sxy"),
-        )
-    )
-    b1 = (
-        (_dec(F.col("n")) * F.col("sxy") - _dec(F.col("sx")) * F.col("sy"))
-        .cast("double")
-        / (
-            _dec(F.col("n")) * F.col("sxx")
-            - _dec(F.col("sx")) * F.col("sx")
-        ).cast("double")
-    )
-    slopes = mom.select(
+    slopes = fold_line_fit(asg, "fold_id", "x", "y").select(
         F.col("fold_id").cast("long").alias("fold_id"),
-        F.round(b1 * F.lit(1000000000)).cast("long").alias("b1_nano"),
+        F.round(F.col("b1") * F.lit(1000000000))
+        .cast("long")
+        .alias("b1_nano"),
     )
     tot = slopes.groupBy().agg(
         F.count(F.lit(1)).alias("k"),
@@ -2173,33 +2013,7 @@ def q_cv_mase(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("value") * 100).cast("long").alias("yc"),
     )
     asg = ps.assign(evq)
-    mom = (
-        asg.where(F.col("role") == "train")
-        .groupBy("fold_id")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("x").alias("sx"),
-            F.sum("yc").alias("sy"),
-            F.sum(F.col("x") * F.col("x")).alias("sxx"),
-            F.sum(F.col("x") * F.col("yc")).alias("sxy"),
-        )
-    )
-    b1 = (
-        (_dec(F.col("n")) * F.col("sxy") - _dec(F.col("sx")) * F.col("sy"))
-        .cast("double")
-        / (
-            _dec(F.col("n")) * F.col("sxx")
-            - _dec(F.col("sx")) * F.col("sx")
-        ).cast("double")
-    )
-    coef = mom.select(
-        "fold_id",
-        b1.alias("b1"),
-        (
-            (F.col("sy").cast("double") - b1 * F.col("sx").cast("double"))
-            / F.col("n").cast("double")
-        ).alias("b0"),
-    )
+    coef = fold_line_fit(asg, "fold_id", "x", "yc")
     oof = (
         asg.where(F.col("role") == "test")
         .join(F.broadcast(coef), "fold_id")

@@ -20,7 +20,11 @@ from typing import Callable, Dict
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
-from .queries_round6b import _dec  # noqa: E402  (shared exact-integer cast)
+from .operators.timeseries import (
+    dec38 as _dec,
+    exact_comoment,
+    exact_line,
+)
 
 
 # ======================================================================
@@ -39,10 +43,11 @@ def q_text_heaps_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     an exact, order-free aggregate) is ≤ d, N_d is the running token
     count. ln N / ln V are micro-quantized before the moment sums, so
     the slope is one double division of decimal-exact integers (the
-    zipf/group-OLS discipline). Shape: one token explode, one per-term
-    min, one per-doc rollup + cumulative window over the PER-DOC frame
-    (state = n_docs rows, never facts — past ~10^8 docs swap the window
-    for the range-bucketed distributed rank)."""
+    zipf discipline, operators.timeseries.exact_line). Shape: one
+    token explode, one per-term min, one per-doc rollup + cumulative
+    window over the PER-DOC frame (state = n_docs rows, never facts —
+    past ~10^8 docs swap the window for the range-bucketed distributed
+    rank)."""
     from .functions.hashing import word_tokens
 
     docs = load_table(spark, sf_dir, "documents")
@@ -89,19 +94,11 @@ def q_text_heaps_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(_dec(F.col("lx")) * F.col("lx")).alias("sxx"),
         F.sum(_dec(F.col("lx")) * F.col("ly")).alias("sxy"),
     )
-    num = _dec(F.col("n")) * F.col("sxy") - _dec(F.col("sx")) * F.col("sy")
-    den = _dec(F.col("n")) * F.col("sxx") - _dec(F.col("sx")) * F.col("sx")
-    beta = num.cast("double") / den.cast("double")
+    beta, lnk = exact_line("n", "sx", "sy", "sxx", "sxy")
     return m.select(
         F.col("n").alias("n_checkpoints"),
         beta.alias("heaps_beta"),
-        (
-            (
-                F.col("sy").cast("double")
-                - beta * F.col("sx").cast("double")
-            )
-            / F.col("n").cast("double")
-        ).alias("heaps_lnk_micro"),
+        lnk.alias("heaps_lnk_micro"),
     )
 
 
@@ -189,9 +186,7 @@ def q_text_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     j = stats.crossJoin(F.broadcast(n_docs)).where(
         F.col("df") >= _BURST_MIN_DF
     )
-    fano_num = _dec(F.col("bigd")) * F.col("s2") - _dec(F.col("tf")) * F.col(
-        "tf"
-    )
+    fano_num = exact_comoment("bigd", "tf", "tf", "s2")
     fano_den = _dec(F.col("bigd")) * F.col("tf")
     scored = j.select(
         "term",
@@ -427,7 +422,7 @@ def q_emb_maha_outlier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     j = comp.join(F.broadcast(mom), ["label", "j"])
     dev = _dec(F.col("qv")) * F.col("n") - _dec(F.col("s"))
-    var_num = _dec(F.col("n")) * F.col("s2") - _dec(F.col("s")) * F.col("s")
+    var_num = exact_comoment("n", "s", "s", "s2")
     z2_nano = F.round(
         (dev * dev * F.lit(1000000000)).cast("double")
         / var_num.cast("double")

@@ -85,29 +85,32 @@ _STORE_CUTS = (7000, 8500)  # base 70%, increment 15%, increment 15%
 # saved exchange grows with store size while the write overhead is
 # per-batch, so the bucketed layout is wired for corpora well past the
 # measured parity point and the directory store keeps the small sizes
-# it wins. Size is read from the parquet footprint (no extra job); env
-# override for tests and deployments.
-_BUCKETED_STORE_MIN_BYTES = int(
-    __import__("os").environ.get(
-        "SPARK_GRAFT_BUCKETED_STORE_MIN_BYTES", str(256 * 1024 * 1024)
-    )
-)
+# it wins. Size is read from the parquet footprint (no extra job).
+_BUCKETED_STORE_MIN_BYTES = 256 * 1024 * 1024
 
 
 def _corpus_bytes(sf_dir: str) -> int:
+    """On-disk size of ``documents.parquet``: the file itself, or every
+    data file under the dataset directory, partition subdirectories
+    included. Entries starting with ``.`` or ``_`` (checksums,
+    ``_SUCCESS``, ``_temporary``) are skipped at every level."""
     import os
 
     p = os.path.join(sf_dir, "documents.parquet")
-    if os.path.isdir(p):
-        return sum(
-            os.path.getsize(os.path.join(p, f))
-            for f in os.listdir(p)
+    if not os.path.isdir(p):
+        try:
+            return os.path.getsize(p)
+        except OSError:
+            return 0
+    total = 0
+    for root, dirs, files in os.walk(p):
+        dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
+        total += sum(
+            os.path.getsize(os.path.join(root, f))
+            for f in files
             if not f.startswith((".", "_"))
         )
-    try:
-        return os.path.getsize(p)
-    except OSError:
-        return 0
+    return total
 
 
 def _store_dir(spark: SparkSession) -> str:

@@ -309,6 +309,25 @@ def test_fold_cte_fragments_pinned():
     )
 
 
+def test_registry_oracles_pinned():
+    """Every registry name and its oracle SQL, hash-pinned: a refactor
+    of the Spark side must leave the DuckDB oracles byte-identical. The
+    digest runs over the names in sorted order (``name\\0oracle\\0``
+    each), so reordering ``queries()`` does not move it; adding,
+    renaming or editing a query does, deliberately."""
+    import hashlib
+
+    import __spark_entry__ as entrymod
+
+    oracles = entrymod.oracle_sql()
+    h = hashlib.sha256()
+    for name in sorted(entrymod.queries()):
+        h.update(name.encode() + b"\0" + oracles[name].encode() + b"\0")
+    assert h.hexdigest() == (
+        "b40bf850fd594b062541e7461e5b2629f8d9b9f9885250fb92e17fcccb317b9e"
+    )
+
+
 def test_bench_headline_covers_registry_exactly():
     """Every declared query must be benched (and nothing phantom):
     bench.HEADLINE is an ordered list, so registry additions must be

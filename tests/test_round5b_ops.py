@@ -95,6 +95,47 @@ def test_group_ols2_singular_group_is_null(spark):
     assert r["b1"] is None and r["b2"] is None and r["b0"] is None
 
 
+def test_exact_line_beyond_int64(spark):
+    """x ≈ 2³¹ makes n·Σx² ≈ 2⁶⁸, far past LONG, while the centered
+    co-moments stay small: the decimal(38,0) co-moments must be the
+    exact integers, the slope the exact ratio rounded once to double
+    and the intercept the fixed-order double expression."""
+    from fractions import Fraction
+
+    from panelsplit_spark.operators.timeseries import (
+        dec38,
+        exact_comoment,
+        exact_line,
+    )
+
+    xs = [2**31 + i for i in range(8)]
+    ys = [7 * i * i - 3 * i + 11 for i in range(8)]
+    df = spark.createDataFrame(list(zip(xs, ys)), ["x", "y"])
+    x, y = F.col("x"), F.col("y")
+    m = df.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(x).alias("sx"),
+        F.sum(y).alias("sy"),
+        F.sum(dec38(x) * x).alias("sxx"),
+        F.sum(dec38(x) * y).alias("sxy"),
+    )
+    b1, b0 = exact_line("n", "sx", "sy", "sxx", "sxy")
+    r = m.select(
+        exact_comoment("n", "sx", "sx", "sxx").alias("cxx"),
+        exact_comoment("n", "sx", "sy", "sxy").alias("cxy"),
+        b1.alias("b1"),
+        b0.alias("b0"),
+    ).collect()[0]
+    n, sx, sy = len(xs), sum(xs), sum(ys)
+    sxx = sum(v * v for v in xs)
+    sxy = sum(u * v for u, v in zip(xs, ys))
+    assert n * sxx >= 2**63
+    cxx, cxy = n * sxx - sx * sx, n * sxy - sx * sy
+    assert (int(r["cxx"]), int(r["cxy"])) == (cxx, cxy)
+    assert r["b1"] == float(Fraction(cxy, cxx))
+    assert r["b0"] == (float(sy) - r["b1"] * float(sx)) / float(n)
+
+
 # ----------------------------------------------------------------------
 # cuped_adjust
 # ----------------------------------------------------------------------
@@ -670,6 +711,29 @@ def test_cpcv_paths_cover_all_groups(spark):
     # every path's MSE is exactly 0
     assert all(r["mse"] == 0.0 for r in out)
     assert all(r["sse_milli"] == 0 for r in out)
+
+
+def test_cpcv_paths_plan_joins_no_driver_tables(spark):
+    """Path membership is literal lookups: the plan scans no driver-built
+    table and broadcasts only the per-split fit."""
+    from panelsplit_spark.operators.cross_validation import (
+        cpcv_backtest_paths,
+    )
+
+    i = (F.col("id") % 30).cast("int")
+    df = spark.range(90).select(
+        F.date_format(F.date_add(F.lit("2024-03-01"), i), "yyyy-MM-dd")
+        .alias("period"),
+        i.alias("x"),
+        (2 * i + 5).alias("y"),
+    )
+    out = cpcv_backtest_paths(df, "period", "x", "y", 6, 2)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" not in plan
+    assert plan.count("BroadcastExchange") == 1
+    rows = out.collect()
+    assert sorted(r["path_id"] for r in rows) == [0, 1, 2, 3, 4]
+    assert all(r["n_rows"] == 90 and r["sse_milli"] == 0 for r in rows)
 
 
 def test_nested_ridge_picks_zero_lambda_on_noiseless_line(spark):

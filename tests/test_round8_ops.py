@@ -141,3 +141,24 @@ def test_incremental_store_branches_agree(spark, monkeypatch):
     )
     assert rows_dir == rows_bucketed
     assert rows_dir, "gate corpus must produce at least one pair"
+
+
+def test_corpus_bytes_walks_partitioned_dataset(spark, tmp_path):
+    """A two-level partitioned documents.parquet is sized by its data
+    files at every depth; Spark's ``.crc`` / ``_SUCCESS`` side files
+    and ``_``/``.`` directories are not counted."""
+    from panelsplit_spark import queries_round8 as r8
+
+    dest = tmp_path / "documents.parquet"
+    spark.range(40).select(
+        (F.col("id") % 2).alias("a"),
+        (F.col("id") % 3).alias("b"),
+        F.col("id").cast("string").alias("text"),
+    ).write.partitionBy("a", "b").parquet(str(dest))
+    (dest / "_temporary").mkdir()
+    (dest / "_temporary" / "part-stale.parquet").write_bytes(b"x" * 999)
+    data = list(dest.glob("a=*/b=*/part-*.parquet"))
+    assert len(data) >= 6
+    assert r8._corpus_bytes(str(tmp_path)) == sum(
+        f.stat().st_size for f in data
+    )

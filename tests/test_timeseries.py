@@ -266,3 +266,12 @@ def test_ivf_probe_sweep_matches_per_probe_ivf_topk(spark):
     for p in (1, 2, 4):
         ref = ivf_topk(emb, qs, k=5, n_cells=4, n_probe=p)
         assert key(sweep[p]) == key(ref), f"probe {p} diverged"
+
+
+def test_ivf_probe_sweep_rejects_empty_probes():
+    """An empty probe list is a caller error, reported before any Spark
+    work (the frames are never touched)."""
+    from panelsplit_spark.operators.similarity import ivf_probe_sweep
+
+    with pytest.raises(ValueError, match="at least one probe"):
+        ivf_probe_sweep(None, None, k=5, n_cells=4, probes=())
