@@ -24,8 +24,9 @@ os.environ["PYTHONPATH"] = _REPO + ":" + os.environ.get("PYTHONPATH", "")
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: distributed panel CV on sf0.001 events — 3 expanding
-    daily folds, per-fold OLS fit (grouped-map pandas UDF), out-of-fold
-    predictions via broadcast models + mapInPandas."""
+    daily folds, per-fold OLS fit from one per-period moment cube
+    (closed form, no Python UDF), out-of-fold predictions as a
+    literal-coefficient projection indexed by ``fold_id``."""
     from pyspark.sql import functions as F
 
     from panelsplit_spark import (

@@ -669,9 +669,19 @@ def cpcv_panel_assign(
     distinct-period collect, then ONE narrow literal-membership explode
     of the fact table with up to C(G,k) memberships per row.
     """
+    return _cpcv_assign(
+        df, period_col, distinct_periods(df, period_col),
+        n_groups, n_test_groups, purge, embargo,
+    )
+
+
+def _cpcv_assign(
+    df, period_col, periods, n_groups, n_test_groups, purge, embargo
+):
+    """:func:`cpcv_panel_assign` over an already-collected sorted
+    period list."""
     from ..plans.fold_spec import cpcv_splits
 
-    periods = distinct_periods(df, period_col)
     n = len(periods)
     splits = cpcv_splits(n, n_groups, n_test_groups, purge, embargo)
     windows = [
@@ -735,8 +745,9 @@ def cpcv_backtest_paths(
     """
     from itertools import combinations
 
-    assign = cpcv_panel_assign(
-        df, period_col, n_groups, n_test_groups, purge, embargo
+    periods = distinct_periods(df, period_col)
+    assign = _cpcv_assign(
+        df, period_col, periods, n_groups, n_test_groups, purge, embargo
     )
     x = F.col(x_col).cast("long")
     y = F.col(y_col).cast("long")
@@ -770,7 +781,6 @@ def cpcv_backtest_paths(
     # group of a period, replayed from the SAME split geometry: the
     # groups are contiguous period-rank blocks, so comparisons against
     # the first period of groups 1..G-1 decide it
-    periods = distinct_periods(df, period_col)
     ptype = df.schema[period_col].dataType
     q, r = divmod(len(periods), n_groups)
     group = F.expr(

@@ -76,12 +76,7 @@ def _ensure_parallelism(df: DataFrame, min_parts: Optional[int] = None
     at real scale the scan supplies the partitions and this never fires.
     """
     sess = df.sparkSession
-    mode = sess.conf.get("spark.panelsplit.dedup.repartition", "auto")
-    if mode == "off":
-        return df
     target = min_parts or min(sess.sparkContext.defaultParallelism, 64)
-    if mode != "auto":
-        return df.repartition(int(mode))
     # Plan-safe parallelism estimate: count source files via the scan's
     # FileIndex (never df.rdd, which forces plan->RDD conversion and
     # defeats AQE). Non-file sources report no files -> leave untouched.

@@ -30,7 +30,6 @@ __all__ = [
     "get_scorer",
     "check_scoring",
     "per_fold_scores",
-    "sql_metric_expr",
     "SCORER_NAMES",
 ]
 
@@ -679,15 +678,6 @@ def metric_agg_expr(name: str, y, p, nan_aware: bool = False):
             F.median(F.abs(y - p))
         )
     return _SQL_METRICS[name](y, p)
-
-
-def sql_metric_expr(name: str, y_col: str, pred_col: str):
-    """Aggregate Column for a SQL-expressible metric, or None if the
-    metric has no single-aggregate form (r2 is decomposed separately in
-    per_fold_scores)."""
-    if name not in _SQL_METRICS:
-        return None
-    return _SQL_METRICS[name](F.col(y_col), F.col(pred_col))
 
 
 def _fastpath_name(metric: Any, metric_kwargs: dict) -> Optional[str]:

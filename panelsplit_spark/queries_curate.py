@@ -653,12 +653,12 @@ def q_stream_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
     would diverge. (Batch chops are pinned by streaming/rolling.
     write_file_batches; the watermark lands mid-hour so the ≤-vs-<
     eviction boundary cannot bite.)"""
-    import os
-
     from .sources.tables import configure, normalize_event_ts
     from .streaming.rolling import (
+        drain,
         ensure_feed_by,
-        stream_shuffle_partitions,
+        memory_sink,
+        replay_feed,
     )
 
     configure(spark)
@@ -676,31 +676,15 @@ def q_stream_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
         "late_data_feed",
         empty_batches=(1,),
     )
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed)
-    )
-    stream = normalize_event_ts(stream)
+    stream = normalize_event_ts(replay_feed(spark, ev.schema, feed))
     agg = (
         stream.withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
     name = "stream_late_data_sink"
-    for q in spark.streams.active:
-        if q.name == name:
-            q.stop()
-    with stream_shuffle_partitions(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name).select(
+    out = drain(spark, name, lambda: memory_sink(agg, name, "append"))
+    return out.select(
         F.unix_micros(F.col("win.start")).alias("win_start_us"),
         "event_type",
         "cnt",
@@ -1000,36 +984,22 @@ def q_stream_decay_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     power of two the counters are exact dyadic doubles, so the oracle
     replays them as batch-indexed weights (¼, ½, 1) with no float
     tolerance."""
-    import os
-
     from .sources.tables import configure, normalize_event_ts
-    from .streaming.rolling import (
-        ensure_feed_by,
-        stream_decayed_counts,
-        stream_shuffle_partitions,
-    )
+    from .streaming.rolling import drain, feed_stream, stream_decayed_counts
 
     configure(spark)
     ev = load_table(spark, sf_dir, "events")
-    feed = ensure_feed_by(
-        ev, F.col("event_id") % 3, 3, "decay_feed"
-    )
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed)
-    )
-    stream = normalize_event_ts(stream)
     name = "stream_decay_sink"
-    for q in spark.streams.active:
-        if q.name == name:
-            q.stop()
-    with stream_shuffle_partitions(spark):
-        q, get_state = stream_decayed_counts(
-            stream, "user_id", decay=0.5, query_name=name
+
+    def start():
+        stream = feed_stream(ev, F.col("event_id") % 3, 3, "decay_feed")
+        return stream_decayed_counts(
+            normalize_event_ts(stream), "user_id", decay=0.5,
+            query_name=name,
         )
-        q.awaitTermination()
-    return get_state().select("user_id", "c").orderBy("user_id")
+
+    state = drain(spark, name, start)
+    return state.select("user_id", "c").orderBy("user_id")
 
 
 _SQL_STREAM_DECAY = """
@@ -2074,33 +2044,17 @@ def q_stream_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (streaming/rolling.stream_near_dup_admit). State is the distinct
     band-key index of admitted docs. The oracle replays the batch
     chain as CTEs over the same md5 universal-hash signatures."""
-    import os
-
     from .sources.tables import configure
-    from .streaming.rolling import (
-        ensure_feed_by,
-        stream_near_dup_admit,
-        stream_shuffle_partitions,
-    )
+    from .streaming.rolling import drain, feed_stream, stream_near_dup_admit
 
     configure(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    feed = ensure_feed_by(
-        docs, F.col("doc_id") % 3, 3, "near_dup_feed"
-    )
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed)
-    )
     name = "stream_near_dup_sink"
-    for q in spark.streams.active:
-        if q.name == name:
-            q.stop()
-    with stream_shuffle_partitions(spark):
-        q, get_admitted = stream_near_dup_admit(stream, query_name=name)
-        q.awaitTermination()
-    return get_admitted().orderBy("doc_id")
+    admitted = drain(spark, name, lambda: stream_near_dup_admit(
+        feed_stream(docs, F.col("doc_id") % 3, 3, "near_dup_feed"),
+        query_name=name,
+    ))
+    return admitted.orderBy("doc_id")
 
 
 def _sql_stream_near_dup() -> str:

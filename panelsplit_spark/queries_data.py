@@ -955,12 +955,14 @@ def q_stream_hourly_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     availableNow trigger draining into a memory sink. Hash-checked
     against the equivalent batch SQL — streaming results must equal the
     batch computation on the same closed input."""
-    import os
-
-    from .streaming.rolling import windowed_panel_features
+    from .streaming.rolling import (
+        drain,
+        file_stream,
+        memory_sink,
+        windowed_panel_features,
+    )
 
     configure(spark)
-    from .streaming.rolling import file_stream
 
     # complete-mode windowed agg: counters are a commutative monoid, so
     # ANY chop of the feed drains to the same state (key_col re-chop
@@ -977,21 +979,8 @@ def q_stream_hourly_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream, window="1 hour", watermark="2 hours"
     )
     name = "stream_hourly_features_sink"
-    for q in spark.streams.active:
-        if q.name == name:
-            q.stop()
-    from .streaming.rolling import stream_shuffle_partitions
-
-    with stream_shuffle_partitions(spark):
-        q = (
-            feats.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name).select(
+    out = drain(spark, name, lambda: memory_sink(feats, name, "complete"))
+    return out.select(
         F.unix_micros("window_start").alias("win_start_us"),
         "user_id",
         "n",

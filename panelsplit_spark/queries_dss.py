@@ -545,9 +545,9 @@ def q_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate, which is the oracle."""
     from .queries_data import SESSION_GAP_S
     from .sources.tables import configure, normalize_event_ts
+    from .streaming.rolling import drain, file_stream, memory_sink
 
     configure(spark)
-    from .streaming.rolling import file_stream
 
     # append-mode watermark eviction is batch-equal only under
     # event-time-monotone arrival: invariance re-chop is contiguous
@@ -570,21 +570,8 @@ def q_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     name = "stream_session_window_sink"
-    for q in spark.streams.active:
-        if q.name == name:
-            q.stop()
-    from .streaming.rolling import stream_shuffle_partitions
-
-    with stream_shuffle_partitions(spark):
-        q = (
-            sess.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name).select(
+    out = drain(spark, name, lambda: memory_sink(sess, name, "complete"))
+    return out.select(
         "user_id",
         F.unix_micros(F.col("session_window.start")).alias("start_us"),
         "n_events",
@@ -741,12 +728,14 @@ def q_stream_online_linreg(spark: SparkSession, sf_dir: str) -> DataFrame:
     (streaming/rolling.stream_online_linreg)."""
     from .sources.tables import configure, normalize_event_ts
     from .streaming.rolling import (
+        drain,
+        file_stream,
+        memory_sink,
         stream_online_linreg,
-        stream_shuffle_partitions,
+        stream_parts_for,
     )
 
     configure(spark)
-    from .streaming.rolling import file_stream
 
     # the online recursion's per-row output depends on the processing
     # ORDER (each prediction uses prior-row moments): invariance re-chop
@@ -764,22 +753,12 @@ def q_stream_online_linreg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     scored = stream_online_linreg(feats)
     name = "stream_online_linreg_sink"
-    for q in spark.streams.active:
-        if q.name == name:
-            q.stop()
-    from .streaming.rolling import stream_parts_for
-
     n_feed = load_table(spark, sf_dir, "events").count()
-    with stream_shuffle_partitions(spark, stream_parts_for(spark, n_feed)):
-        q = (
-            scored.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name).select(
+    out = drain(
+        spark, name, lambda: memory_sink(scored, name, "update"),
+        parts=stream_parts_for(spark, n_feed),
+    )
+    return out.select(
         "event_id",
         # operator emits NaN for not-yet-fittable rows (pandas float
         # column); normalize to NULL to match the SQL oracle

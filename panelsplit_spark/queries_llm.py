@@ -733,16 +733,10 @@ def q_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     latest-wins, ONE keyed shuffle per batch). On a closed availableNow
     drain the table must equal the batch latest-wins query — the
     oracle."""
-    import os
-
     from .sources.tables import configure
-    from .streaming.rolling import (
-        stream_apply_changes,
-        stream_shuffle_partitions,
-    )
+    from .streaming.rolling import drain, file_stream, stream_apply_changes
 
     configure(spark)
-    from .streaming.rolling import file_stream
 
     # highest-version-wins merge with retained tombstones: chop-
     # independent by construction, ANY key re-chop drains equal
@@ -756,18 +750,13 @@ def q_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("_op"),
     )
     name = "stream_cdc_state"
-    for q in spark.streams.active:
-        if q.name == name:
-            q.stop()
-    with stream_shuffle_partitions(spark):
-        q, get_state = stream_apply_changes(
-            changes,
-            value_cols=["value_cents"],
-            keys=["user_id"],
-            query_name=name,
-        )
-        q.awaitTermination()
-    return get_state().orderBy("user_id")
+    state = drain(spark, name, lambda: stream_apply_changes(
+        changes,
+        value_cols=["value_cents"],
+        keys=["user_id"],
+        query_name=name,
+    ))
+    return state.orderBy("user_id")
 
 
 _SQL_STREAM_CDC = """
@@ -1128,16 +1117,10 @@ def q_stream_ivm_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge). Additive measures ⇒ the view is independent of micro-batch
     chopping; on a closed drain it must equal the batch aggregate —
     the oracle. Per-batch cost is group-cardinality, never history."""
-    import os
-
     from .sources.tables import configure
-    from .streaming.rolling import (
-        stream_incremental_agg,
-        stream_shuffle_partitions,
-    )
+    from .streaming.rolling import drain, file_stream, stream_incremental_agg
 
     configure(spark)
-    from .streaming.rolling import file_stream
 
     # additive delta-merge view: ANY key re-chop drains equal
     stream = file_stream(spark, sf_dir, "events", key_col="event_id")
@@ -1148,21 +1131,16 @@ def q_stream_ivm_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("cents"),
     )
     name = "stream_ivm_view"
-    for q in spark.streams.active:
-        if q.name == name:
-            q.stop()
-    with stream_shuffle_partitions(spark):
-        q, get_view = stream_incremental_agg(
-            changes,
-            keys=["event_type", "day"],
-            sum_exprs={
-                "n_events": F.count(F.lit(1)),
-                "sum_cents": F.sum("cents"),
-            },
-            query_name=name,
-        )
-        q.awaitTermination()
-    return get_view().orderBy("event_type", "day")
+    view = drain(spark, name, lambda: stream_incremental_agg(
+        changes,
+        keys=["event_type", "day"],
+        sum_exprs={
+            "n_events": F.count(F.lit(1)),
+            "sum_cents": F.sum("cents"),
+        },
+        query_name=name,
+    ))
+    return view.orderBy("event_type", "day")
 
 
 _SQL_STREAM_IVM = """

@@ -479,33 +479,22 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet → stateful ``dropDuplicates`` on (user_id, event_type) →
     availableNow drain to a memory sink. On a closed input the emitted
     set must equal batch ``SELECT DISTINCT`` — which is the oracle."""
-    import os
-
     from .sources.tables import configure
-    from .streaming.rolling import stream_distinct
+    from .streaming.rolling import (
+        drain,
+        file_stream,
+        memory_sink,
+        stream_distinct,
+    )
 
     configure(spark)
-    from .streaming.rolling import file_stream
 
     # distinct = set-union semilattice: ANY key re-chop drains equal
     stream = file_stream(spark, sf_dir, "events", key_col="event_id")
     out = stream_distinct(stream, ["user_id", "event_type"])
     name = "stream_dedup_sink"
-    for q in spark.streams.active:
-        if q.name == name:
-            q.stop()
-    from .streaming.rolling import stream_shuffle_partitions
-
-    with stream_shuffle_partitions(spark):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name).select("user_id", "event_type")
+    drained = drain(spark, name, lambda: memory_sink(out, name, "append"))
+    return drained.select("user_id", "event_type")
 
 
 _SQL_STREAM_DEDUP = """
@@ -975,47 +964,34 @@ def q_stream_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Arrow-batched mapInPandas). On a closed input the scored stream
     must equal the batch OOF predictions — the oracle is the same SQL
     regr_slope/intercept closed form that gates cv_ols_oof."""
-    import os
-
     from .estimators import LinearRegression
     from .operators.application import cross_val_fit
     from .queries import _events_cv
-    from .sources.tables import configure
-    from .streaming.rolling import stream_score
+    from .sources.tables import configure, normalize_event_ts
+    from .streaming.rolling import (
+        drain,
+        file_stream,
+        memory_sink,
+        stream_score,
+    )
 
     ev, ps = _events_cv(spark, sf_dir)
     models = cross_val_fit(LinearRegression(), ev, ["hod"], "value", ps)
 
     configure(spark)
-    from .streaming.rolling import file_stream
-
     # stateless per-row scoring: ANY key re-chop drains equal
     stream = file_stream(spark, sf_dir, "events", key_col="event_id")
-    from .sources.tables import normalize_event_ts
-
     stream = normalize_event_ts(stream)
     stream = stream.withColumn(
         "period", F.date_format("ts", "yyyy-MM-dd")
     ).withColumn("hod", F.hour("ts").cast("double"))
 
-    scored = stream_score(stream, models, ["hod"], ps)
+    scored = stream_score(stream, models, ["hod"], ps).select(
+        "event_id", "fold_id", "prediction"
+    )
     name = "stream_score_sink"
-    for q in spark.streams.active:
-        if q.name == name:
-            q.stop()
-    from .streaming.rolling import stream_shuffle_partitions
-
-    with stream_shuffle_partitions(spark):
-        q = (
-            scored.select("event_id", "fold_id", "prediction")
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name).select(
+    out = drain(spark, name, lambda: memory_sink(scored, name, "append"))
+    return out.select(
         "event_id",
         F.col("fold_id").cast("long").alias("fold_id"),
         F.round("prediction", 6).alias("pred"),

@@ -480,14 +480,12 @@ def q_stream_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output: ``(q_bp, k_rank, est_cents)`` — the histogram estimate
     (lower bin edge); exact within-bin resolution is the batch
     operator's job (rel_quantile_sketch)."""
-    import os
-
     from .sources.tables import configure
     from .streaming.rolling import (
         chop_n,
+        drain,
+        feed_stream,
         stream_histogram_quantiles,
-        stream_shuffle_partitions,
-        ensure_feed_by,
     )
 
     configure(spark)
@@ -495,39 +493,12 @@ def q_stream_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         F.round(F.col("value") * 100).cast("long").alias("cents"),
     )
-
     name = "stream_quantile_sink"
-    hist = None
-    for _attempt in range(2):
-        for q in spark.streams.active:
-            if q.name == name:
-                q.stop()
-        # fresh dir per invocation: a fixed feed path intermittently
-        # drained zero batches when a long bench session re-invoked the
-        # gate (same hardening as stream_fingerprint / stream_auc)
-        feed = ensure_feed_by(
-            ev,
-            F.col("event_id") % chop_n(SQ_BATCHES),
-            chop_n(SQ_BATCHES),
-            "quantile_feed",
-        )
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(feed)
-        )
-        with stream_shuffle_partitions(spark):
-            q, get_hist = stream_histogram_quantiles(
-                stream, "cents", SQ_BIN_W, query_name=name
-            )
-            q.awaitTermination()
-        hist = get_hist()
-        if hist is not None:
-            break
-    if hist is None:
-        raise RuntimeError(
-            "stream_quantile: drain processed zero non-empty batches twice"
-        )
+    n = chop_n(SQ_BATCHES)
+    hist = drain(spark, name, lambda: stream_histogram_quantiles(
+        feed_stream(ev, F.col("event_id") % n, n, "quantile_feed"),
+        "cents", SQ_BIN_W, query_name=name,
+    ))
     wb = Window.orderBy("bin").rowsBetween(Window.unboundedPreceding, 0)
     h2 = hist.withColumn("cum", F.sum("cnt").over(wb))
     tot = hist.agg(F.sum("cnt").alias("n"))

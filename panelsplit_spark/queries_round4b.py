@@ -667,14 +667,12 @@ def q_stream_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch fingerprint of the whole table — which is exactly what the
     SQL oracle computes. The online form of 'keep a continuously-true
     table signature without rescanning'."""
-    import os
-
     from .sources.tables import configure
     from .streaming.rolling import (
         chop_n,
-        stream_shuffle_partitions,
+        drain,
+        feed_stream,
         stream_table_fingerprint,
-        ensure_feed_by,
     )
 
     configure(spark)
@@ -685,33 +683,12 @@ def q_stream_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     key = F.col("r1").cast("long")
     name = "stream_fingerprint_sink"
-    for attempt in range(2):
-        for q in spark.streams.active:
-            if q.name == name:
-                q.stop()
-        feed = ensure_feed_by(
-            ev,
-            key % chop_n(SFP_BATCHES),
-            chop_n(SFP_BATCHES),
-            "fingerprint_feed",
-        )
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(feed)
-        )
-        with stream_shuffle_partitions(spark):
-            q, get_fp = stream_table_fingerprint(
-                stream, ["r1", "r2", "r3"], n_buckets=SFP_BUCKETS,
-                query_name=name,
-            )
-            q.awaitTermination()
-        state = get_fp()
-        if state is not None:
-            return state.orderBy("bucket")
-    raise RuntimeError(
-        "stream_fingerprint: drain processed zero non-empty batches twice"
-    )
+    n = chop_n(SFP_BATCHES)
+    state = drain(spark, name, lambda: stream_table_fingerprint(
+        feed_stream(ev, key % n, n, "fingerprint_feed"),
+        ["r1", "r2", "r3"], n_buckets=SFP_BUCKETS, query_name=name,
+    ))
+    return state.orderBy("bucket")
 
 
 _SQL_STREAM_FINGERPRINT = f"""
@@ -748,15 +725,8 @@ def q_stream_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the full feed, which is exactly what the batch SQL oracle
     checks. A global rank statistic kept online by making its
     sufficient state additive."""
-    import os
-
     from .sources.tables import configure
-    from .streaming.rolling import (
-        chop_n,
-        stream_auc,
-        stream_shuffle_partitions,
-        ensure_feed_by,
-    )
+    from .streaming.rolling import chop_n, drain, feed_stream, stream_auc
 
     configure(spark)
     od = load_table(spark, sf_dir, "orders").select(
@@ -768,31 +738,11 @@ def q_stream_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("y"),
     )
     name = "stream_auc_sink"
-    for attempt in range(2):
-        for q in spark.streams.active:
-            if q.name == name:
-                q.stop()
-        feed = ensure_feed_by(
-            od,
-            F.col("k") % chop_n(SAUC_BATCHES),
-            chop_n(SAUC_BATCHES),
-            "auc_feed",
-            drop=("k",),
-        )
-        stream = (
-            spark.readStream.schema(od.drop("k").schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(feed)
-        )
-        with stream_shuffle_partitions(spark):
-            q, get_auc = stream_auc(stream, "cents", "y", query_name=name)
-            q.awaitTermination()
-        try:
-            return get_auc()
-        except Exception:
-            if attempt == 1:
-                raise
-    raise RuntimeError("stream_auc: drain failed twice")
+    n = chop_n(SAUC_BATCHES)
+    return drain(spark, name, lambda: stream_auc(
+        feed_stream(od, F.col("k") % n, n, "auc_feed", drop=("k",)),
+        "cents", "y", query_name=name,
+    ))
 
 
 # the batch oracle: identical to _SQL_AUC_PRICE — the streaming drain

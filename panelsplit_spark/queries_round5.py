@@ -1262,9 +1262,9 @@ def q_stream_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .sources.tables import configure
     from .streaming.rolling import (
         chop_n,
+        drain,
+        feed_stream,
         stream_hll_registers,
-        stream_shuffle_partitions,
-        ensure_feed_by,
     )
 
     configure(spark)
@@ -1272,39 +1272,19 @@ def q_stream_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "event_type", "user_id"
     )
     name = "stream_hll_sink"
-    for attempt in range(2):
-        for q in spark.streams.active:
-            if q.name == name:
-                q.stop()
-        feed = ensure_feed_by(
-            ev,
-            F.col("event_id") % chop_n(SHLL_BATCHES),
-            chop_n(SHLL_BATCHES),
-            "hll_feed",
-        )
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(feed)
-        )
-        with stream_shuffle_partitions(spark):
-            q, get_regs = stream_hll_registers(
-                stream, "user_id", ["event_type"], p=HLL_P,
-                salt=HLL_SALT, query_name=name,
-            )
-            q.awaitTermination()
-        regs = get_regs()
-        if regs is not None:
-            est = hll_estimate(regs, group_by=["event_type"], p=HLL_P)
-            exact = ev.groupBy("event_type").agg(
-                F.countDistinct("user_id").alias("exact_distinct")
-            )
-            return est.join(exact, "event_type").select(
-                "event_type", "exact_distinct", "occupied", "max_m",
-                "s_int", "hll_est",
-            )
-    raise RuntimeError(
-        "stream_hll: drain processed zero non-empty batches twice"
+    n = chop_n(SHLL_BATCHES)
+    regs = drain(spark, name, lambda: stream_hll_registers(
+        feed_stream(ev, F.col("event_id") % n, n, "hll_feed"),
+        "user_id", ["event_type"], p=HLL_P, salt=HLL_SALT,
+        query_name=name,
+    ))
+    est = hll_estimate(regs, group_by=["event_type"], p=HLL_P)
+    exact = ev.groupBy("event_type").agg(
+        F.countDistinct("user_id").alias("exact_distinct")
+    )
+    return est.join(exact, "event_type").select(
+        "event_type", "exact_distinct", "occupied", "max_m",
+        "s_int", "hll_est",
     )
 
 

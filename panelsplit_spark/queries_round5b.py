@@ -871,9 +871,9 @@ def q_stream_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .sources.tables import configure
     from .streaming.rolling import (
         chop_n,
-        stream_shuffle_partitions,
+        drain,
+        feed_stream,
         stream_weighted_reservoir,
-        ensure_feed_by,
     )
 
     configure(spark)
@@ -881,34 +881,13 @@ def q_stream_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "n_chars"
     )
     name = "stream_reservoir_sink"
-    for attempt in range(2):
-        for q in spark.streams.active:
-            if q.name == name:
-                q.stop()
-        feed = ensure_feed_by(
-            docs,
-            F.col("doc_id") % chop_n(_SRES_BATCHES),
-            chop_n(_SRES_BATCHES),
-            "reservoir_feed",
-        )
-        stream = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(feed)
-        )
-        with stream_shuffle_partitions(spark):
-            q, get_sample = stream_weighted_reservoir(
-                stream, "doc_id", "n_chars", _RES_K,
-                salt=_RES_SALT, query_name=name,
-            )
-            q.awaitTermination()
-        sample = get_sample()
-        if sample is not None:
-            return sample.orderBy(
-                F.col("score_micro").desc(), F.col("doc_id").asc()
-            )
-    raise RuntimeError(
-        "stream_reservoir: drain processed zero non-empty batches twice"
+    n = chop_n(_SRES_BATCHES)
+    sample = drain(spark, name, lambda: stream_weighted_reservoir(
+        feed_stream(docs, F.col("doc_id") % n, n, "reservoir_feed"),
+        "doc_id", "n_chars", _RES_K, salt=_RES_SALT, query_name=name,
+    ))
+    return sample.orderBy(
+        F.col("score_micro").desc(), F.col("doc_id").asc()
     )
 
 
@@ -1115,9 +1094,9 @@ def q_stream_mde(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .sources.tables import configure
     from .streaming.rolling import (
         chop_n,
+        drain,
+        feed_stream,
         stream_mde_moments,
-        stream_shuffle_partitions,
-        ensure_feed_by,
     )
 
     configure(spark)
@@ -1130,33 +1109,12 @@ def q_stream_mde(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("treated"),
     )
     name = "stream_mde_sink"
-    for attempt in range(2):
-        for q in spark.streams.active:
-            if q.name == name:
-                q.stop()
-        feed = ensure_feed_by(
-            ev,
-            F.col("event_id") % chop_n(_SMDE_BATCHES),
-            chop_n(_SMDE_BATCHES),
-            "mde_feed",
-        )
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(feed)
-        )
-        with stream_shuffle_partitions(spark):
-            q, get_moments = stream_mde_moments(
-                stream, ["event_type"], "cents", "treated",
-                query_name=name,
-            )
-            q.awaitTermination()
-        moments = get_moments()
-        if moments is not None:
-            return mde_from_moments(moments, ["event_type"])
-    raise RuntimeError(
-        "stream_mde: drain processed zero non-empty batches twice"
-    )
+    n = chop_n(_SMDE_BATCHES)
+    moments = drain(spark, name, lambda: stream_mde_moments(
+        feed_stream(ev, F.col("event_id") % n, n, "mde_feed"),
+        ["event_type"], "cents", "treated", query_name=name,
+    ))
+    return mde_from_moments(moments, ["event_type"])
 
 
 # ======================================================================
@@ -2074,9 +2032,9 @@ def q_stream_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .sources.tables import configure
     from .streaming.rolling import (
         chop_n,
+        drain,
+        feed_stream,
         stream_ks_counts,
-        stream_shuffle_partitions,
-        ensure_feed_by,
     )
 
     configure(spark)
@@ -2086,32 +2044,12 @@ def q_stream_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("value") * 100).cast("long").alias("cents"),
     ).where(F.col("cents").isNotNull())
     name = "stream_ks_sink"
-    for attempt in range(2):
-        for q in spark.streams.active:
-            if q.name == name:
-                q.stop()
-        feed = ensure_feed_by(
-            ev,
-            F.col("event_id") % chop_n(_SKS_BATCHES),
-            chop_n(_SKS_BATCHES),
-            "ks_feed",
-        )
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(feed)
-        )
-        with stream_shuffle_partitions(spark):
-            q, get_counts = stream_ks_counts(
-                stream, "event_type", "cents", query_name=name
-            )
-            q.awaitTermination()
-        counts = get_counts()
-        if counts is not None:
-            return ks_from_counts(counts)
-    raise RuntimeError(
-        "stream_ks: drain processed zero non-empty batches twice"
-    )
+    n = chop_n(_SKS_BATCHES)
+    counts = drain(spark, name, lambda: stream_ks_counts(
+        feed_stream(ev, F.col("event_id") % n, n, "ks_feed"),
+        "event_type", "cents", query_name=name,
+    ))
+    return ks_from_counts(counts)
 
 
 # ======================================================================
@@ -2415,9 +2353,9 @@ def q_stream_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .sources.tables import configure
     from .streaming.rolling import (
         chop_n,
+        drain,
+        feed_stream,
         stream_ks_counts,
-        stream_shuffle_partitions,
-        ensure_feed_by,
     )
 
     configure(spark)
@@ -2427,32 +2365,12 @@ def q_stream_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
     )
     name = "stream_gini_sink"
-    for attempt in range(2):
-        for q in spark.streams.active:
-            if q.name == name:
-                q.stop()
-        feed = ensure_feed_by(
-            orders,
-            F.col("o_orderkey") % chop_n(_SGINI_BATCHES),
-            chop_n(_SGINI_BATCHES),
-            "gini_feed",
-        )
-        stream = (
-            spark.readStream.schema(orders.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(feed)
-        )
-        with stream_shuffle_partitions(spark):
-            q, get_counts = stream_ks_counts(
-                stream, "segment", "cents", query_name=name
-            )
-            q.awaitTermination()
-        counts = get_counts()
-        if counts is not None:
-            return gini_from_counts(counts)
-    raise RuntimeError(
-        "stream_gini: drain processed zero non-empty batches twice"
-    )
+    n = chop_n(_SGINI_BATCHES)
+    counts = drain(spark, name, lambda: stream_ks_counts(
+        feed_stream(orders, F.col("o_orderkey") % n, n, "gini_feed"),
+        "segment", "cents", query_name=name,
+    ))
+    return gini_from_counts(counts)
 
 
 # ======================================================================

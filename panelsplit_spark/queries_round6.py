@@ -116,9 +116,9 @@ def q_stream_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .sources.tables import configure
     from .streaming.rolling import (
         chop_n,
+        drain,
+        feed_stream,
         stream_scd2_versions,
-        stream_shuffle_partitions,
-        ensure_feed_by,
     )
 
     configure(spark)
@@ -133,43 +133,22 @@ def q_stream_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     name = "stream_scd2_sink"
-    for attempt in range(2):
-        for q in spark.streams.active:
-            if q.name == name:
-                q.stop()
-        feed = ensure_feed_by(
-            ev,
-            F.col("event_id") % chop_n(_SCD2_BATCHES),
-            chop_n(_SCD2_BATCHES),
-            "scd2_feed",
-        )
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(feed)
-        )
-        with stream_shuffle_partitions(spark):
-            q, get_versions = stream_scd2_versions(
-                stream,
-                keys=["user_id"],
-                version_cols=["event_id", "ts"],
-                payload_cols=["cents"],
-                query_name=name,
-            )
-            q.awaitTermination()
-        versions = get_versions()
-        if versions is not None:
-            w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-            return versions.select(
-                "user_id",
-                "event_id",
-                F.unix_micros("ts").alias("valid_from_us"),
-                F.unix_micros(F.lead("ts").over(w)).alias("valid_to_us"),
-                F.col("cents").alias("value_cents"),
-                (F.lead("ts").over(w).isNull()).alias("is_current"),
-            )
-    raise RuntimeError(
-        "stream_scd2: drain processed zero non-empty batches twice"
+    n = chop_n(_SCD2_BATCHES)
+    versions = drain(spark, name, lambda: stream_scd2_versions(
+        feed_stream(ev, F.col("event_id") % n, n, "scd2_feed"),
+        keys=["user_id"],
+        version_cols=["event_id", "ts"],
+        payload_cols=["cents"],
+        query_name=name,
+    ))
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    return versions.select(
+        "user_id",
+        "event_id",
+        F.unix_micros("ts").alias("valid_from_us"),
+        F.unix_micros(F.lead("ts").over(w)).alias("valid_to_us"),
+        F.col("cents").alias("value_cents"),
+        (F.lead("ts").over(w).isNull()).alias("is_current"),
     )
 
 
@@ -1038,9 +1017,9 @@ def q_stream_bitmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .sources.tables import configure
     from .streaming.rolling import (
         chop_n,
+        drain,
+        feed_stream,
         stream_bitmap_words,
-        stream_shuffle_partitions,
-        ensure_feed_by,
     )
 
     configure(spark)
@@ -1048,36 +1027,14 @@ def q_stream_bitmap(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "event_type", "user_id"
     )
     name = "stream_bitmap_sink"
-    for attempt in range(2):
-        for q in spark.streams.active:
-            if q.name == name:
-                q.stop()
-        feed = ensure_feed_by(
-            ev,
-            F.col("event_id") % chop_n(_SBM_BATCHES),
-            chop_n(_SBM_BATCHES),
-            "bitmap_feed",
-        )
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(feed)
-        )
-        with stream_shuffle_partitions(spark):
-            q, get_masks = stream_bitmap_words(
-                stream, "user_id", ["event_type"], query_name=name
-            )
-            q.awaitTermination()
-        masks = get_masks()
-        if masks is not None:
-            return masks.groupBy("event_type").agg(
-                F.count(F.lit(1)).alias("n_words"),
-                F.sum(F.expr("bit_count(mask)"))
-                .cast("long")
-                .alias("n_users"),
-            )
-    raise RuntimeError(
-        "stream_bitmap: drain processed zero non-empty batches twice"
+    n = chop_n(_SBM_BATCHES)
+    masks = drain(spark, name, lambda: stream_bitmap_words(
+        feed_stream(ev, F.col("event_id") % n, n, "bitmap_feed"),
+        "user_id", ["event_type"], query_name=name,
+    ))
+    return masks.groupBy("event_type").agg(
+        F.count(F.lit(1)).alias("n_words"),
+        F.sum(F.expr("bit_count(mask)")).cast("long").alias("n_users"),
     )
 
 
@@ -1663,9 +1620,9 @@ def q_stream_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .sources.tables import configure, normalize_event_ts
     from .streaming.rolling import (
         chop_n,
+        drain,
+        feed_stream,
         stream_ks_counts,
-        stream_shuffle_partitions,
-        ensure_feed_by,
     )
 
     configure(spark)
@@ -1682,63 +1639,43 @@ def q_stream_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.ascii(F.substring("event_type", 1, 1)).alias("code"),
     )
     name = "stream_psi_sink"
-    for attempt in range(2):
-        for q in spark.streams.active:
-            if q.name == name:
-                q.stop()
-        feed = ensure_feed_by(
-            ev,
-            F.col("event_id") % chop_n(_SPSI_BATCHES),
-            chop_n(_SPSI_BATCHES),
-            "psi_feed",
+    n = chop_n(_SPSI_BATCHES)
+    counts = drain(spark, name, lambda: stream_ks_counts(
+        feed_stream(ev, F.col("event_id") % n, n, "psi_feed"),
+        "arm", "code", query_name=name,
+    ))
+    ref = counts.where(F.col("segment") == "ref").select(
+        F.col("v").alias("code"), F.col("c").alias("c_ref")
+    )
+    cur = counts.where(F.col("segment") == "cur").select(
+        F.col("v").alias("code"), F.col("c").alias("c_cur")
+    )
+    j = ref.join(cur, "code")
+    tot = j.groupBy().agg(
+        F.sum("c_ref").alias("n_ref"),
+        F.sum("c_cur").alias("n_cur"),
+    )
+    term = F.round(
+        (
+            F.col("c_cur").cast("double")
+            / F.col("n_cur").cast("double")
+            - F.col("c_ref").cast("double")
+            / F.col("n_ref").cast("double")
         )
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(feed)
+        * F.log(
+            (F.col("c_cur") * F.col("n_ref")).cast("double")
+            / (F.col("c_ref") * F.col("n_cur")).cast("double")
         )
-        with stream_shuffle_partitions(spark):
-            q, get_counts = stream_ks_counts(
-                stream, "arm", "code", query_name=name
-            )
-            q.awaitTermination()
-        counts = get_counts()
-        if counts is not None:
-            ref = counts.where(F.col("segment") == "ref").select(
-                F.col("v").alias("code"), F.col("c").alias("c_ref")
-            )
-            cur = counts.where(F.col("segment") == "cur").select(
-                F.col("v").alias("code"), F.col("c").alias("c_cur")
-            )
-            j = ref.join(cur, "code")
-            tot = j.groupBy().agg(
-                F.sum("c_ref").alias("n_ref"),
-                F.sum("c_cur").alias("n_cur"),
-            )
-            term = F.round(
-                (
-                    F.col("c_cur").cast("double")
-                    / F.col("n_cur").cast("double")
-                    - F.col("c_ref").cast("double")
-                    / F.col("n_ref").cast("double")
-                )
-                * F.log(
-                    (F.col("c_cur") * F.col("n_ref")).cast("double")
-                    / (F.col("c_ref") * F.col("n_cur")).cast("double")
-                )
-                * F.lit(1000000000)
-            ).cast("long")
-            return (
-                j.crossJoin(F.broadcast(tot))
-                .select(term.alias("term"))
-                .groupBy()
-                .agg(
-                    F.count(F.lit(1)).alias("n_categories"),
-                    F.sum("term").alias("psi_nano"),
-                )
-            )
-    raise RuntimeError(
-        "stream_psi: drain processed zero non-empty batches twice"
+        * F.lit(1000000000)
+    ).cast("long")
+    return (
+        j.crossJoin(F.broadcast(tot))
+        .select(term.alias("term"))
+        .groupBy()
+        .agg(
+            F.count(F.lit(1)).alias("n_categories"),
+            F.sum("term").alias("psi_nano"),
+        )
     )
 
 

@@ -43,9 +43,9 @@ def q_stream_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .sources.tables import configure
     from .streaming.rolling import (
         chop_n,
+        drain,
+        feed_stream,
         stream_ks_counts,
-        stream_shuffle_partitions,
-        ensure_feed_by,
     )
 
     configure(spark)
@@ -68,59 +68,41 @@ def q_stream_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-scan, measured 18 s at sf1 back then) is a pure extra
     # materialization
     name = "stream_benford_sink"
-    for attempt in range(2):
-        for q in spark.streams.active:
-            if q.name == name:
-                q.stop()
-        feed = ensure_feed_by(
-            li,
-            F.col("k") % chop_n(_SBEN_BATCHES),
-            chop_n(_SBEN_BATCHES),
-            "benford_feed",
+    n = chop_n(_SBEN_BATCHES)
+    counts = drain(spark, name, lambda: stream_ks_counts(
+        feed_stream(li, F.col("k") % n, n, "benford_feed"),
+        "seg", "digit", query_name=name,
+    ))
+    exp = spark.createDataFrame(
+        [(k, v) for k, v in sorted(BENFORD_PPM.items())],
+        "digit long, expected_ppm long",
+    )
+    c = counts.select(
+        F.col("v").alias("digit"), F.col("c").alias("cnt")
+    )
+    tot = c.groupBy().agg(F.sum("cnt").alias("n_values"))
+    return (
+        exp.join(c, "digit", "left")
+        .select(
+            "digit",
+            F.coalesce("cnt", F.lit(0)).alias("cnt"),
+            "expected_ppm",
         )
-        stream = (
-            spark.readStream.schema(li.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(feed)
+        .crossJoin(F.broadcast(tot))
+        .select(
+            "digit",
+            "n_values",
+            F.expr("(cnt * 1000000) div n_values").alias(
+                "observed_ppm"
+            ),
+            "expected_ppm",
+            (
+                F.expr("(cnt * 1000000) div n_values")
+                - F.col("expected_ppm")
+            ).alias("dev_ppm"),
         )
-        with stream_shuffle_partitions(spark):
-            q, get_counts = stream_ks_counts(
-                stream, "seg", "digit", query_name=name
-            )
-            q.awaitTermination()
-        counts = get_counts()
-        if counts is not None:
-            exp = spark.createDataFrame(
-                [(k, v) for k, v in sorted(BENFORD_PPM.items())],
-                "digit long, expected_ppm long",
-            )
-            c = counts.select(
-                F.col("v").alias("digit"), F.col("c").alias("cnt")
-            )
-            tot = c.groupBy().agg(F.sum("cnt").alias("n_values"))
-            return (
-                exp.join(c, "digit", "left")
-                .select(
-                    "digit",
-                    F.coalesce("cnt", F.lit(0)).alias("cnt"),
-                    "expected_ppm",
-                )
-                .crossJoin(F.broadcast(tot))
-                .select(
-                    "digit",
-                    "n_values",
-                    F.expr("(cnt * 1000000) div n_values").alias(
-                        "observed_ppm"
-                    ),
-                    "expected_ppm",
-                    (
-                        F.expr("(cnt * 1000000) div n_values")
-                        - F.col("expected_ppm")
-                    ).alias("dev_ppm"),
-                )
-                .orderBy("digit")
-            )
-    raise RuntimeError("stream_benford: drained state unavailable")
+        .orderBy("digit")
+    )
 
 
 # the batch Benford oracle applies verbatim to the drained state
@@ -163,9 +145,9 @@ def q_stream_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .sources.tables import configure
     from .streaming.rolling import (
         chop_n,
+        drain,
+        feed_stream,
         stream_keyed_min,
-        stream_shuffle_partitions,
-        ensure_feed_by,
     )
 
     configure(spark)
@@ -197,50 +179,34 @@ def q_stream_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     name = "stream_minhash_sink"
-    for attempt in range(2):
-        for q in spark.streams.active:
-            if q.name == name:
-                q.stop()
-        # the feed carries the 1× (seg, base-hash) rows; the 12-way
-        # universal-hash stack runs INSIDE the stream (writing the
-        # stacked rows would 12× the feed I/O for pure arithmetic)
-        feed = ensure_feed_by(
-            sh,
-            F.col("h") % chop_n(_SMH_BATCHES),
-            chop_n(_SMH_BATCHES),
-            "minhash_feed",
+    n = chop_n(_SMH_BATCHES)
+    # the feed carries the 1× (seg, base-hash) rows; the 12-way
+    # universal-hash stack runs INSIDE the stream (writing the stacked
+    # rows would 12× the feed I/O for pure arithmetic)
+    sig = drain(spark, name, lambda: stream_keyed_min(
+        feed_stream(sh, F.col("h") % n, n, "minhash_feed").select(
+            "seg", F.expr(stack_expr)
+        ),
+        ["seg", "j"], "u", query_name=name,
+    ))
+    en = sig.where(F.col("seg") == "en").select(
+        "j", F.col("v").alias("sig_en")
+    )
+    rest = sig.where(F.col("seg") == "rest").select(
+        "j", F.col("v").alias("sig_rest")
+    )
+    return (
+        en.join(rest, "j")
+        .select(
+            "j",
+            "sig_en",
+            "sig_rest",
+            (F.col("sig_en") == F.col("sig_rest"))
+            .cast("long")
+            .alias("is_match"),
         )
-        stream = (
-            spark.readStream.schema(sh.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(feed)
-        ).select("seg", F.expr(stack_expr))
-        with stream_shuffle_partitions(spark):
-            q, get_state = stream_keyed_min(
-                stream, ["seg", "j"], "u", query_name=name
-            )
-            q.awaitTermination()
-        sig = get_state()
-        if sig is not None:
-            en = sig.where(F.col("seg") == "en").select(
-                "j", F.col("v").alias("sig_en")
-            )
-            rest = sig.where(F.col("seg") == "rest").select(
-                "j", F.col("v").alias("sig_rest")
-            )
-            return (
-                en.join(rest, "j")
-                .select(
-                    "j",
-                    "sig_en",
-                    "sig_rest",
-                    (F.col("sig_en") == F.col("sig_rest"))
-                    .cast("long")
-                    .alias("is_match"),
-                )
-                .orderBy("j")
-            )
-    raise RuntimeError("stream_minhash: drained state unavailable")
+        .orderBy("j")
+    )
 
 
 def _sql_stream_minhash() -> str:
@@ -294,9 +260,11 @@ def q_stream_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .sources.tables import configure
     from .streaming.rolling import (
         chop_n,
-        stream_cusum,
-        stream_shuffle_partitions,
+        drain,
         ensure_feed_ordered,
+        memory_sink,
+        replay_feed,
+        stream_cusum,
     )
 
     configure(spark)
@@ -313,37 +281,21 @@ def q_stream_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     name = "stream_cusum_sink"
-    for attempt in range(2):
-        for q in spark.streams.active:
-            if q.name == name:
-                q.stop()
+
+    def start():
         feed = ensure_feed_ordered(
             daily, ["day", "prio"], chop_n(_SCU_BATCHES), "cusum_feed"
         )
-        stream = (
-            spark.readStream.schema(daily.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(feed)
+        scored = stream_cusum(
+            replay_feed(spark, daily.schema, feed), "prio", "day", "cents",
+            drift_k=CU_K, threshold_h=CU_H,
         )
-        with stream_shuffle_partitions(spark):
-            scored = stream_cusum(
-                stream, "prio", "day", "cents",
-                drift_k=CU_K, threshold_h=CU_H,
-            )
-            q = (
-                scored.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("update")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        out = spark.table(name)
-        if out.take(1):
-            return out.select(
-                "prio", "day", "cents", "cusum", "alarm"
-            ).orderBy("prio", "day")
-    raise RuntimeError("stream_cusum: sink empty")
+        return memory_sink(scored, name, "update")
+
+    out = drain(spark, name, start)
+    return out.select(
+        "prio", "day", "cents", "cusum", "alarm"
+    ).orderBy("prio", "day")
 
 
 def _sql_stream_cusum() -> str:

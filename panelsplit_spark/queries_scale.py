@@ -669,42 +669,29 @@ def q_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank over the closed windows. The two-stage production shape
     (streaming aggregation + serving-side rank); hash-checked against
     the equivalent batch SQL on the same closed input."""
-    import os
-
     from pyspark.sql import Window
 
     from .sources.tables import configure, normalize_event_ts
     from .streaming.rolling import (
-        stream_shuffle_partitions,
+        drain,
+        file_stream,
+        memory_sink,
         stream_window_counts,
     )
 
     configure(spark)
-    from .streaming.rolling import file_stream
 
     # complete-mode counters: commutative monoid, ANY chop drains equal
     stream = file_stream(spark, sf_dir, "events", key_col="event_id")
     stream = normalize_event_ts(stream)
     counts = stream_window_counts(stream, window="1 hour")
     name = "stream_heavy_hitters_sink"
-    for q in spark.streams.active:
-        if q.name == name:
-            q.stop()
-    with stream_shuffle_partitions(spark):
-        q = (
-            counts.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    out = drain(spark, name, lambda: memory_sink(counts, name, "complete"))
     w = Window.partitionBy("window_start").orderBy(
         F.desc("cnt"), F.asc("user_id")
     )
     return (
-        spark.table(name)
-        .withColumn("rank", F.row_number().over(w))
+        out.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= HH_TOPK)
         .select(
             F.unix_micros("window_start").alias("win_start_us"),

@@ -283,10 +283,14 @@ def q_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     slack per user); on a closed availableNow input the emitted set
     equals the batch interval join, which is the oracle."""
     from .sources.tables import configure
-    from .streaming.rolling import stream_interval_join
+    from .streaming.rolling import (
+        drain,
+        file_stream,
+        memory_sink,
+        stream_interval_join,
+    )
 
     configure(spark)
-    from .streaming.rolling import file_stream
 
     # ONE file source, branched into both join sides (the canonical
     # streaming self-join) so any re-chop is seen identically by both.
@@ -333,21 +337,8 @@ def q_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         watermark="4 hours",
     )
     name = "stream_interval_join_sink"
-    for q in spark.streams.active:
-        if q.name == name:
-            q.stop()
-    from .streaming.rolling import stream_shuffle_partitions
-
-    with stream_shuffle_partitions(spark):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name).select(
+    out = drain(spark, name, lambda: memory_sink(joined, name, "append"))
+    return out.select(
         "p_event_id", "v_event_id", "user_id"
     )
 

@@ -636,13 +636,17 @@ def q_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     memory sink → per-session aggregate. Hash-checked against the batch
     lag+cumsum sessionization in SQL: on a closed input the stateful
     stream must produce byte-identical session ids."""
-    import os
-
     from .queries_data import SESSION_GAP_S, configure
-    from .streaming.rolling import stream_sessionize
+    from .sources.tables import normalize_event_ts
+    from .streaming.rolling import (
+        drain,
+        file_stream,
+        memory_sink,
+        stream_parts_for,
+        stream_sessionize,
+    )
 
     configure(spark)
-    from .streaming.rolling import file_stream
 
     # session state consumes rows in event-time order (the operator's
     # documented arrival contract): the invariance test re-chops along
@@ -650,34 +654,18 @@ def q_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = file_stream(
         spark, sf_dir, "events", order_cols=["ts", "event_id"]
     )
-    from .sources.tables import normalize_event_ts
-
     stream = normalize_event_ts(stream)
     sess = stream_sessionize(
         stream, gap_seconds=float(SESSION_GAP_S)
     )
     name = "stream_sessionize_sink"
-    for q in spark.streams.active:
-        if q.name == name:
-            q.stop()
-    from .streaming.rolling import (
-        stream_parts_for,
-        stream_shuffle_partitions,
-    )
-
     n_feed = load_table(spark, sf_dir, "events").count()
-    with stream_shuffle_partitions(spark, stream_parts_for(spark, n_feed)):
-        q = (
-            sess.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    out = drain(
+        spark, name, lambda: memory_sink(sess, name, "update"),
+        parts=stream_parts_for(spark, n_feed),
+    )
     return (
-        spark.table(name)
-        .groupBy("user_id", "session_id")
+        out.groupBy("user_id", "session_id")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.min(F.unix_micros("ts")).alias("start_us"),

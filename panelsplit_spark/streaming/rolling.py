@@ -38,6 +38,11 @@ __all__ = [
     "stream_incremental_agg",
     "stream_table_fingerprint",
     "stream_auc",
+    "fold_batches",
+    "drain",
+    "memory_sink",
+    "replay_feed",
+    "feed_stream",
     "ensure_feed",
     "ensure_feed_by",
     "ensure_feed_ordered",
@@ -369,6 +374,9 @@ def stream_interval_join(
     return lw.join(rw, cond, "inner")
 
 
+_STREAM_PARTS = 8
+
+
 @contextmanager
 def stream_shuffle_partitions(spark, n: Optional[int] = None):
     """Scope ``spark.sql.shuffle.partitions`` for a streaming query.
@@ -380,13 +388,10 @@ def stream_shuffle_partitions(spark, n: Optional[int] = None):
     faster with 8 state partitions than 32. On a real cluster the right
     number is ~cores (state must spread), so this is a *test/bench*
     scoping tool — it restores the session conf on exit and never
-    affects batch queries. Default from ``SPARK_GRAFT_STREAM_PARTS``
-    (8).
+    affects batch queries. Default 8.
     """
-    import os
-
     if n is None:
-        n = int(os.environ.get("SPARK_GRAFT_STREAM_PARTS", "8"))
+        n = _STREAM_PARTS
     key = "spark.sql.shuffle.partitions"
     old = spark.conf.get(key)
     spark.conf.set(key, str(n))
@@ -410,9 +415,7 @@ def stream_parts_for(spark, n_rows: int) -> int:
     state spreads to ~total cores once the per-batch volume amortizes
     the per-store commit. Partitioning never changes results — state
     is keyed either way."""
-    import os
-
-    small = int(os.environ.get("SPARK_GRAFT_STREAM_PARTS", "8"))
+    small = _STREAM_PARTS
     if n_rows < 300_000:
         return small
     try:
@@ -420,6 +423,105 @@ def stream_parts_for(spark, n_rows: int) -> int:
     except Exception:
         cores = small
     return max(small, min(cores, 32))
+
+
+def fold_batches(stream_df: DataFrame, query_name: str, step):
+    """Drain ``stream_df`` (availableNow) into ONE state frame folded by
+    ``step(state, batch) -> state`` — the ``foreachBatch`` state
+    machine behind every keyed-fold gate below, the online analog of
+    the batch engine's expanding train windows.
+
+    Empty-batch rule: the first micro-batch always seeds the state as
+    ``step(None, batch)`` (so an all-empty feed drains to an empty
+    frame with the state's columns); a later batch with no rows is
+    skipped after a ``take(1)`` probe, so availableNow's trailing
+    no-data batch cannot apply a batch-counted step (decay) once more.
+    ``get_state()`` is therefore ``None`` only when no batch ran. Each
+    new state is ``localCheckpoint``-ed eagerly so lineage stays flat
+    across an unbounded stream.
+
+    When ``step`` is a monoid fold — ``step(step(s, a), b)`` holds the
+    same rows as ``step(s, a ∪ b)`` — the drained state is independent
+    of how the feed was chopped into micro-batches, which is what lets
+    the batch oracle gate the stream (tests/test_streaming_chop.py).
+
+    Returns ``(query, get_state)``.
+    """
+    holder = [None]
+
+    def on_batch(batch: DataFrame, _bid: int) -> None:
+        state = holder[0]
+        if state is not None and not batch.take(1):
+            return
+        holder[0] = step(state, batch).localCheckpoint(eager=True)
+
+    q = (
+        stream_df.writeStream.foreachBatch(on_batch)
+        .queryName(query_name)
+        .trigger(availableNow=True)
+        .start()
+    )
+    return q, lambda: holder[0]
+
+
+def drain(spark, name: str, start, parts: Optional[int] = None):
+    """Run the streaming query ``name`` to completion and return what
+    it drained — the one lifecycle of every streaming registry gate:
+
+    * stop any live query still registered as ``name``;
+    * call ``start()`` → ``(query, get)`` inside
+      :func:`stream_shuffle_partitions` (``parts`` state partitions)
+      and await the query;
+    * return ``get()``. ``None`` means no micro-batch ran (a long
+      session once drained a fixed feed path to zero batches), so the
+      query is rebuilt once — ``start()`` writes a fresh feed — and a
+      second ``None`` raises ``RuntimeError`` naming the query.
+    """
+    for _ in range(2):
+        for q in spark.streams.active:
+            if q.name == name:
+                q.stop()
+        with stream_shuffle_partitions(spark, parts):
+            q, get = start()
+            q.awaitTermination()
+        out = get()
+        if out is not None:
+            return out
+    raise RuntimeError(f"{name}: drain ran zero micro-batches twice")
+
+
+def memory_sink(df: DataFrame, name: str, mode: str):
+    """Start an availableNow drain of ``df`` into the in-memory table
+    ``name`` with output mode ``mode`` → ``(query, get)`` for
+    :func:`drain`, where ``get`` reads the table back."""
+    q = (
+        df.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(mode)
+        .trigger(availableNow=True)
+        .start()
+    )
+    return q, lambda: df.sparkSession.table(name)
+
+
+def replay_feed(spark, schema, feed_dir: str) -> DataFrame:
+    """File stream over a feed written by the ``ensure_feed*`` helpers:
+    one file per micro-batch, replayed in mtime order."""
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(feed_dir)
+    )
+
+
+def feed_stream(df: DataFrame, batch_id, n: int, leaf: str, drop=()):
+    """Write ``df`` as a fresh ``n``-batch feed chopped by the
+    ``batch_id`` expression (:func:`ensure_feed_by`) and return its
+    :func:`replay_feed` stream with the schema of ``df`` minus
+    ``drop``. Call it inside a :func:`drain` ``start`` so a rebuild
+    replays a new feed directory."""
+    d = ensure_feed_by(df, batch_id, n, leaf, drop=drop)
+    return replay_feed(df.sparkSession, df.drop(*drop).schema, d)
 
 
 def stream_online_linreg(
@@ -636,36 +738,27 @@ def stream_apply_changes(
     rewrites dirty partitions only.
     """
     cols = [*keys, *value_cols]
-    holder = {"state": None}
 
-    def fold(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
+    def step(state, batch: DataFrame) -> DataFrame:
         b = batch.select(
             *cols,
             F.col(version_col).cast("long").alias(version_col),
             F.col(op_col).cast("string").alias(op_col),
         )
-        state = holder["state"]
         merged = b if state is None else state.unionByName(b)
         w = Window.partitionBy(*[F.col(k) for k in keys]).orderBy(
             F.desc(version_col)
         )
-        new = (
+        return (
             merged.withColumn("_rn", F.row_number().over(w))
             .where(F.col("_rn") == 1)
             .drop("_rn")
         )
-        holder["state"] = new.localCheckpoint(eager=True)
 
-    q = (
-        change_stream.writeStream.foreachBatch(fold)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
+    q, get = fold_batches(change_stream, query_name, step)
 
-    def get_state() -> DataFrame:
-        state = holder["state"]
+    def get_state() -> Optional[DataFrame]:
+        state = get()
         if state is None:
             return None
         return state.where(
@@ -702,28 +795,13 @@ def stream_scd2_versions(
     ``get_versions()`` for the deduplicated version frame.
     """
     cols = [*keys, *version_cols, *payload_cols]
-    holder = {"state": None}
 
-    def fold(batch: DataFrame, batch_id: int) -> None:
+    def step(state, batch: DataFrame) -> DataFrame:
         b = batch.select(*cols)
-        state = holder["state"]
         merged = b if state is None else state.unionByName(b)
-        holder["state"] = (
-            merged.dropDuplicates([*keys, *version_cols])
-            .localCheckpoint(eager=True)
-        )
+        return merged.dropDuplicates([*keys, *version_cols])
 
-    q = (
-        change_stream.writeStream.foreachBatch(fold)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-    def get_versions() -> Optional[DataFrame]:
-        return holder["state"]
-
-    return q, get_versions
+    return fold_batches(change_stream, query_name, step)
 
 
 def stream_bitmap_words(
@@ -746,7 +824,6 @@ def stream_bitmap_words(
 
     Returns ``(query, get_masks)``.
     """
-    holder = {"state": None}
     gcols = list(group_cols)
 
     def to_words(df: DataFrame) -> DataFrame:
@@ -763,27 +840,15 @@ def stream_bitmap_words(
             .agg(F.expr("bit_or(mask)").alias("mask"))
         )
 
-    def fold(batch: DataFrame, batch_id: int) -> None:
+    def step(state, batch: DataFrame) -> DataFrame:
         b = to_words(batch)
-        state = holder["state"]
-        merged = b if state is None else (
+        return b if state is None else (
             state.unionByName(b)
             .groupBy(*gcols, "w")
             .agg(F.expr("bit_or(mask)").alias("mask"))
         )
-        holder["state"] = merged.localCheckpoint(eager=True)
 
-    q = (
-        change_stream.writeStream.foreachBatch(fold)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-    def get_masks() -> Optional[DataFrame]:
-        return holder["state"]
-
-    return q, get_masks
+    return fold_batches(change_stream, query_name, step)
 
 
 def stream_incremental_agg(
@@ -806,32 +871,19 @@ def stream_incremental_agg(
     """
     from ..operators.cdc import incremental_agg_merge
 
-    holder = {"view": None}
     cols = list(sum_exprs)
 
-    def fold(batch: DataFrame, batch_id: int) -> None:
+    def step(view, batch: DataFrame) -> DataFrame:
         delta = batch.groupBy(*keys).agg(
             *[expr.alias(name) for name, expr in sum_exprs.items()]
         )
-        view = holder["view"]
-        merged = (
+        return (
             delta
             if view is None
             else incremental_agg_merge(view, delta, keys, cols)
         )
-        holder["view"] = merged.localCheckpoint(eager=True)
 
-    q = (
-        change_stream.writeStream.foreachBatch(fold)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-    def get_view() -> DataFrame:
-        return holder["view"]
-
-    return q, get_view
+    return fold_batches(change_stream, query_name, step)
 
 
 # ----------------------------------------------------------------------
@@ -906,8 +958,6 @@ def file_stream(
             .option("pathGlobFilter", f"{table}.parquet")
             .parquet(sf_dir)
         )
-    from pyspark.sql import functions as F
-
     df = spark.read.parquet(path)
     if order_cols is not None:
         feed = ensure_feed_ordered(df, order_cols, n, f"chop_{table}")
@@ -916,11 +966,7 @@ def file_stream(
         feed = ensure_feed_by(
             df, F.col(key_col) % n, n, f"chop_{table}"
         )
-    return (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed)
-    )
+    return replay_feed(spark, raw_schema, feed)
 
 
 def ensure_feed(dfs, leaf: str) -> str:
@@ -1195,35 +1241,23 @@ def stream_decayed_counts(
     Returns ``(query, get_state)``; call ``get_state()`` after the
     drain for the final ``(key, c)`` frame.
     """
-    state = {"df": None}
 
-    def apply_batch(batch_df: DataFrame, _bid: int) -> None:
-        if not batch_df.take(1):
-            return
+    def step(prev, batch_df: DataFrame) -> DataFrame:
         counts = batch_df.groupBy(key_col).agg(
             F.count(F.lit(1)).cast("double").alias("c")
         )
-        prev = state["df"]
         if prev is None:
-            cur = counts
-        else:
-            decayed = prev.select(
-                F.col(key_col), (F.col("c") * F.lit(decay)).alias("c")
-            )
-            cur = (
-                decayed.unionByName(counts)
-                .groupBy(key_col)
-                .agg(F.sum("c").alias("c"))
-            )
-        state["df"] = cur.localCheckpoint(eager=True)
+            return counts
+        decayed = prev.select(
+            F.col(key_col), (F.col("c") * F.lit(decay)).alias("c")
+        )
+        return (
+            decayed.unionByName(counts)
+            .groupBy(key_col)
+            .agg(F.sum("c").alias("c"))
+        )
 
-    q = (
-        stream_df.writeStream.foreachBatch(apply_batch)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    return q, lambda: state["df"]
+    return fold_batches(stream_df, query_name, step)
 
 
 def stream_histogram_quantiles(
@@ -1247,31 +1281,20 @@ def stream_histogram_quantiles(
     ``(query, get_hist)``; answer quantiles from the returned ``(bin,
     cnt)`` frame exactly as the batch operator does.
     """
-    state = {"df": None}
 
-    def apply_batch(batch_df: DataFrame, _bid: int) -> None:
-        if not batch_df.take(1):
-            return
+    def step(prev, batch_df: DataFrame) -> DataFrame:
         counts = batch_df.select(
             F.expr(f"{cents_col} div {bin_w}").alias("bin")
         ).groupBy("bin").agg(F.count(F.lit(1)).alias("cnt"))
-        prev = state["df"]
-        cur = (
+        return (
             counts
             if prev is None
             else prev.unionByName(counts)
             .groupBy("bin")
             .agg(F.sum("cnt").alias("cnt"))
         )
-        state["df"] = cur.localCheckpoint(eager=True)
 
-    q = (
-        stream_df.writeStream.foreachBatch(apply_batch)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    return q, lambda: state["df"]
+    return fold_batches(stream_df, query_name, step)
 
 
 def stream_near_dup_admit(
@@ -1390,11 +1413,7 @@ def stream_table_fingerprint(
     """
     from ..operators.reconcile import SIG_MOD, row_signature
 
-    state = {"df": None}
-
-    def apply_batch(batch_df: DataFrame, _bid: int) -> None:
-        if not batch_df.take(1):
-            return
+    def step(prev, batch_df: DataFrame) -> DataFrame:
         part = (
             batch_df.select(row_signature(cols).alias("__h"))
             .groupBy((F.col("__h") % n_buckets).alias("bucket"))
@@ -1406,8 +1425,7 @@ def stream_table_fingerprint(
                 ).alias("sig"),
             )
         )
-        prev = state["df"]
-        cur = (
+        return (
             part
             if prev is None
             else prev.unionByName(part)
@@ -1420,15 +1438,8 @@ def stream_table_fingerprint(
                 ),
             )
         )
-        state["df"] = cur.localCheckpoint(eager=True)
 
-    q = (
-        stream_df.writeStream.foreachBatch(apply_batch)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    return q, lambda: state["df"]
+    return fold_batches(stream_df, query_name, step)
 
 
 def stream_auc(
@@ -1450,11 +1461,8 @@ def stream_auc(
     Returns ``(query, get_auc)`` where ``get_auc()`` yields the
     single-row ``n n_pos n_neg u2 auc`` frame.
     """
-    state = {"df": None}
 
-    def apply_batch(batch_df: DataFrame, _bid: int) -> None:
-        if not batch_df.take(1):
-            return
+    def step(prev, batch_df: DataFrame) -> DataFrame:
         part = (
             batch_df.select(
                 F.col(score_col).cast("long").alias("s"),
@@ -1466,8 +1474,7 @@ def stream_auc(
                 F.sum("y").alias("pos"),
             )
         )
-        prev = state["df"]
-        cur = (
+        return (
             part
             if prev is None
             else prev.unionByName(part)
@@ -1477,14 +1484,15 @@ def stream_auc(
                 F.sum("pos").alias("pos"),
             )
         )
-        state["df"] = cur.localCheckpoint(eager=True)
 
-    def get_auc() -> DataFrame:
+    q, get_hist = fold_batches(stream_df, query_name, step)
+
+    def get_auc() -> Optional[DataFrame]:
         # identical rank arithmetic to operators/evaluation.auc_ranksum,
         # applied to the fused (score, cnt, pos) state directly
-        hist = state["df"]
-        from pyspark.sql import Window
-
+        hist = get_hist()
+        if hist is None:
+            return None
         w = Window.orderBy("s").rowsBetween(Window.unboundedPreceding, 0)
         g = hist.withColumn("cum", F.sum("cnt").over(w))
         agg = g.agg(
@@ -1528,12 +1536,6 @@ def stream_auc(
             ).alias("auc"),
         )
 
-    q = (
-        stream_df.writeStream.foreachBatch(apply_batch)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
     return q, get_auc
 
 
@@ -1561,29 +1563,18 @@ def stream_hll_registers(
     from ..operators.sketches import hll_register_maxes
 
     gb = list(group_by)
-    state = {"df": None}
 
-    def apply_batch(batch_df: DataFrame, _bid: int) -> None:
-        if not batch_df.take(1):
-            return
+    def step(prev, batch_df: DataFrame) -> DataFrame:
         part = hll_register_maxes(batch_df, key_col, gb, p=p, salt=salt)
-        prev = state["df"]
-        cur = (
+        return (
             part
             if prev is None
             else prev.unionByName(part)
             .groupBy(*gb, "reg")
             .agg(F.max("M").alias("M"))
         )
-        state["df"] = cur.localCheckpoint(eager=True)
 
-    q = (
-        stream_df.writeStream.foreachBatch(apply_batch)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    return q, lambda: state["df"]
+    return fold_batches(stream_df, query_name, step)
 
 
 def stream_weighted_reservoir(
@@ -1613,16 +1604,11 @@ def stream_weighted_reservoir(
     """
     from ..operators.sampling import weighted_reservoir_topk
 
-    state = {"df": None}
-
-    def apply_batch(batch_df: DataFrame, _bid: int) -> None:
-        if not batch_df.take(1):
-            return
+    def step(prev, batch_df: DataFrame) -> DataFrame:
         part = weighted_reservoir_topk(
             batch_df, id_col, weight_col, k, salt=salt
         )
-        prev = state["df"]
-        cur = (
+        return (
             part
             if prev is None
             else prev.unionByName(part)
@@ -1631,15 +1617,8 @@ def stream_weighted_reservoir(
             )
             .limit(int(k))
         )
-        state["df"] = cur.localCheckpoint(eager=True)
 
-    q = (
-        stream_df.writeStream.foreachBatch(apply_batch)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    return q, lambda: state["df"]
+    return fold_batches(stream_df, query_name, step)
 
 
 def stream_mde_moments(
@@ -1665,14 +1644,10 @@ def stream_mde_moments(
     from ..operators.evaluation import mde_moments
 
     gb = list(group_cols)
-    state = {"df": None}
 
-    def apply_batch(batch_df: DataFrame, _bid: int) -> None:
-        if not batch_df.take(1):
-            return
+    def step(prev, batch_df: DataFrame) -> DataFrame:
         part = mde_moments(batch_df, gb, value_col, treated_col)
-        prev = state["df"]
-        cur = (
+        return (
             part
             if prev is None
             else prev.unionByName(part)
@@ -1684,15 +1659,8 @@ def stream_mde_moments(
                 F.sum("n_t").alias("n_t"),
             )
         )
-        state["df"] = cur.localCheckpoint(eager=True)
 
-    q = (
-        stream_df.writeStream.foreachBatch(apply_batch)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    return q, lambda: state["df"]
+    return fold_batches(stream_df, query_name, step)
 
 
 def stream_ks_counts(
@@ -1713,11 +1681,8 @@ def stream_ks_counts(
 
     Returns ``(query, get_counts)``.
     """
-    state = {"df": None}
 
-    def apply_batch(batch_df: DataFrame, _bid: int) -> None:
-        if not batch_df.take(1):
-            return
+    def step(prev, batch_df: DataFrame) -> DataFrame:
         part = (
             batch_df.select(
                 F.col(segment_col).alias("segment"),
@@ -1726,23 +1691,15 @@ def stream_ks_counts(
             .groupBy("segment", "v")
             .agg(F.count(F.lit(1)).alias("c"))
         )
-        prev = state["df"]
-        cur = (
+        return (
             part
             if prev is None
             else prev.unionByName(part)
             .groupBy("segment", "v")
             .agg(F.sum("c").alias("c"))
         )
-        state["df"] = cur.localCheckpoint(eager=True)
 
-    q = (
-        stream_df.writeStream.foreachBatch(apply_batch)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    return q, lambda: state["df"]
+    return fold_batches(stream_df, query_name, step)
 
 
 def stream_keyed_min(
@@ -1764,11 +1721,8 @@ def stream_keyed_min(
     columns plus ``v`` = the running min of ``value_col``.
     """
     key_cols = list(key_cols)
-    state = {"df": None}
 
-    def apply_batch(batch_df: DataFrame, _bid: int) -> None:
-        if not batch_df.take(1):
-            return
+    def step(prev, batch_df: DataFrame) -> DataFrame:
         part = (
             batch_df.select(
                 *[F.col(k) for k in key_cols],
@@ -1777,23 +1731,15 @@ def stream_keyed_min(
             .groupBy(*key_cols)
             .agg(F.min("v").alias("v"))
         )
-        prev = state["df"]
-        cur = (
+        return (
             part
             if prev is None
             else prev.unionByName(part)
             .groupBy(*key_cols)
             .agg(F.min("v").alias("v"))
         )
-        state["df"] = cur.localCheckpoint(eager=True)
 
-    q = (
-        stream_df.writeStream.foreachBatch(apply_batch)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    return q, lambda: state["df"]
+    return fold_batches(stream_df, query_name, step)
 
 
 def stream_cusum(

@@ -314,7 +314,8 @@ def test_registry_oracles_pinned():
     of the Spark side must leave the DuckDB oracles byte-identical. The
     digest runs over the names in sorted order (``name\\0oracle\\0``
     each), so reordering ``queries()`` does not move it; adding,
-    renaming or editing a query does, deliberately."""
+    renaming or editing a query does, deliberately. A second digest
+    pins the ORDER of ``queries()`` (``name\\0`` each, registry order)."""
     import hashlib
 
     import __spark_entry__ as entrymod
@@ -325,6 +326,12 @@ def test_registry_oracles_pinned():
         h.update(name.encode() + b"\0" + oracles[name].encode() + b"\0")
     assert h.hexdigest() == (
         "b40bf850fd594b062541e7461e5b2629f8d9b9f9885250fb92e17fcccb317b9e"
+    )
+    order = hashlib.sha256()
+    for name in entrymod.queries():
+        order.update(name.encode() + b"\0")
+    assert order.hexdigest() == (
+        "2c69a5d3da80185b1dcb5fa89b836d73f4402974b7a685650c480f73dbb1b5e6"
     )
 
 

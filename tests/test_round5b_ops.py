@@ -736,6 +736,31 @@ def test_cpcv_paths_plan_joins_no_driver_tables(spark):
     assert all(r["n_rows"] == 90 and r["sse_milli"] == 0 for r in rows)
 
 
+def test_cpcv_paths_collects_periods_once(spark, monkeypatch):
+    """Building one ``cpcv_backtest_paths`` frame runs the distinct-period
+    collect once: the split assignment and the group CASE share it."""
+    from panelsplit_spark.operators import cross_validation as cv
+
+    calls = []
+    real = cv.distinct_periods
+
+    def counting(df, period_col):
+        calls.append(period_col)
+        return real(df, period_col)
+
+    monkeypatch.setattr(cv, "distinct_periods", counting)
+    df = spark.range(60).select(
+        F.date_format(
+            F.date_add(F.lit("2024-03-01"), (F.col("id") % 12).cast("int")),
+            "yyyy-MM-dd",
+        ).alias("period"),
+        F.col("id").alias("x"),
+        (3 * F.col("id") + 1).alias("y"),
+    )
+    cv.cpcv_backtest_paths(df, "period", "x", "y", 4, 2)
+    assert calls == ["period"]
+
+
 def test_nested_ridge_picks_zero_lambda_on_noiseless_line(spark):
     """y = 2x exactly: the unpenalized fit is exact, every penalized
     fit is biased → λ* = 0 for every outer fold, inner and test SSE
