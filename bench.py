@@ -562,8 +562,19 @@ def _sf1_prefix_join_production(spark, sf_dir):
 SF1_HEADLINE = list(HEADLINE)
 
 
-def _machine_fingerprint() -> dict:
-    """CPU count + a short single-thread calibration score.
+def _session_cpus() -> int:
+    """N of the bench session's ``local[N]`` master: ``SPARK_GRAFT_CPUS``,
+    default 32."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+
+def _machine_fingerprint(cpus: int) -> dict:
+    """Session core count + a short single-thread calibration score.
+
+    ``cpus`` is the N of the session's ``local[N]`` master
+    (:func:`_session_cpus`), not ``os.cpu_count()``: the host's core
+    count is the same for a ``local[8]`` and a ``local[32]`` run, so an
+    artifact could not show which core count its timings were taken at.
 
     Regression comparisons are only meaningful between runs made on
     machines of like speed: round 7's detector compared driver-machine
@@ -591,7 +602,7 @@ def _machine_fingerprint() -> dict:
         # thousand increments per second — a true rate, so the unit is
         # sample-window independent
         best = max(best, round(n * 10000 / elapsed / 1000))
-    return {"cpus": os.cpu_count(), "calib_kops": best}
+    return {"cpus": cpus, "calib_kops": best}
 
 
 def _fingerprints_match(prev_fp, now_fp) -> bool:
@@ -750,10 +761,10 @@ def _adjudication_medians(
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = _session_cpus()
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else None
-    fingerprint = _machine_fingerprint()
+    fingerprint = _machine_fingerprint(cpus)
 
     from pyspark.sql import SparkSession
 
@@ -762,7 +773,7 @@ def main() -> None:
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName("panelsplit_spark-bench")
-        .config("spark.sql.shuffle.partitions", str(max(int(cpus), 16)))
+        .config("spark.sql.shuffle.partitions", str(max(cpus, 16)))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.adaptive.enabled", "true")
         # bench files are MBs, not the 128MB-block production shape: tiny
@@ -1104,7 +1115,7 @@ def main() -> None:
                         low_times[label] = round(time.time() - t0, 3)
                         release_all_pinned(spark)
                     sf1["_scaling"] = {
-                        "cpus_main": int(cpus),
+                        "cpus_main": cpus,
                         "cpus_low": low,
                         "low": low_times,
                         "main_basis": {

@@ -39,17 +39,28 @@ def word_tokens(col: Column) -> Column:
 def word_ngrams(tokens: Column, n: int) -> Column:
     """Word n-gram shingles from a token array, space-joined.
 
-    Catalyst higher-order functions only: a ``transform`` over
-    ``sequence(1, size-n+1)`` with ``slice`` — no explode needed until the
-    caller wants rows. Guarded for short docs: Spark's ``sequence(1, 0)``
-    auto-descends to ``[1, 0]``, so fewer-than-n tokens must yield an
+    Catalyst higher-order functions only, linear in document length:
+    the ``n`` shifted views ``slice(tokens, k, m)`` (``m = size-n+1``)
+    are zipped into one array of n-tuples and a ``transform`` joins
+    each tuple — no explode needed until the caller wants rows.
+
+    ``tokens`` appears only as an argument of the higher-order function,
+    never inside its lambda: the caller's token expression (typically
+    ``split(lower(text), ' ')``) is not a bound value, and a lambda that
+    references it re-evaluates it for every output element — a
+    ``slice(tokens, i, n)`` body cost O(words²) per document.
+
+    Guarded for short docs: ``slice`` rejects the negative length that
+    fewer-than-n tokens give ``m``, so those (and NULL text) yield an
     explicitly empty shingle set.
     """
+    m = F.size(tokens) - F.lit(n - 1)
+    windows = F.arrays_zip(*[F.slice(tokens, k, m) for k in range(1, n + 1)])
     return F.when(
         F.size(tokens) >= F.lit(n),
         F.transform(
-            F.sequence(F.lit(1), F.size(tokens) - F.lit(n - 1)),
-            lambda i: F.concat_ws(" ", F.slice(tokens, i, n)),
+            windows,
+            lambda s: F.concat_ws(" ", *[s[str(k)] for k in range(n)]),
         ),
     ).otherwise(F.array().cast("array<string>"))
 

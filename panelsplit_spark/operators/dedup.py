@@ -142,21 +142,16 @@ def minhash_signatures(
 ) -> DataFrame:
     """Per-doc MinHash signature: ``sig_0 .. sig_{n_hashes-1}`` columns.
 
-    One explode of distinct shingles + one grouped aggregate computing all
-    ``n_hashes`` mins simultaneously (single shuffle; map-side partials).
+    One explode of distinct shingles (:func:`doc_shingles`) + one grouped
+    aggregate computing all ``n_hashes`` mins simultaneously (single
+    shuffle; map-side partials).
     Hash cost is ONE md5 per shingle: the remaining components come from
     the universal-hash family ``(a_j·h + b_j) mod P`` — pure codegen'd
     integer ops (functions/hashing.py).
     """
-    toks = word_tokens(F.col(text_col))
-    shingled = _ensure_parallelism(
-        df.select(F.col(id_col), F.col(text_col))
-    ).select(
-        F.col(id_col),
-        F.explode(F.array_distinct(word_ngrams(toks, shingle_n))).alias(
-            "shingle"
-        ),
-    ).withColumn("h", md5_long(F.col("shingle")) % F.lit(MINHASH_P))
+    shingled = doc_shingles(df, text_col, id_col, shingle_n).withColumn(
+        "h", md5_long(F.col("shingle")) % F.lit(MINHASH_P)
+    )
     params = minhash_params(n_hashes)
     aggs = [
         universal_minhash_col(F.col("h"), a, b).alias(f"sig_{j}")
@@ -888,34 +883,51 @@ def connected_components(
     ``(id, cluster)``. This is the step that turns pairwise LSH/SimHash
     hits into dedup groups (keep ``id == cluster``, drop the rest).
 
-    Distributed min-label propagation: each round joins the current
-    labels across the symmetrized edge list and takes the per-node min —
-    two shuffles per round, converging in O(component diameter) rounds
-    (near-dup clusters are shallow; star-contraction variants cut this
-    to O(log d) and keep the same per-round plan shape). The label frame
-    is ``localCheckpoint``-ed each round so the plan does not grow with
-    the iteration count — at production scale point
+    Distributed min-label propagation over the symmetrized edge list
+    plus a self-loop ``(x, x)`` per node: each round is ONE join of the
+    labels onto the edges and ONE grouped aggregate per node — ``min`` of
+    the neighbours' labels is the new label and the same ``min`` over the
+    self-loop row alone is the previous one, so the change test reads the
+    round's own checkpointed frame (no join back to the old labels).
+    Round 1 is the seed ``groupBy(u).min(v)`` (every label starts as the
+    node's own id). Converges in O(component diameter) rounds (near-dup
+    clusters are shallow; star-contraction variants cut this to O(log d),
+    see :func:`connected_components_star`). The label frame is
+    ``localCheckpoint``-ed each round so the plan does not grow with the
+    iteration count — at production scale point
     ``spark.sparkContext.setCheckpointDir`` at durable storage and swap
-    in ``checkpoint``.
+    in ``checkpoint``. A pair with a NULL end is not an edge.
 
     Wholly expressible as joins/aggregates — the oracle twin is a
     recursive CTE computing min-over-transitive-closure.
     """
-    edges = pairs.select(
+    u, v = F.col("u"), F.col("v")
+    pairs = pairs.select(
         F.col(id_a).cast("long").alias("u"),
         F.col(id_b).cast("long").alias("v"),
-    )
+    ).where(u.isNotNull() & v.isNotNull())
+    # both orientations plus a self-loop on each end
     edges = (
-        edges.union(edges.select(F.col("v").alias("u"),
-                                 F.col("u").alias("v")))
+        pairs.select(
+            F.inline(
+                F.array(
+                    F.struct(u, v),
+                    F.struct(v.alias("u"), u.alias("v")),
+                    F.struct(u, u.alias("v")),
+                    F.struct(v.alias("u"), v),
+                )
+            )
+        )
         .distinct()
+        .localCheckpoint(eager=False)
     )
+    # round 1: min over the closed neighbourhood, from the edges alone
     labels = (
-        edges.select("u").distinct().withColumn("label", F.col("u"))
+        edges.groupBy("u").agg(F.min("v").alias("label"))
+        .localCheckpoint(eager=True)
     )
-    edges = edges.localCheckpoint(eager=False)
-    for _ in range(max_iter):
-        nbr = (
+    for _ in range(max_iter - 1):
+        nxt = (
             edges.join(
                 labels.select(
                     F.col("u").alias("v"), F.col("label").alias("vl")
@@ -923,32 +935,31 @@ def connected_components(
                 "v",
             )
             .groupBy("u")
-            .agg(F.min("vl").alias("nl"))
+            .agg(
+                F.min("vl").alias("label"),
+                F.min(F.when(u == v, F.col("vl"))).alias("prev"),
+            )
+            .localCheckpoint(eager=True)
         )
-        new = labels.join(nbr, "u", "left").select(
-            "u",
-            F.col("label"),
-            F.least(
-                F.col("label"), F.coalesce(F.col("nl"), F.col("label"))
-            ).alias("label2"),
-        )
-        new = new.localCheckpoint(eager=True)
         n_changed = (
-            new.where(F.col("label2") < F.col("label")).limit(1).count()
+            nxt.where(F.col("label") < F.col("prev")).limit(1).count()
         )
-        labels = new.select("u", F.col("label2").alias("label"))
+        labels = nxt.select("u", "label")
         if n_changed == 0:
             break
     else:
-        # labels are only partially merged: a component with diameter >
-        # max_iter would silently split into several clusters downstream
-        # (keep-best would then keep one doc per FRAGMENT). Loud beats
-        # wrong — the caller can raise max_iter (rounds needed ≈ the
-        # duplicate-cluster diameter, which is small for near-dup graphs).
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} "
-            "rounds; raise max_iter (component diameter exceeds it)"
-        )
+        # max_iter == 1 keeps the seed only if round 1 moved no label
+        if max_iter != 1 or labels.where(F.col("label") < u).limit(1).count():
+            # labels are only partially merged: a component with
+            # diameter > max_iter would silently split into several
+            # clusters downstream (keep-best would then keep one doc per
+            # FRAGMENT). Loud beats wrong — the caller can raise max_iter
+            # (rounds needed ≈ the duplicate-cluster diameter, which is
+            # small for near-dup graphs).
+            raise RuntimeError(
+                f"connected_components did not converge in {max_iter} "
+                "rounds; raise max_iter (component diameter exceeds it)"
+            )
     return labels.select(
         F.col("u").alias("id"), F.col("label").alias("cluster")
     )

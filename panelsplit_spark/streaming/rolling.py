@@ -906,27 +906,6 @@ def chop_n(default: int) -> int:
     return CHOP_OVERRIDE[0] or default
 
 
-def ordered_chop(df: DataFrame, order_cols, n: int):
-    """Chop ``df`` into ``n`` contiguous chunks of a deterministic total
-    order — the re-chop for gates whose per-row output depends on
-    processing order (online recursions, session state): any contiguous
-    chop replayed in order must reproduce the single-batch run.
-    ``order_cols`` must be a total order (include a tiebreak id)."""
-    from pyspark.sql import Window, functions as F
-
-    w = Window.orderBy(*[F.col(c) for c in order_cols])
-    total = df.count()
-    ranked = df.withColumn("_rn", F.row_number().over(w) - 1)
-    out = [
-        ranked.where(
-            (F.col("_rn") * n >= F.lit(j) * total)
-            & (F.col("_rn") * n < F.lit(j + 1) * total)
-        ).drop("_rn")
-        for j in range(n)
-    ]
-    return out
-
-
 def file_stream(
     spark,
     sf_dir: str,
@@ -1049,10 +1028,12 @@ def _slow_write_batch(feed_dir: str, i: int, df) -> None:
 
 
 def ensure_feed_ordered(df, order_cols, n: int, leaf: str) -> str:
-    """:func:`ensure_feed_by` over the same contiguous chunks as
-    :func:`ordered_chop`, with the chunk id as a COLUMN
-    (``(rn*n) div total``) so the one-scan writer splits one global
-    window pass instead of unioning ``n`` re-evaluations of it.
+    """:func:`ensure_feed_by` over ``n`` contiguous chunks of the
+    ``order_cols`` total order — the re-chop for gates whose per-row
+    output depends on processing order (online recursions, session
+    state): any contiguous chop replayed in order must reproduce the
+    single-batch run. The chunk id is a COLUMN (``(rn*n) div total``),
+    so the one-scan writer splits one global window pass.
     ``order_cols`` must be a total order (include a tiebreak id)."""
     w = Window.orderBy(*[F.col(c) for c in order_cols])
     total = df.count()

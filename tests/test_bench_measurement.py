@@ -112,11 +112,22 @@ def test_same_machine_prev_prefers_matching_fingerprint(tmp_path):
 
 
 def test_machine_fingerprint_shape():
-    fp = bench._machine_fingerprint()
-    assert fp["cpus"] == os.cpu_count()
+    fp = bench._machine_fingerprint(8)
+    assert fp["cpus"] == 8
     assert fp["calib_kops"] > 0
     # two immediate measurements on the same machine must match
-    assert bench._fingerprints_match(fp, bench._machine_fingerprint())
+    assert bench._fingerprints_match(fp, bench._machine_fingerprint(8))
+
+
+def test_fingerprint_records_session_cpus(monkeypatch):
+    """The fingerprint carries the session's local[N] (SPARK_GRAFT_CPUS,
+    default 32), not the host core count."""
+    host = os.cpu_count()
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", str(host + 3))
+    fp = bench._machine_fingerprint(bench._session_cpus())
+    assert fp["cpus"] == host + 3
+    monkeypatch.delenv("SPARK_GRAFT_CPUS")
+    assert bench._session_cpus() == 32
 
 
 def test_ceiling_breachers_forced_set():
