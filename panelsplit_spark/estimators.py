@@ -33,19 +33,22 @@ __all__ = [
 ]
 
 
+try:  # sklearn is optional; resolved once, not per clone() call
+    from sklearn.base import BaseEstimator as _SkEstimator, clone as _sk_clone
+except ImportError:
+    _SkEstimator = _sk_clone = None
+
+
 def clone(estimator: Any) -> Any:
     """Fresh unfitted copy with the same hyper-parameters.
 
     Mirrors ``sklearn.base.clone`` semantics (used by the reference at
     application.py:85): construct a new instance from ``get_params()``.
-    Falls back to sklearn's clone for sklearn estimators when available.
+    sklearn ``BaseEstimator``s go to sklearn's own clone when sklearn is
+    installed, and its errors propagate.
     """
-    try:  # pragma: no cover - only when sklearn is present
-        from sklearn.base import clone as sk_clone
-
-        return sk_clone(estimator)
-    except Exception:
-        pass
+    if _SkEstimator is not None and isinstance(estimator, _SkEstimator):
+        return _sk_clone(estimator)
     if hasattr(estimator, "get_params"):
         params = estimator.get_params()
         return type(estimator)(**params)

@@ -16,6 +16,7 @@ __all__ = [
     "md5_long",
     "word_tokens",
     "word_ngrams",
+    "adjacent_pairs",
     "minhash_col",
     "minhash_params",
     "universal_minhash_col",
@@ -63,6 +64,23 @@ def word_ngrams(tokens: Column, n: int) -> Column:
             lambda s: F.concat_ws(" ", *[s[str(k)] for k in range(n)]),
         ),
     ).otherwise(F.array().cast("array<string>"))
+
+
+def adjacent_pairs(tokens: Column, left: str, right: str) -> Column:
+    """Adjacent token pairs as ``struct<left, right>`` in token order,
+    linear like :func:`word_ngrams`: two shifted slices zipped, so the
+    token expression is never re-evaluated inside the lambda. Fewer than
+    two tokens (and NULL) give an explicitly empty array."""
+    m = F.size(tokens) - F.lit(1)
+    return F.when(
+        F.size(tokens) >= F.lit(2),
+        F.transform(
+            F.arrays_zip(F.slice(tokens, 1, m), F.slice(tokens, 2, m)),
+            lambda s: F.struct(s["0"].alias(left), s["1"].alias(right)),
+        ),
+    ).otherwise(
+        F.array().cast(f"array<struct<{left}:string,{right}:string>>")
+    )
 
 
 def minhash_col(shingle: Column, seed: int) -> Column:

@@ -347,15 +347,8 @@ def cross_val_fit(
     if fast is not None:
         return fast
 
-    needed = list(feature_cols)
-    for c in (y_col, sample_weight_col):
-        if c is not None and c not in needed:
-            needed.append(c)
-    needed.append(cv.period_col) if cv.period_col not in needed else None
-    if cv.snapshot_col and cv.snapshot_col not in needed:
-        needed.append(cv.snapshot_col)
-
-    assigned = cv.assign(df.select(*needed), roles=("train",))
+    fit_cols = [c for c in (y_col, sample_weight_col) if c is not None]
+    assigned = cv.assign_columns(df, [*feature_cols, *fit_cols], ("train",))
     fit_fn = _make_fit_fn(
         estimator, feature_cols, y_col, sample_weight_col, drop_na_in_y,
         use_weight,
@@ -415,13 +408,7 @@ def cross_val_predict(
             else "double"
         )
     keep = list(keep_cols) if keep_cols is not None else list(df.columns)
-    needed = list(dict.fromkeys(list(keep) + list(feature_cols)))
-    if cv.period_col not in needed:
-        needed.append(cv.period_col)
-    if cv.snapshot_col and cv.snapshot_col not in needed:
-        needed.append(cv.snapshot_col)
-
-    assigned = cv.assign(df.select(*needed), roles=(return_group,))
+    assigned = cv.assign_columns(df, [*keep, *feature_cols], (return_group,))
 
     # Closed-form family + plain predict → literal coefficient array
     # indexed by fold_id + arithmetic projection: the whole OOF pass

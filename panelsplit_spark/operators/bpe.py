@@ -46,7 +46,7 @@ from typing import Dict, List, Optional, Sequence, Tuple
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
-from ..functions.hashing import word_tokens
+from ..functions.hashing import adjacent_pairs, word_tokens
 
 __all__ = [
     "WORD_PATTERN",
@@ -95,17 +95,7 @@ def _pair_counts(reprs: DataFrame) -> DataFrame:
     syms = F.split(
         F.expr("substring(rep, 2, length(rep) - 2)"), r"\|\|"
     )
-    n = F.size(syms)
-    pairs = F.when(
-        n >= F.lit(2),
-        F.transform(
-            F.sequence(F.lit(1), n - 1),
-            lambda i: F.struct(
-                F.element_at(syms, i).alias("lhs"),
-                F.element_at(syms, i + 1).alias("rhs"),
-            ),
-        ),
-    ).otherwise(F.array().cast("array<struct<lhs:string,rhs:string>>"))
+    pairs = adjacent_pairs(syms, "lhs", "rhs")
     return (
         reprs.select(F.explode(pairs).alias("p"), "wt")
         .groupBy(F.col("p.lhs").alias("lhs"), F.col("p.rhs").alias("rhs"))

@@ -28,6 +28,7 @@ from typing import Any, Callable, List, Optional, Sequence, Tuple
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
+from ..functions.sql import sql_ident, sql_literal
 from ..plans.fold_spec import (
     FoldSpec,
     build_fold_spec,
@@ -65,29 +66,6 @@ def distinct_periods(df: DataFrame, period_col: str) -> List[Any]:
     return sorted((r["p"] for r in rows), key=spark_order_key)
 
 
-def _sql_ident(name: str) -> str:
-    """``name`` as a back-quoted Spark SQL identifier."""
-    return "`" + name.replace("`", "``") + "`"
-
-
-def _sql_literal(value: Any, dtype) -> str:
-    """``value`` as a Spark SQL literal of column type ``dtype``; a
-    value collected from such a column round-trips exactly."""
-    if value is None:
-        return f"CAST(NULL AS {dtype.simpleString()})"
-    if isinstance(dtype, T.IntegerType):
-        return str(int(value))
-    if isinstance(dtype, T.StringType):
-        text = str(value).replace("\\", "\\\\").replace("'", "\\'")
-        return f"'{text}'"
-    if isinstance(dtype, T.TimestampType):
-        # collected naive datetimes are in the Python process's zone;
-        # toInternal is the exact inverse of that conversion
-        return f"timestamp_micros({dtype.toInternal(value)})"
-    text = repr(value) if isinstance(value, float) else str(value)
-    return f"CAST('{text}' AS {dtype.simpleString()})"
-
-
 def explode_memberships(
     df: DataFrame,
     period_col: str,
@@ -109,13 +87,13 @@ def explode_memberships(
     no extra job.
     """
     ptype = df.schema[period_col].dataType
-    col = _sql_ident(period_col)
+    col = sql_ident(period_col)
     struct = ", ".join(f"{n}: {t.simpleString()}" for n, t in fields)
 
     def leaf(members) -> str:
         return "array(" + ", ".join(
             "named_struct(" + ", ".join(
-                f"'{n}', {_sql_literal(v, t)}"
+                f"'{n}', {sql_literal(v, t)}"
                 for (n, t), v in zip(fields, m)
             ) + ")"
             for m in members
@@ -131,14 +109,14 @@ def explode_memberships(
             return leaf(runs[lo][1])
         mid = (lo + hi) // 2
         return (
-            f"CASE WHEN {col} < {_sql_literal(runs[mid][0], ptype)} "
+            f"CASE WHEN {col} < {sql_literal(runs[mid][0], ptype)} "
             f"THEN {tree(lo, mid)} ELSE {tree(mid, hi)} END"
         )
 
     if not runs:
         empty = f"CAST(NULL AS array<struct<{struct}>>)"
         return df.select("*", F.inline(F.expr(empty)))
-    in_set = ", ".join(_sql_literal(p, ptype) for p, _ in memberships)
+    in_set = ", ".join(sql_literal(p, ptype) for p, _ in memberships)
     return df.where(F.expr(f"{col} IN ({in_set})")).select(
         "*", F.inline(F.expr(tree(0, len(runs))))
     )
@@ -401,9 +379,9 @@ class PanelSplit:
                 key=spark_order_key,
             )
             dtype = df.schema[self.snapshot_col].dataType
-            in_set = ", ".join(_sql_literal(v, dtype) for v in snaps)
+            in_set = ", ".join(sql_literal(v, dtype) for v in snaps)
             p = (
-                F.expr(f"{_sql_ident(self.snapshot_col)} IN ({in_set})")
+                F.expr(f"{sql_ident(self.snapshot_col)} IN ({in_set})")
                 if snaps else F.lit(False)
             )
             pred = p if pred is None else (pred & p)
@@ -466,6 +444,15 @@ class PanelSplit:
             .where(F.col(self.snapshot_col) == F.col("__snap"))
             .drop("__snap")
         )
+
+    def assign_columns(
+        self, df: DataFrame, cols: Sequence[str], roles: Tuple[str, ...]
+    ) -> DataFrame:
+        """:meth:`assign` over only ``cols`` plus the period and snapshot
+        columns, each once: what a fold-wise fit or apply ships."""
+        snap = [self.snapshot_col] if self.snapshot_col else []
+        needed = dict.fromkeys([*cols, self.period_col, *snap])
+        return self.assign(df.selectExpr(*map(sql_ident, needed)), roles)
 
     # ------------------------------------------------------------------
     # label-frame helpers (cross_validation.py:279-353)
@@ -786,8 +773,8 @@ def cpcv_backtest_paths(
     group = F.expr(
         "CASE "
         + " ".join(
-            f"WHEN {_sql_ident(period_col)} < "
-            f"{_sql_literal(periods[g * q + min(g, r)], ptype)} "
+            f"WHEN {sql_ident(period_col)} < "
+            f"{sql_literal(periods[g * q + min(g, r)], ptype)} "
             f"THEN {g - 1}"
             for g in range(1, n_groups)
         )

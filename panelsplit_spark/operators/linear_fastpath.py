@@ -22,6 +22,10 @@ Prediction needs no Python either: per-fold coefficients are a literal
 array indexed by ``fold_id``, so the whole OOF pass stays inside
 whole-stage codegen.
 
+Every wide expression here is SQL text parsed JVM-side in one call
+(see ``functions/sql.py``): the same trees and plans as the Column API,
+without its py4j round trip per node.
+
 The produced models are ordinary estimator objects (coef_/intercept_/
 mean_ set), indistinguishable from pandas-path fits to downstream code.
 """
@@ -35,7 +39,7 @@ from dataclasses import dataclass
 from typing import Any, List, Optional, Sequence
 
 import numpy as np
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F, types as T
 
 from ..estimators import (
     LinearRegression,
@@ -44,6 +48,7 @@ from ..estimators import (
     StandardScaler,
     clone,
 )
+from ..functions.sql import sql_ident, sql_literal
 
 __all__ = ["suffstats_fit", "linear_predict_frame", "sweep_scores", "logistic_irls", "glm_irls", "huber_irls"]
 
@@ -113,42 +118,37 @@ def _fold_moments(
     cube."""
     src = df if where is None else df.where(where)
     if drop_na_in_y:
-        src = src.where(F.col(y_col).isNotNull())
-    w = (
-        F.col(sample_weight_col).cast("double")
-        if sample_weight_col is not None
-        else F.lit(1.0)
-    )
-    y = F.col(y_col).cast("double")
-    xs = [F.col(c).cast("double") for c in feats]
+        src = src.where(f"{sql_ident(y_col)} IS NOT NULL")
+    w, w_null = "1.0D", "false"
+    if sample_weight_col is not None:
+        sw = sql_ident(sample_weight_col)
+        w, w_null = f"CAST({sw} AS DOUBLE)", f"{sw} IS NULL"
+    y = f"CAST({sql_ident(y_col)} AS DOUBLE)"
+    xs = [f"CAST({sql_ident(c)} AS DOUBLE)" for c in feats]
     # The pandas path converts Spark NULLs to NaN, which poisons numpy
     # sums; Spark aggregates SKIP nulls, so the cube carries explicit
     # any-null flags and each fit reproduces the poisoning for the
-    # columns its estimator looks at.
-    x_null = F.lit(False)
+    # columns its estimator looks at. The OR chain is parenthesised
+    # left-deep: the SQL parser would balance a bare chain.
+    x_null = "false"
     for c in feats:
-        x_null = x_null | F.col(c).isNull()
-    w_null = (
-        F.col(sample_weight_col).isNull()
-        if sample_weight_col is not None
-        else F.lit(False)
-    )
-    cols = ["n", "sy"]
-    aggs = [F.sum(w).alias("n"), F.sum(w * y).alias("sy")]
+        x_null = f"({x_null} OR {sql_ident(c)} IS NULL)"
+    sums = {"n": w, "sy": f"{w} * {y}"}
     for i, xi in enumerate(xs):
-        cols += [f"sx_{i}", f"sxy_{i}"]
-        aggs.append(F.sum(w * xi).alias(f"sx_{i}"))
-        aggs.append(F.sum(w * xi * y).alias(f"sxy_{i}"))
+        sums[f"sx_{i}"] = f"{w} * {xi}"
+        sums[f"sxy_{i}"] = f"{w} * {xi} * {y}"
         for j in range(i, len(xs)):
-            cols.append(f"sxx_{i}_{j}")
-            aggs.append(F.sum(w * xi * xs[j]).alias(f"sxx_{i}_{j}"))
+            sums[f"sxx_{i}_{j}"] = f"{w} * {xi} * {xs[j]}"
+    cols = list(sums)
     flags = ["__null_x", "__null_y", "__null_w"]
-    for name, cond in zip(flags, (x_null, y.isNull(), w_null)):
-        aggs.append(F.max(F.when(cond, 1.0).otherwise(0.0)).alias(name))
+    aggs = [f"sum({t}) AS {c}" for c, t in sums.items()] + [
+        f"max(CASE WHEN {cond} THEN 1.0D ELSE 0.0D END) AS {name}"
+        for name, cond in zip(flags, (x_null, f"{y} IS NULL", w_null))
+    ]
     keys = [F.col(period_col).alias("__p")]
     if snapshot_col is not None:
         keys.append(F.col(snapshot_col).alias("__s"))
-    rows = src.groupBy(*keys).agg(*aggs).collect()
+    rows = src.groupBy(*keys).agg(*map(F.expr, aggs)).collect()
     # an all-NULL sum comes back NULL; its flag poisons the fits that
     # read it, so 0 is the right additive identity (a NaN sum stays NaN)
     grid = np.array(
@@ -328,13 +328,15 @@ def _solve_from_moments(
     return models
 
 
-def _literal_table(values: list, depth: int) -> Column:
-    """``depth`` levels of nested lists of doubles as ONE array literal:
-    a single JSON string parsed by ``from_json``, which the optimizer
-    folds into a literal — a constant number of Py4J calls whatever its
-    size, and NaN/±Infinity survive (JSON's non-numeric numbers)."""
+def _literal_table(values: list, depth: int) -> str:
+    """SQL text of ``depth`` levels of nested lists of doubles as ONE
+    array literal: a single JSON string parsed by ``from_json``, which
+    the optimizer folds into a literal. NaN/±Infinity survive (JSON's
+    non-numeric numbers), and the text is parsed JVM-side in the same
+    call as the expression around it."""
     schema = "array<" * depth + "double" + ">" * depth
-    return F.from_json(F.lit(json.dumps(values)), schema)
+    text = sql_literal(json.dumps(values), T.StringType())
+    return f"from_json({text}, '{schema}')"
 
 
 def _linear_terms(m: Any) -> Optional[List[float]]:
@@ -350,16 +352,14 @@ def _linear_terms(m: Any) -> Optional[List[float]]:
     return None
 
 
-def _linear_pred(terms: Column, feature_cols: Sequence[str],
-                 mean_only: bool) -> Column:
-    """``terms[0] + Σ terms[i+1]·xᵢ`` — MeanRegressor ignores X entirely
-    (NaN features must not poison it), so feature terms are added only
-    for linear models."""
-    pred: Column = terms[0]
-    if not mean_only:
-        for i, c in enumerate(feature_cols):
-            pred = pred + terms[i + 1] * F.col(c).cast("double")
-    return pred
+def _linear_pred(terms: str, feature_cols: Sequence[str]) -> str:
+    """SQL text of ``terms[0] + Σ terms[i+1]·xᵢ``, where ``terms`` is the
+    SQL text of a ``[intercept, coef...]`` array. MeanRegressor passes no
+    features: it ignores X entirely (NaN features must not poison it)."""
+    return f"{terms}[0]" + "".join(
+        f" + {terms}[{i + 1}] * CAST({sql_ident(c)} AS DOUBLE)"
+        for i, c in enumerate(feature_cols)
+    )
 
 
 def linear_predict_frame(
@@ -384,10 +384,10 @@ def linear_predict_frame(
     families = {type(m) is MeanRegressor for m in fitted_estimators}
     if len(families) > 1:
         return None  # mixed families: keep the generic path
-    mean_only = families == {True}
-    row = _literal_table(terms, 2)[F.col("fold_id")]
-    pred = _linear_pred(row, feature_cols, mean_only)
-    return assigned.select(*out_fields, pred.alias(output_col))
+    row = _literal_table(terms, 2) + "[fold_id]"
+    pred = _linear_pred(row, [] if families == {True} else feature_cols)
+    out = f"{pred} AS {sql_ident(output_col)}"
+    return assigned.selectExpr(*map(sql_ident, out_fields), out)
 
 
 def scaler_transform_frame(
@@ -409,14 +409,14 @@ def scaler_transform_frame(
         [float(x) for x in np.asarray(m.mean_).reshape(-1)]
         + [float(x) for x in np.asarray(m.scale_).reshape(-1)]
         for m in fitted_estimators
-    ], 2)[F.col("fold_id")]
-    arr = F.array(
-        *[
-            (F.col(c).cast("double") - params[i]) / params[d + i]
-            for i, c in enumerate(feature_cols)
-        ]
+    ], 2) + "[fold_id]"
+    arr = ", ".join(
+        f"(CAST({sql_ident(c)} AS DOUBLE) - {params}[{i}])"
+        f" / {params}[{d + i}]"
+        for i, c in enumerate(feature_cols)
     )
-    return assigned.select(*out_fields, arr.alias(output_col))
+    out = f"array({arr}) AS {sql_ident(output_col)}"
+    return assigned.selectExpr(*map(sql_ident, out_fields), out)
 
 
 def _grid_score_frame(
@@ -444,16 +444,17 @@ def _grid_score_frame(
         "role",
         "fold_id",
         # NULL→NaN so Spark aggregates reproduce numpy poisoning
-        F.coalesce(F.col(y_col).cast("double"), nan).alias("__y"),
-        *feats,
-        F.posexplode(_literal_table(by_fold, 3)[F.col("fold_id")]).alias(
-            "__cand", "__b"
+        F.coalesce(F.col(sql_ident(y_col)).cast("double"), nan).alias("__y"),
+        *map(F.col, map(sql_ident, feats)),
+        F.expr(
+            f"posexplode({_literal_table(by_fold, 3)}[fold_id])"
+            " AS (__cand, __b)"
         ),
     )
+    pred = _linear_pred("__b", [] if mean_like else feats)
     base = cand.select(
         "__cand", "role", "fold_id", "__y",
-        F.coalesce(_linear_pred(F.col("__b"), feats, mean_like), nan)
-        .alias("__p"),
+        F.coalesce(F.expr(pred), nan).alias("__p"),
     )
     aggs = []
     for mname, key in metrics.items():
@@ -533,12 +534,7 @@ def sweep_scores(
         for e in estimators
     ]
 
-    needed = list(dict.fromkeys(feats + [y_col]))
-    if cv.period_col not in needed:
-        needed.append(cv.period_col)
-    if cv.snapshot_col and cv.snapshot_col not in needed:
-        needed.append(cv.snapshot_col)
-    assigned = cv.assign(df.select(*needed), roles=tuple(roles))
+    assigned = cv.assign_columns(df, [*feats, y_col], tuple(roles))
     grid = _grid_score_frame(assigned, models_per_cand, feats, y_col,
                              metrics)
     if grid is None:

@@ -35,6 +35,7 @@ from typing import Any, Dict, List, Optional, Sequence, Tuple
 from pyspark.sql import DataFrame, functions as F
 
 from ..estimators import StandardScaler, clone
+from ..functions.sql import sql_ident
 from .application import apply_model, cross_val_fit, cross_val_predict
 from .cross_validation import PanelSplit
 
@@ -428,11 +429,9 @@ class SequentialCVPipeline:
 
     def _expand(self, df: DataFrame, name: str, width: int,
                 keep: Sequence[str]) -> Tuple[DataFrame, List[str]]:
-        new_feats = [f"{name}__f{j}" for j in range(width)]
-        cols = [F.col(c) for c in keep] + [
-            F.col("__out")[j].alias(new_feats[j]) for j in range(width)
-        ]
-        return df.select(*cols), new_feats
+        feats = [f"{name}__f{j}" for j in range(width)]
+        outs = [f"__out[{j}] AS {sql_ident(f)}" for j, f in enumerate(feats)]
+        return df.selectExpr(*map(sql_ident, keep), *outs), feats
 
     def _transform_single(self, model, df: DataFrame,
                           features: Sequence[str], name: str):

@@ -14,7 +14,7 @@ from typing import Dict, List, Sequence
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-from ..functions.hashing import word_ngrams, word_tokens
+from ..functions.hashing import adjacent_pairs, word_ngrams, word_tokens
 
 __all__ = [
     "STOPWORDS",
@@ -439,20 +439,7 @@ def lm_bigram_score(
     toks = _tok(text_col)
     pairs = df.select(
         F.col(id_col),
-        F.explode(
-            F.when(
-                F.size(toks) >= 2,
-                F.transform(
-                    F.sequence(F.lit(1), F.size(toks) - 1),
-                    lambda i: F.struct(
-                        F.element_at(toks, i).alias("w1"),
-                        F.element_at(toks, i + 1).alias("w2"),
-                    ),
-                ),
-            ).otherwise(
-                F.array().cast("array<struct<w1:string,w2:string>>")
-            )
-        ).alias("p"),
+        F.explode(adjacent_pairs(toks, "w1", "w2")).alias("p"),
     ).select(id_col, F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
     bigrams = pairs.groupBy("w1", "w2").agg(
         F.count(F.lit(1)).alias("cb")

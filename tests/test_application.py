@@ -706,3 +706,67 @@ def test_closed_form_apply_and_sweep_plans_have_no_broadcast(spark):
             )
         want = [sum(v) / len(v) for _, v in sorted(by_fold.items())]
         assert folded[(ci, "test", "mse")] == pytest.approx(want)
+
+
+def _estimators_with_fake_sklearn(monkeypatch):
+    """A fresh copy of ``panelsplit_spark.estimators`` imported while a
+    fake ``sklearn.base`` is installed (sklearn itself is optional)."""
+    import importlib.util
+    import sys
+    import types
+
+    import panelsplit_spark.estimators as est
+
+    base = types.ModuleType("sklearn.base")
+
+    class BaseEstimator:
+        fail = False
+
+    def sk_clone(e):
+        if e.fail:
+            raise RuntimeError("sklearn clone failed")
+        return ("sklearn-clone", e)
+
+    base.BaseEstimator, base.clone = BaseEstimator, sk_clone
+    pkg = types.ModuleType("sklearn")
+    pkg.base = base
+    monkeypatch.setitem(sys.modules, "sklearn", pkg)
+    monkeypatch.setitem(sys.modules, "sklearn.base", base)
+    spec = importlib.util.spec_from_file_location("_est_sk", est.__file__)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod, BaseEstimator
+
+
+def test_clone_routes_only_sklearn_estimators_to_sklearn(monkeypatch):
+    mod, SkEstimator = _estimators_with_fake_sklearn(monkeypatch)
+    sk = SkEstimator()
+    assert mod.clone(sk) == ("sklearn-clone", sk)
+    sk.fail = True
+    with pytest.raises(RuntimeError, match="sklearn clone failed"):
+        mod.clone(sk)
+    own = mod.Ridge(alpha=3.0)
+    twin = mod.clone(own)
+    assert type(twin) is mod.Ridge and twin is not own
+    assert twin.get_params() == own.get_params()
+
+
+def test_clone_without_sklearn_imports_nothing(monkeypatch):
+    """sklearn is resolved once at import: a clone() call attempts no
+    import, so it pays no failed import when sklearn is absent."""
+    import builtins
+
+    import panelsplit_spark.estimators as est
+
+    seen = []
+    real_import = builtins.__import__
+
+    def spy(name, *args, **kwargs):
+        seen.append(name)
+        return real_import(name, *args, **kwargs)
+
+    monkeypatch.setattr(builtins, "__import__", spy)
+    twin = est.clone(est.Ridge(alpha=2.0))
+    monkeypatch.undo()
+    assert twin.alpha == 2.0
+    assert not [n for n in seen if n.startswith("sklearn")], seen

@@ -1,6 +1,8 @@
 """The two dedup kernels on the corpus_dedup hot path: word n-gram
 shingles (``functions/hashing.word_ngrams``) and min-label connected
-components (``operators/dedup.connected_components``).
+components (``operators/dedup.connected_components``), plus the
+adjacent-pair kernel (``functions/hashing.adjacent_pairs``) behind the
+bigram language model and BPE pair counts.
 
 ``word_ngrams`` is checked against the plain-Python reference on the
 degenerate texts (NULL, empty, short, irregular spacing) and pinned to
@@ -16,7 +18,12 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from panelsplit_spark.functions.hashing import word_ngrams, word_tokens
+from panelsplit_spark.functions.hashing import (
+    adjacent_pairs,
+    word_ngrams,
+    word_tokens,
+)
+from panelsplit_spark.operators import bpe, text
 from panelsplit_spark.operators.dedup import connected_components
 
 TEXTS = [
@@ -78,6 +85,61 @@ def test_word_ngrams_lambda_never_retokenizes(spark, n):
     assert bodies, expr
     for body in bodies:
         assert "split(" not in body and "lower(" not in body, body
+
+
+def test_adjacent_pairs_match_python_reference(spark):
+    df = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(TEXTS)], "i int, text string"
+    )
+    got = {
+        r["i"]: [(p["w1"], p["w2"]) for p in r["g"]]
+        for r in df.select(
+            "i", adjacent_pairs(word_tokens(F.col("text")), "w1", "w2")
+            .alias("g")
+        ).collect()
+    }
+    want = {}
+    for i, t in enumerate(TEXTS):
+        toks = [] if t is None else t.lower().split(" ")
+        want[i] = list(zip(toks, toks[1:]))
+    assert got == want
+
+
+def _plan_lambda_bodies(plan: str):
+    """The argument text of every ``lambdafunction(...)`` in a rendered
+    logical plan: the lambda body followed by its bound variables."""
+    out = []
+    for m in re.finditer(r"lambdafunction\(", plan):
+        depth, j = 0, m.end()
+        while j < len(plan) and depth >= 0:
+            depth += {"(": 1, ")": -1}.get(plan[j], 0)
+            j += 1
+        out.append(plan[m.end():j - 1])
+    return out
+
+
+def _bigram_plan(spark):
+    docs = spark.createDataFrame(
+        [(1, "a b c a b"), (2, "b c d")], "doc_id int, text string"
+    )
+    return text.lm_bigram_score(docs)
+
+
+def _bpe_pair_plan(spark):
+    reprs = spark.createDataFrame([("|c||a||t|", 3)], "rep string, wt long")
+    return bpe._pair_counts(reprs)
+
+
+@pytest.mark.parametrize("build", [_bigram_plan, _bpe_pair_plan])
+def test_pair_sites_lambda_never_resplits(spark, build):
+    """The bigram LM and BPE pair counts zip two slices of the split
+    text: a ``split`` inside the lambda body re-splits the text for
+    every pair, O(words²) per document."""
+    plan = build(spark)._jdf.queryExecution().analyzed().toString()
+    bodies = _plan_lambda_bodies(plan)
+    assert bodies, plan
+    for body in bodies:
+        assert "split(" not in body, body
 
 
 def _cc(spark, edges, **kw):

@@ -1,0 +1,151 @@
+"""py4j round trips of the closed-form CV fast path, and the identifier
+quoting its SQL-text expressions rely on.
+
+Each wide expression of the fast path (the moment aggregates, the
+prediction and scaler projections, the pipeline's feature expansion) is
+built as SQL text and parsed JVM-side in one call; composed through the
+Column API it cost several py4j round trips per node. The budgets pin
+the SQL-text form with headroom (measured: cube 304, each projection 8,
+pipeline fit 400); the Column-API form measured 2916, 523 / 615 and 4240.
+"""
+
+import numpy as np
+import pytest
+
+from helpers import count_py4j
+from panelsplit_spark import (
+    LinearRegression,
+    PanelSplit,
+    Ridge,
+    SequentialCVPipeline,
+    StandardScaler,
+    cross_val_fit,
+    cross_val_predict,
+)
+from panelsplit_spark.operators.linear_fastpath import (
+    linear_predict_frame,
+    scaler_transform_frame,
+    suffstats_fit,
+)
+
+N_FEATURES = 8
+
+
+def _panel(spark, names=None, y="y"):
+    names = names or [f"x{i}" for i in range(N_FEATURES)]
+    rng = np.random.default_rng(7)
+    rows = []
+    for rid in range(240):
+        x = rng.normal(size=len(names))
+        rows.append(
+            (rid, rid % 12, *map(float, x),
+             float(x @ np.arange(1, len(names) + 1) + rng.normal()))
+        )
+    df = spark.createDataFrame(rows, ["rid", "period", *names, y])
+    return df, names
+
+
+@pytest.fixture(scope="module")
+def panel(spark):
+    df, feats = _panel(spark)
+    return df, feats, PanelSplit(df, "period", n_splits=3)
+
+
+def _scale_ridge(df, feats, y, ps):
+    """The scaler step's OOF output starts with the first fold's train
+    periods, so the ridge step's folds all have train rows."""
+    ps_scale = PanelSplit(
+        df, "period", n_splits=3, include_first_train_in_test=True
+    )
+    return SequentialCVPipeline(
+        [("scale", StandardScaler()), ("ridge", Ridge(alpha=1.0))],
+        [ps_scale, ps], feats, y_col=y,
+    )
+
+
+def test_moment_cube_build_round_trips(spark, panel):
+    _, feats, ps = panel
+    df = _panel(spark)[0]  # a new frame: the weakly keyed cube cache is cold
+    with count_py4j() as n:
+        models = suffstats_fit(LinearRegression(), df, feats, "y", ps)
+    assert len(models) == 3
+    assert n.calls <= 400, n.calls
+
+
+def _assigned(df, feats, ps):
+    return ps.assign(df.select("rid", "period", *feats), roles=("test",))
+
+
+def test_linear_predict_frame_round_trips(panel):
+    df, feats, ps = panel
+    models = cross_val_fit(LinearRegression(), df, feats, "y", ps)
+    assigned = _assigned(df, feats, ps)
+    with count_py4j() as n:
+        out = linear_predict_frame(
+            assigned, models, feats, "predict", ["rid", "fold_id"],
+            "prediction",
+        )
+    assert out.columns == ["rid", "fold_id", "prediction"]
+    assert n.calls <= 40, n.calls
+
+
+def test_scaler_transform_frame_round_trips(panel):
+    df, feats, ps = panel
+    models = cross_val_fit(StandardScaler(), df, feats, "y", ps)
+    assigned = _assigned(df, feats, ps)
+    with count_py4j() as n:
+        out = scaler_transform_frame(
+            assigned, models, feats, ["rid", "fold_id"], "scaled"
+        )
+    assert out.columns == ["rid", "fold_id", "scaled"]
+    assert n.calls <= 40, n.calls
+
+
+def test_two_step_pipeline_fit_round_trips(panel):
+    df, feats, ps = panel
+    pipe = _scale_ridge(df, feats, "y", ps)
+    with count_py4j() as n:
+        pipe.fit(df)
+    assert n.calls <= 800, n.calls
+
+
+# a backtick, a space and a dot in every feature, target and output name
+ODD = ["x`0 a.b", "x 1.c", "x.2`"]
+ODD_Y, ODD_OUT = "y.`t v", "p` .q"
+
+
+def _by_rid(rows, col):
+    return {r["rid"]: r[col] for r in rows}
+
+
+def test_odd_column_names_match_plain_names(spark):
+    """The fast path quotes every name it writes into SQL text: odd
+    names give exactly the values the same data gives under plain
+    names."""
+    plain, feats = _panel(spark, [f"x{i}" for i in range(3)])
+    odd = plain.toDF("rid", "period", *ODD, ODD_Y)
+    ps_plain = PanelSplit(plain, "period", n_splits=3)
+    ps_odd = PanelSplit(odd, "period", n_splits=3)
+
+    def oof(df, fs, y, ps, est, method, out):
+        models = cross_val_fit(est, df, fs, y, ps)
+        return _by_rid(
+            cross_val_predict(
+                models, df, fs, ps, method=method, output_col=out
+            ).collect(),
+            out,
+        )
+
+    for est, method in ((LinearRegression(), "predict"),
+                        (StandardScaler(), "transform")):
+        want = oof(plain, feats, "y", ps_plain, est, method, "prediction")
+        got = oof(odd, ODD, ODD_Y, ps_odd, est, method, ODD_OUT)
+        assert got == want, method
+
+    def piped(df, fs, y, ps):
+        pipe = _scale_ridge(df, fs, y, ps).fit(df)
+        return _by_rid(pipe.predict_df(df).collect(), "prediction")
+
+    assert piped(odd, ODD, ODD_Y, ps_odd) == piped(
+        plain, feats, "y", ps_plain
+    )

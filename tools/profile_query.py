@@ -7,6 +7,9 @@ passes of the bench's own action (`.count()`), and optionally also a
 noop-sink pass (guide §1.4: computes every column, isolates the
 computation from count's column pruning). Writes
 `.explain("formatted")` for each query to --plans-dir when given.
+Each pass also counts the py4j round trips made while the query is
+built (the query function call, before the action), printed as
+`py4j=[...]` beside the timings.
 
 Usage:
   python tools/profile_query.py [--sf-dir D] [--passes N] [--noop]
@@ -24,6 +27,7 @@ import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.join(REPO, "tests"))
 
 
 def main() -> int:
@@ -44,6 +48,7 @@ def main() -> int:
 
     import __spark_entry__ as entrymod
     import bench as benchmod
+    from helpers import count_py4j
     from panelsplit_spark.utils.storage import release_all_pinned
 
     spark = (
@@ -84,12 +89,15 @@ def main() -> int:
             except Exception:
                 pass
             release_all_pinned(spark)
-        times = []
+        times, trips = [], []
         for _ in range(ns.passes):
             spark.sparkContext.setJobDescription(f"profile:{name}")
             t0 = time.time()
-            fn(spark, ns.sf_dir).count()
+            with count_py4j() as n:
+                df = fn(spark, ns.sf_dir)
+            df.count()
             times.append(round(time.time() - t0, 3))
+            trips.append(n.calls)
             release_all_pinned(spark)
         extra = ""
         if ns.noop:
@@ -110,7 +118,7 @@ def main() -> int:
                 fh.write(txt)
             release_all_pinned(spark)
             extra += f"  plan={path}"
-        print(f"{name}: passes={times}{extra}", flush=True)
+        print(f"{name}: passes={times} py4j={trips}{extra}", flush=True)
     spark.stop()
     return 0
 
