@@ -35,6 +35,7 @@ from ..plans.fold_spec import (
     purged_kfold_bounds,
     spark_order_key,
 )
+from .linear_fastpath import _memo
 from .timeseries import dec38, exact_line
 
 __all__ = [
@@ -56,14 +57,20 @@ def distinct_periods(df: DataFrame, period_col: str) -> List[Any]:
     """Sorted distinct non-NULL values of ``period_col``: one
     distinct aggregate job (partial aggregation map-side, only distinct
     values cross the wire), sorted on the driver in Spark's order (NaN
-    last) — #periods ≪ #rows, so a Spark sort would only add jobs."""
-    rows = (
-        df.select(F.col(period_col).alias("p"))
-        .where(F.col(period_col).isNotNull())
-        .distinct()
-        .collect()
-    )
-    return sorted((r["p"] for r in rows), key=spark_order_key)
+    last) — #periods ≪ #rows, so a Spark sort would only add jobs.
+    Memoised per frame and column in the memo that holds the frame's
+    moment cubes, so two splitters on one frame collect once."""
+
+    def collect() -> List[Any]:
+        rows = (
+            df.select(F.col(period_col).alias("p"))
+            .where(F.col(period_col).isNotNull())
+            .distinct()
+            .collect()
+        )
+        return sorted((r["p"] for r in rows), key=spark_order_key)
+
+    return list(_memo(df, ("periods", period_col), collect))
 
 
 def explode_memberships(

@@ -26,6 +26,14 @@ Every wide expression here is SQL text parsed JVM-side in one call
 (see ``functions/sql.py``): the same trees and plans as the Column API,
 without its py4j round trip per node.
 
+A CV StandardScaler step is affine within each fold, so the moments of
+the frame it outputs follow from the moments of its input: a cube can
+be read through a view (a chain of :class:`AffineStep`), which gives
+each cube row one affine map per scaler fold whose OOF group holds its
+period. A scaler → linear pipeline therefore fits every step from the
+raw frame's one cube, without building the scaler's OOF frame (see
+``docs/SCALE_NOTES.md``, "Moment propagation").
+
 The produced models are ordinary estimator objects (coef_/intercept_/
 mean_ set), indistinguishable from pandas-path fits to downstream code.
 """
@@ -49,8 +57,13 @@ from ..estimators import (
     clone,
 )
 from ..functions.sql import sql_ident, sql_literal
+from ..plans.fold_spec import FoldSpec
 
-__all__ = ["suffstats_fit", "linear_predict_frame", "sweep_scores", "logistic_irls", "glm_irls", "huber_irls"]
+__all__ = [
+    "AffineStep", "scaler_view_step", "suffstats_fit",
+    "linear_predict_frame", "sweep_scores", "logistic_irls", "glm_irls",
+    "huber_irls",
+]
 
 # Per-period moment cubes are a function of (data, columns, period and
 # snapshot column, and the splitter's train scope: its raw scan range
@@ -60,9 +73,21 @@ __all__ = ["suffstats_fit", "linear_predict_frame", "sweep_scores", "logistic_ir
 # aggregate: every fit resolves from the cached cube with a numpy
 # product and an O(d³) driver solve. Weak keying on the frame scopes
 # cache lifetime to it; the lock makes concurrent candidate threads
-# (BaseSearch n_jobs) compute the aggregate once and share it.
+# (BaseSearch n_jobs) compute the aggregate once and share it. The same
+# memo holds each frame's distinct periods (``cross_validation.
+# distinct_periods``), so ``release_all_pinned`` clears both at once.
 _MOMENT_CACHE: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 _CACHE_LOCK = threading.Lock()
+
+
+def _memo(df: DataFrame, key: Any, compute) -> Any:
+    """``compute()`` once per frame and ``key``, under the lock."""
+    with _CACHE_LOCK:
+        per_df = _MOMENT_CACHE.setdefault(df, {})
+        if key not in per_df:
+            per_df[key] = compute()
+        return per_df[key]
+
 
 #: fast path covers at most this many features (d² aggregate columns)
 _MAX_FEATURES = 16
@@ -167,6 +192,102 @@ def _fold_moments(
     )
 
 
+@dataclass(frozen=True)
+class AffineStep:
+    """A fitted CV StandardScaler step as the frame it outputs sees its
+    input: each row of a period in fold ``k``'s ``role`` group appears
+    once per such fold, mapped to ``(x − mean[k]) / scale[k]``."""
+
+    spec: FoldSpec
+    period_col: str
+    role: str
+    mean: np.ndarray  # fold × feature
+    scale: np.ndarray  # fold × feature
+
+
+def _plain_splitter(cv) -> bool:
+    """Fold membership is a function of the period alone: no snapshot
+    column and no scan mapping."""
+    return cv.snapshot_col is None and not (cv.scan_col and cv.period_bounds)
+
+
+def scaler_view_step(
+    models: List[Any], cv, role: str
+) -> Optional[AffineStep]:
+    """The :class:`AffineStep` of CV scaler ``models`` fitted under
+    ``cv`` whose ``role`` group flows on, or ``None`` when a view cannot
+    stand for their OOF frame (another model type, or a splitter whose
+    membership is not a function of the period)."""
+    if not _plain_splitter(cv) or any(
+        type(m) is not StandardScaler or m.mean_ is None for m in models
+    ):
+        return None
+    return AffineStep(
+        spec=cv.spec,
+        period_col=cv.period_col,
+        role=role,
+        mean=np.array([np.asarray(m.mean_, float) for m in models]),
+        scale=np.array([np.asarray(m.scale_, float) for m in models]),
+    )
+
+
+def _affine_cube(
+    cube: _MomentCube, view: Sequence[AffineStep], d: int
+) -> Optional[_MomentCube]:
+    """The cube of the frame the scaler chain ``view`` outputs, from the
+    cube of its input. Each cube row carries a list of affine maps
+    ``x ↦ (x − μ) / s``, starting at the identity; a step replaces every
+    map by its composition with each fold whose group holds the row's
+    period (``μ + s·μₖ``, ``s·sₖ``), so a period in no group drops out,
+    flags included. Per map, with n and Σy unchanged:
+
+        Σz   = (Σx − n·μ) / s
+        Σzy  = (Σxy − μ·Σy) / s
+        Σzzᵀ = (Σxxᵀ − Σx μᵀ − μ Σxᵀ + n μμᵀ) / (s sᵀ)
+
+    and a row's moments are the sum over its maps. A period with a NULL
+    x keeps its flag, which poisons every fit that reads its x sums.
+    ``None`` when a moment or a scaler parameter the maps read is not
+    finite: Inf − Inf here differs from summing the scaled rows."""
+    rows = np.arange(len(cube.periods))
+    mu, s = np.zeros((len(rows), d)), np.ones((len(rows), d))
+    for step in view:
+        member = step.spec.member_matrix(cube.periods, role=step.role)
+        fold, pair = np.nonzero(member[:, rows])
+        rows = rows[pair]
+        mu = mu[pair] + s[pair] * step.mean[fold]
+        s = s[pair] * step.scale[fold]
+    base = cube.sums[rows]
+    if not (np.isfinite(base).all() and np.isfinite(mu).all()
+            and np.isfinite(s).all()):
+        return None
+    at = {c: k for k, c in enumerate(cube.cols)}
+    iu, ju = np.triu_indices(d)
+    x_at = [at[f"sx_{i}"] for i in range(d)]
+    xy_at = [at[f"sxy_{i}"] for i in range(d)]
+    xx_at = [at[f"sxx_{i}_{j}"] for i, j in zip(iu, ju)]
+    n, sy, sx = base[:, [at["n"]]], base[:, [at["sy"]]], base[:, x_at]
+    out = base.copy()
+    out[:, x_at] = (sx - n * mu) / s
+    out[:, xy_at] = (base[:, xy_at] - mu * sy) / s
+    out[:, xx_at] = (
+        base[:, xx_at] - sx[:, iu] * mu[:, ju] - mu[:, iu] * sx[:, ju]
+        + n * mu[:, iu] * mu[:, ju]
+    ) / (s[:, iu] * s[:, ju])
+    if not np.isfinite(out).all():
+        return None
+    sums = np.zeros_like(cube.sums)
+    np.add.at(sums, rows, out)
+    keep = np.unique(rows)
+    return _MomentCube(
+        periods=[cube.periods[r] for r in keep],
+        snapshots=None,
+        cols=cube.cols,
+        sums=sums[keep],
+        nulls=cube.nulls[keep],
+    )
+
+
 def _masked_sum(member: np.ndarray, values: np.ndarray) -> np.ndarray:
     """``member @ values`` for a 0/1 ``member`` matrix, except that a 0
     leaves the row out instead of multiplying it by 0 (0·NaN and 0·Inf
@@ -193,27 +314,28 @@ def _moment_rows(
     sample_weight_col: Optional[str],
     drop_na_in_y: bool,
     null_rule: str,
-) -> dict:
+    view: Sequence[AffineStep] = (),
+) -> Optional[dict]:
     """Per-fold moment rows for ``cv``'s train sets, from the frame's
     memoised cube: ``{fold_id: {"n", "sy", "sx_i", ..., "has_null"}}``,
     folds without train rows left out. The cube covers only the rows
     inside the splitter's train scope (scan range, snapshot values),
-    which is part of the memo key."""
+    which is part of the memo key. A non-empty ``view`` reads the cube
+    through that scaler chain first; ``None`` when it cannot."""
     where, scope = cv._train_scope(df)
     key = (
         tuple(feats), y_col, sample_weight_col, bool(drop_na_in_y),
         cv.period_col, cv.snapshot_col, scope,
     )
-    with _CACHE_LOCK:
-        per_df = _MOMENT_CACHE.setdefault(df, {})
-        cube = per_df.get(key)
+    cube = _memo(df, key, lambda: _fold_moments(
+        df, cv.period_col, cv.snapshot_col, feats, y_col,
+        sample_weight_col, drop_na_in_y, where,
+    ))
+    if view:
+        cube = _affine_cube(cube, view, len(feats))
         if cube is None:
-            cube = _fold_moments(
-                df, cv.period_col, cv.snapshot_col, feats, y_col,
-                sample_weight_col, drop_na_in_y, where,
-            )
-            per_df[key] = cube
-    member = cv.spec.train_matrix(cube.periods, cube.snapshots)
+            return None
+    member = cv.spec.member_matrix(cube.periods, cube.snapshots)
     sums = _masked_sum(member, cube.sums)
     # columns of cube.nulls: x, y, weight
     poison = {"x": [0, 2], "y": [1, 2], "xy": [0, 1, 2]}[null_rule]
@@ -232,20 +354,33 @@ def suffstats_fit(
     cv,
     sample_weight_col: Optional[str] = None,
     drop_na_in_y: bool = False,
+    view: Sequence[AffineStep] = (),
 ) -> Optional[List[Any]]:
     """Fit one clone per fold from per-fold moment aggregates; returns
     the fitted models in fold order, or ``None`` when the estimator is
     outside the closed-form family (caller falls back to the grouped
-    pandas fit)."""
+    pandas fit).
+
+    With a ``view``, fit on the OOF output of that scaler chain over
+    ``df`` instead, from ``df``'s own cube; also ``None`` when the view
+    cannot stand for that frame: ``cv`` or a step keyed by another
+    period column, ``cv`` not a plain splitter, or a non-finite value."""
     if y_col is None or not _eligible_fit(estimator):
         return None
     feats = list(feature_cols)
     if len(feats) > _MAX_FEATURES:
         return None
+    if view and not (
+        _plain_splitter(cv)
+        and all(step.period_col == cv.period_col for step in view)
+    ):
+        return None
     rows = _moment_rows(
         df, cv, feats, y_col, sample_weight_col, drop_na_in_y,
-        _null_rule(estimator),
+        _null_rule(estimator), view,
     )
+    if rows is None:
+        return None
     return _solve_from_moments(estimator, rows, feats, cv.n_splits)
 
 
@@ -429,7 +564,7 @@ def _grid_score_frame(
     """Every candidate × fold × metric aggregate of ``assigned`` in one
     grouped pass: each row is paired with every candidate by exploding
     its fold's literal ``[candidate][intercept, coef...]`` array."""
-    from .metrics import metric_agg_expr
+    from .metrics import SQL_NAN, metric_agg_expr, r2_parts
 
     mean_like = type(models_per_cand[0][0]) is MeanRegressor
     n_folds = len(models_per_cand[0])
@@ -439,39 +574,29 @@ def _grid_score_frame(
         if any(t is None for t in terms):
             return None
         by_fold.append(terms)
-    nan = F.lit(float("nan"))
-    cand = assigned.select(
+    cand = assigned.selectExpr(
         "role",
         "fold_id",
         # NULL→NaN so Spark aggregates reproduce numpy poisoning
-        F.coalesce(F.col(sql_ident(y_col)).cast("double"), nan).alias("__y"),
-        *map(F.col, map(sql_ident, feats)),
-        F.expr(
-            f"posexplode({_literal_table(by_fold, 3)}[fold_id])"
-            " AS (__cand, __b)"
-        ),
+        f"coalesce(CAST({sql_ident(y_col)} AS DOUBLE), {SQL_NAN}) AS __y",
+        *map(sql_ident, feats),
+        f"posexplode({_literal_table(by_fold, 3)}[fold_id])"
+        " AS (__cand, __b)",
     )
     pred = _linear_pred("__b", [] if mean_like else feats)
-    base = cand.select(
+    base = cand.selectExpr(
         "__cand", "role", "fold_id", "__y",
-        F.coalesce(F.expr(pred), nan).alias("__p"),
+        f"coalesce({pred}, {SQL_NAN}) AS __p",
     )
-    aggs = []
-    for mname, key in metrics.items():
-        if key != "r2":
-            aggs.append(
-                metric_agg_expr(
-                    key, F.col("__y"), F.col("__p"), nan_aware=True
-                ).alias(f"__m_{mname}")
-            )
+    aggs = [
+        f"{metric_agg_expr(key, '__y', '__p', nan_aware=True)}"
+        f" AS {sql_ident(f'__m_{mname}')}"
+        for mname, key in metrics.items()
+        if key != "r2"
+    ]
     if "r2" in metrics.values():
-        aggs += [
-            F.sum((F.col("__y") - F.col("__p")) ** 2).alias("__ss_res"),
-            F.sum(F.col("__y") ** 2).alias("__ss_y2"),
-            F.sum("__y").alias("__s_y"),
-            F.count(F.lit(1)).alias("__n"),
-        ]
-    return base.groupBy("__cand", "role", "fold_id").agg(*aggs)
+        aggs += r2_parts("__y", "__p", prefix="__")
+    return base.groupBy("__cand", "role", "fold_id").agg(*map(F.expr, aggs))
 
 
 def sweep_scores(

@@ -25,6 +25,8 @@ from typing import Any, Callable, Dict, List, Optional, Sequence
 import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
+from ..functions.sql import sql_ident
+
 __all__ = [
     "make_SequentialCV_scorer",
     "get_scorer",
@@ -640,18 +642,27 @@ def fowlkes_mallows_score(labels_true, labels_pred):
 # SQL fast-path expressions (Catalyst aggregates — zero Python)
 # ----------------------------------------------------------------------
 
-_SQL_METRICS: Dict[str, Callable[[Any, Any], Any]] = {
-    "mse": lambda y, p: F.avg((y - p) ** 2),
-    "rmse": lambda y, p: F.sqrt(F.avg((y - p) ** 2)),
-    "mae": lambda y, p: F.avg(F.abs(y - p)),
-    "max_error": lambda y, p: F.max(F.abs(y - p)),
-    "accuracy": lambda y, p: F.avg((y == p).cast("double")),
-    "medae": lambda y, p: F.median(F.abs(y - p)),
+#: a NaN double literal, folded by the optimizer like ``F.lit(nan)``
+SQL_NAN = "CAST('NaN' AS DOUBLE)"
+
+#: each fast-path metric as SQL text over the SQL text of y and p, so an
+#: aggregate is parsed JVM-side in one call (see ``functions/sql.py``);
+#: ``power`` is what the Column API's ``** 2`` renders as
+_SQL_METRICS: Dict[str, str] = {
+    "mse": "avg(power({y} - {p}, 2))",
+    "rmse": "sqrt(avg(power({y} - {p}, 2)))",
+    "mae": "avg(abs({y} - {p}))",
+    "max_error": "max(abs({y} - {p}))",
+    "accuracy": "avg(CAST({y} = {p} AS DOUBLE))",
+    "medae": "median(abs({y} - {p}))",
 }
 
 
-def metric_agg_expr(name: str, y, p, nan_aware: bool = False):
-    """Aggregate Column for a fast-path metric.
+def metric_agg_expr(
+    name: str, y: str, p: str, nan_aware: bool = False
+) -> str:
+    """SQL text of the aggregate for a fast-path metric over the SQL
+    text ``y`` and ``p``.
 
     ``nan_aware=True`` (use whenever y/p are doubles that may hold NaN —
     i.e. after the NULL→NaN normalization) patches the two metrics whose
@@ -666,18 +677,30 @@ def metric_agg_expr(name: str, y, p, nan_aware: bool = False):
     The arithmetic metrics (mse/rmse/mae/max_error) already propagate
     NaN through ``avg``/``max`` like numpy does.
     """
+    nan_in = f"isnan({y}) OR isnan({p})"
     if nan_aware and name == "accuracy":
-        return F.avg(
-            F.when(F.isnan(y) | F.isnan(p), F.lit(0.0)).otherwise(
-                (y == p).cast("double")
-            )
+        return (
+            f"avg(CASE WHEN {nan_in} THEN 0.0D "
+            f"ELSE CAST({y} = {p} AS DOUBLE) END)"
         )
     if nan_aware and name == "medae":
-        any_nan = F.max((F.isnan(y) | F.isnan(p)).cast("int")) == 1
-        return F.when(any_nan, F.lit(float("nan"))).otherwise(
-            F.median(F.abs(y - p))
+        return (
+            f"CASE WHEN max(CAST({nan_in} AS INT)) = 1 THEN {SQL_NAN} "
+            f"ELSE median(abs({y} - {p})) END"
         )
-    return _SQL_METRICS[name](y, p)
+    return _SQL_METRICS[name].format(y=y, p=p)
+
+
+def r2_parts(y: str, p: str, prefix: str = "") -> List[str]:
+    """SQL text of the four sums r2 is computed from, named ``ss_res``,
+    ``ss_y2``, ``s_y`` and ``n`` after ``prefix``:
+    r2 = 1 − ss_res / (ss_y2 − s_y² / n)."""
+    return [
+        f"sum(power({y} - {p}, 2)) AS {prefix}ss_res",
+        f"sum(power({y}, 2)) AS {prefix}ss_y2",
+        f"sum({y}) AS {prefix}s_y",
+        f"count(1) AS {prefix}n",
+    ]
 
 
 def _fastpath_name(metric: Any, metric_kwargs: dict) -> Optional[str]:
@@ -723,7 +746,6 @@ def per_fold_scores(
         # reference's poisoning semantics exactly (NaN is a double value
         # Spark does NOT skip). Non-numeric label columns (accuracy on
         # strings) are left as-is.
-        nan = F.lit(float("nan"))
         dtypes = dict(preds.dtypes)
         num = ("double", "float", "int", "bigint", "smallint", "tinyint")
         nanified = False
@@ -731,26 +753,18 @@ def per_fold_scores(
             if dtypes.get(c, "").startswith(num) or dtypes.get(
                 c, ""
             ).startswith("decimal"):
-                preds = preds.withColumn(
-                    c, F.coalesce(F.col(c).cast("double"), nan)
-                )
+                preds = preds.withColumn(c, F.expr(
+                    f"coalesce(CAST({sql_ident(c)} AS DOUBLE), {SQL_NAN})"
+                ))
                 nanified = True
+    y, p = sql_ident(y_col), sql_ident(pred_col)
     if isinstance(metric, str) and metric == "r2":
         # decomposed algebraically: 1 - Σ(y-p)² / Σ(y-ȳ_g)², with the group
         # mean folded in via sums — single aggregation, no window
-        g = preds.groupBy(fold_col).agg(
-            F.sum((F.col(y_col) - F.col(pred_col)) ** 2).alias("ss_res"),
-            F.sum(F.col(y_col) ** 2).alias("ss_y2"),
-            F.sum(F.col(y_col)).alias("s_y"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        return g.select(
-            fold_col,
-            (
-                F.lit(1.0)
-                - F.col("ss_res")
-                / (F.col("ss_y2") - F.col("s_y") ** 2 / F.col("n"))
-            ).alias("score"),
+        g = preds.groupBy(fold_col).agg(*map(F.expr, r2_parts(y, p)))
+        return g.selectExpr(
+            sql_ident(fold_col),
+            "1.0D - ss_res / (ss_y2 - power(s_y, 2) / n) AS score",
         )
     if isinstance(metric, str):
         if metric not in _SQL_METRICS:
@@ -758,10 +772,8 @@ def per_fold_scores(
                 f"Unknown metric name {metric!r}; pass a callable or one of "
                 f"{sorted(_SQL_METRICS)}"
             )
-        expr = metric_agg_expr(
-            metric, F.col(y_col), F.col(pred_col), nan_aware=nanified
-        )
-        return preds.groupBy(fold_col).agg(expr.alias("score"))
+        expr = metric_agg_expr(metric, y, p, nan_aware=nanified)
+        return preds.groupBy(fold_col).agg(F.expr(f"{expr} AS score"))
 
     import pandas as pd
 

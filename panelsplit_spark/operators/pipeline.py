@@ -14,10 +14,17 @@ is Spark:
   moment aggregate plus a literal-coefficient projection for the
   closed-form family, a grouped-map job plus broadcast models +
   ``mapInPandas`` otherwise;
-* intermediate OOF frames are ``.cache()``-ed — the next step consumes
-  them repeatedly (its own fit + transform jobs), so re-computing the
-  whole upstream chain per job would be quadratic — and released before
-  ``fit`` returns, once every step's models are on the driver;
+* a CV StandardScaler step is affine within each fold, so when the
+  steps after it are closed-form too they fit from the moment cube of
+  the scaler's input, read through the scaler's per-period affine maps
+  (``linear_fastpath.AffineStep``): a scaler → ridge fit is one moment
+  aggregate of the raw frame and no OOF frame at all;
+* an OOF frame that is built is ``.cache()``-ed only when the step
+  reading it reads it twice (its own fit and the next OOF frame) —
+  re-computing the whole upstream chain per job would be quadratic —
+  and released before ``fit`` returns, once every step's models are on
+  the driver. The frame feeding the final fit is read once and is not
+  cached;
 * there is no positional reassembly: fold predicates are period-based, so
   the next step's splitter applies directly to the (possibly reduced) OOF
   frame — the Spark-native replacement for the reference's argsort
@@ -38,6 +45,7 @@ from ..estimators import StandardScaler, clone
 from ..functions.sql import sql_ident
 from .application import apply_model, cross_val_fit, cross_val_predict
 from .cross_validation import PanelSplit
+from .linear_fastpath import scaler_view_step, suffstats_fit
 
 __all__ = ["SequentialCVPipeline"]
 
@@ -309,23 +317,52 @@ class SequentialCVPipeline:
             ) -> "SequentialCVPipeline":
         """Sequential chaining (reference pipeline.py:686-719): per step,
         fit under its cv and push the OOF output forward; the final step
-        only fits."""
+        only fits.
+
+        A CV step's OOF output is built only when the next step reads
+        it. Before that, a CV StandardScaler step is a pending affine
+        view (``linear_fastpath.AffineStep``) of the frame it reads, and
+        a later closed-form step under a plain splitter fits from that
+        frame's moment cube through the view: no Spark job when the cube
+        is already memoised. A step the view cannot serve (outside the
+        closed-form family, a snapshot column or scan mapping, another
+        period column, too many features, a non-finite moment or scaler
+        parameter) builds the pending OOF frames and fits on them. A
+        built frame is cached only when its reader reads it twice
+        (:meth:`_reads_twice`)."""
         if y_col is not None:
             self.y_col = y_col
         self.fitted_steps_ = {}
         cur = df
         features = list(self.feature_cols)
-        n = len(self.steps)
+        # CV steps whose OOF output ``cur`` does not hold yet, each with
+        # its affine view (None for a step that is not a scaler)
+        pending: List[Tuple[str, List[Any], PanelSplit, Any]] = []
         cached: List[DataFrame] = []
         try:
             for i, (name, est) in enumerate(self.steps):
-                is_final = i == n - 1
                 cv = self.cv_steps[i]
                 if self.verbose:
                     print(f"[SequentialCVPipeline] fitting step {i}: {name}")
                 if _is_passthrough(est):
                     self.fitted_steps_[name] = None
                     continue
+                models = None
+                view = [step for *_, step in pending]
+                if view and cv is not None and all(view):
+                    models = suffstats_fit(
+                        est, cur, features, self.y_col, cv, view=view
+                    )
+                if models is None and pending:
+                    for p_name, p_models, p_cv, _ in pending:
+                        cur, features = self._transform_cv(
+                            p_models, cur, features, p_cv, p_name
+                        )
+                    pending = []
+                    if self._reads_twice(i):
+                        cur = cur.cache()
+                        cached.append(cur)
+                is_final = i == len(self.steps) - 1
                 if cv is None:
                     model = self._fit_single(est, cur, features)
                     self.fitted_steps_[name] = ("single", model)
@@ -333,24 +370,31 @@ class SequentialCVPipeline:
                         cur, features = self._transform_single(
                             model, cur, features, name
                         )
-                else:
+                    continue
+                if models is None:
                     models = cross_val_fit(
                         est, cur, features, self.y_col, cv
                     )
-                    self.fitted_steps_[name] = ("cv", models)
-                    if not is_final:
-                        cur, features = self._transform_cv(
-                            models, cur, features, cv, name
-                        )
-                        cur = cur.cache()
-                        cached.append(cur)
+                self.fitted_steps_[name] = ("cv", models)
+                if not is_final:
+                    pending.append((
+                        name, models, cv,
+                        scaler_view_step(models, cv, self.return_group),
+                    ))
         finally:
             # every step's models are on the driver by now; nothing
             # reads the intermediate OOF frames again
             for frame in cached:
                 frame.unpersist()
-        self._fitted_features_ = features
         return self
+
+    def _reads_twice(self, i: int) -> bool:
+        """Whether step ``i`` reads its input frame twice: a non-final
+        step fits on it and builds its own output from it; a fit-on-all
+        step also counts its rows first."""
+        return i != len(self.steps) - 1 or (
+            self.cv_steps[i] is None and self.max_fit_rows is not None
+        )
 
     def _keep_cols(self, df: DataFrame, features: Sequence[str]) -> List[str]:
         drop = set(features) | {"fold_id", "role"}

@@ -280,10 +280,13 @@ class FoldSpec:
                     members[pos[_axis_key(p)]].append((f.fold_id, role))
         return [(p, m) for p, m in zip(self.unique_periods, members) if m]
 
-    def train_matrix(
-        self, periods: Sequence[Any], snapshots: Optional[Sequence[Any]] = None
+    def member_matrix(
+        self,
+        periods: Sequence[Any],
+        snapshots: Optional[Sequence[Any]] = None,
+        role: str = "train",
     ):
-        """Fold × row 0/1 matrix of train membership for rows keyed by
+        """Fold × row 0/1 matrix of ``role`` membership for rows keyed by
         ``periods`` (and ``snapshots`` when the splitter has a snapshot
         column). A NULL period, or one absent from the spec, belongs to
         no fold; with snapshots a row counts for a fold only at that
@@ -294,8 +297,8 @@ class FoldSpec:
         absent = len(self.unique_periods)
         by_axis = np.zeros((len(self.folds), absent + 1))
         for f in self.folds:
-            idx = [pos[_axis_key(p)] for p in f.train_periods]
-            by_axis[f.fold_id, idx] = 1.0
+            ps = f.train_periods if role == "train" else f.test_periods
+            by_axis[f.fold_id, [pos[_axis_key(p)] for p in ps]] = 1.0
         m = by_axis[:, [pos.get(_axis_key(p), absent) for p in periods]]
         if snapshots is not None:
             keys = [_axis_key(s) for s in snapshots]

@@ -50,10 +50,7 @@ def configure(spark: SparkSession) -> SparkSession:
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    try:
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
-    except Exception:
-        pass
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
     return spark
 
 

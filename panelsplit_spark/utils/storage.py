@@ -58,8 +58,5 @@ def release_all_pinned(spark, blocking: bool = False) -> int:
     # SQL-cached relations (df.cache()) are also block-backed but keyed
     # in the cacheManager — clear that index too so re-planned queries
     # don't resolve to just-released blocks
-    try:
-        spark.catalog.clearCache()
-    except Exception:
-        pass
+    spark.catalog.clearCache()
     return n

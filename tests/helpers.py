@@ -1,8 +1,9 @@
 """Picklable helper estimators for tests (must live in an importable
-module so Spark's Python workers can unpickle them), and a py4j
-round-trip counter shared with ``tools/profile_query.py``."""
+module so Spark's Python workers can unpickle them), a py4j round-trip
+counter shared with ``tools/profile_query.py``, and a Spark job probe."""
 
 import contextlib
+import itertools
 import threading
 import types
 
@@ -13,24 +14,46 @@ import numpy as np
 def count_py4j():
     """Count this process's py4j round trips inside the block: every
     ``ClientServerConnection.send_command`` call, whatever thread makes
-    it. Yields a namespace whose ``calls`` attribute is the running
-    count."""
+    it, except py4j's object-release messages. Those are sent whenever
+    any thread's garbage collection drops a Java object reference, so
+    they measure earlier code, not the block. Yields a namespace whose
+    ``calls`` attribute is the running count."""
+    from py4j import protocol
     from py4j.clientserver import ClientServerConnection
 
     counter = types.SimpleNamespace(calls=0)
     lock = threading.Lock()
     send = ClientServerConnection.send_command
 
-    def counted(self, *args, **kwargs):
-        with lock:
-            counter.calls += 1
-        return send(self, *args, **kwargs)
+    def counted(self, command, *args, **kwargs):
+        if not command.startswith(protocol.MEMORY_COMMAND_NAME):
+            with lock:
+                counter.calls += 1
+        return send(self, command, *args, **kwargs)
 
     ClientServerConnection.send_command = counted
     try:
         yield counter
     finally:
         ClientServerConnection.send_command = send
+
+
+_PROBES = itertools.count()
+
+
+@contextlib.contextmanager
+def spark_jobs(spark):
+    """Collect the ids of the Spark jobs this thread starts inside the
+    block: yields a list that is filled when the block exits."""
+    sc = spark.sparkContext
+    group = f"panelsplit-test-probe-{next(_PROBES)}"
+    jobs = []
+    sc.setJobGroup(group, "jobs started inside a test block")
+    try:
+        yield jobs
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs.extend(sc.statusTracker().getJobIdsForGroup(group))
 
 
 class NoWeightEstimator:

@@ -355,6 +355,62 @@ def test_assign_plan_has_no_broadcast(spark):
     assert "Join" not in plan
 
 
+def test_distinct_periods_memoised_per_frame_and_column(spark):
+    """A second splitter on the same frame and period column collects
+    no periods again; another column does, and ``release_all_pinned``
+    clears the memo with the moment cubes it shares."""
+    from helpers import spark_jobs
+    from panelsplit_spark.utils.storage import release_all_pinned
+
+    df = spark.range(40).selectExpr("id", "id % 8 AS period", "id % 5 AS q")
+    with spark_jobs(spark) as first:
+        PanelSplit(df, "period", n_splits=3)
+    with spark_jobs(spark) as second:
+        ps = PanelSplit(df, "period", n_splits=3,
+                        include_first_train_in_test=True)
+    assert first and second == []
+    assert ps.spec.unique_periods == list(range(8))
+    with spark_jobs(spark) as other:
+        PanelSplit(df, "q", n_splits=2)
+    assert other
+    release_all_pinned(spark)
+    with spark_jobs(spark) as again:
+        PanelSplit(df, "period", n_splits=3)
+    assert again
+
+
+def test_distinct_periods_memo_is_shared_across_threads(spark):
+    """Eight threads (more than the session's cores) build splitters on
+    one frame at once: one collect, run by one thread, serves all."""
+    import sys
+    import threading
+
+    from helpers import spark_jobs
+
+    df = spark.range(60).selectExpr("id", "id % 6 AS period")
+    jobs, got = [], []
+
+    def build():
+        with spark_jobs(spark) as mine:
+            ps = PanelSplit(df, "period", n_splits=2)
+        got.append(ps.spec.unique_periods)
+        jobs.append(mine)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=build) for _ in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert got == [list(range(6))] * 8
+    assert sum(bool(mine) for mine in jobs) == 1
+
+
 def test_distinct_periods_sorted_on_driver(spark):
     """Driver-side sort reproduces Spark's ascending order, NaN last,
     for string, date and float periods."""

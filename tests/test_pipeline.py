@@ -6,6 +6,8 @@ semantics; config grid mirrors tests/test_sequentialcvpipeline_indices.py).
 import pytest
 from pyspark.sql import functions as F
 
+from helpers import spark_jobs
+
 from panelsplit_spark import (
     FirstColumnRegressor,
     LinearRegression,
@@ -530,3 +532,269 @@ def test_scaler_width_known_without_probe(spark, panel):
         panel.select("y").toPandas()["y"],
     )
     assert pipe._probe_width(lr, "predict", panel, ["x1", "x2"]) == 1
+
+
+# ----------------------------------------------------------------------
+# moment propagation: closed-form steps after a CV scaler fit from the
+# scaler input's moment cube, read through the scaler's affine maps
+# ----------------------------------------------------------------------
+
+FEATS3 = ["x0", "x1", "x2"]
+
+
+def _rand_panel(spark, seed=11, bad=None):
+    """10 periods x 24 rows, three features on different scales; ``bad``
+    maps (period, feature index) to a value written into that period's
+    first row."""
+    import numpy as np
+
+    rng = np.random.default_rng(seed)
+    rows = []
+    for p in range(10):
+        for j in range(24):
+            x = rng.normal(size=3) * [1.0, 4.0, 50.0] + [0.0, 2.0, 300.0]
+            y = float(x @ [1.5, -0.5, 0.02] + rng.normal())
+            rows.append([p * 24 + j, p, *map(float, x), y])
+    for (p, i), v in (bad or {}).items():
+        rows[p * 24][2 + i] = v
+    return spark.createDataFrame(
+        rows, "rid long, period int, x0 double, x1 double, x2 double, "
+        "y double",
+    )
+
+
+def _fit_both(monkeypatch, make, df):
+    """``(view_fit, materialized_fit, oof_frames_built_by_view_fit)``.
+    The materialized fit builds every OOF frame and fits on it, as
+    when no view applies."""
+    from panelsplit_spark.operators import pipeline as pm
+
+    built = []
+    real = pm.SequentialCVPipeline._transform_cv
+
+    def counting(self, *a, **k):
+        built.append(1)
+        return real(self, *a, **k)
+
+    with monkeypatch.context() as m:
+        m.setattr(pm.SequentialCVPipeline, "_transform_cv", counting)
+        fast = make().fit(df)
+    with monkeypatch.context() as m:
+        m.setattr(pm, "scaler_view_step", lambda *a: None)
+        slow = make().fit(df)
+    return fast, slow, len(built)
+
+
+def _close(a, b):
+    import numpy as np
+
+    a, b = np.asarray(a, float), np.asarray(b, float)
+    scale = np.nanmax(np.abs(np.append(b.ravel(), 1.0)))
+    np.testing.assert_allclose(a, b, rtol=1e-9, atol=1e-9 * scale)
+
+
+def _preds(pipe, df):
+    """Predictions keyed by every other output column (row keys, y and
+    fold_id); an overlapping OOF group yields several per key."""
+    out = {}
+    for r in pipe.predict_df(df).collect():
+        row = r.asDict()
+        p = row.pop("prediction")
+        out.setdefault(tuple(sorted(row.items())), []).append(p)
+    return {k: sorted(v) for k, v in out.items()}
+
+
+def _assert_same(fast, slow, df):
+    """Every step's per-fold parameters and the predict_df output agree
+    within 1e-9 relative (NaN where the other has NaN)."""
+    for name, (kind, models) in slow.fitted_steps_.items():
+        got = fast.fitted_steps_[name][1]
+        for a, b in zip(got, models):
+            for attr in ("mean_", "scale_", "coef_", "intercept_"):
+                if getattr(b, attr, None) is not None:
+                    _close(getattr(a, attr), getattr(b, attr))
+    want, got = _preds(slow, df), _preds(fast, df)
+    assert got.keys() == want.keys()
+    for k in want:
+        _close(got[k], want[k])
+
+
+def _scale_then(final, ps_scale, ps, **kw):
+    return lambda: SequentialCVPipeline(
+        [("scale", StandardScaler()), ("final", final)],
+        [ps_scale, ps], FEATS3, y_col="y", **kw,
+    )
+
+
+def test_scaler_ridge_fits_through_the_view(spark, monkeypatch):
+    from panelsplit_spark import Ridge
+
+    df = _rand_panel(spark)
+    ps = PanelSplit(df, "period", n_splits=3)
+    ps_s = PanelSplit(df, "period", n_splits=3,
+                      include_first_train_in_test=True)
+    fast, slow, built = _fit_both(
+        monkeypatch, _scale_then(Ridge(alpha=1.0), ps_s, ps), df
+    )
+    assert built == 0
+    _assert_same(fast, slow, df)
+
+
+def test_chained_scalers_compose_in_the_view(spark, panel, monkeypatch):
+    ps1 = PanelSplit(panel, "period", n_splits=3,
+                     include_first_train_in_test=True)
+    ps2 = PanelSplit(panel, "period", n_splits=3)
+
+    def make():
+        return SequentialCVPipeline(
+            [("scale", StandardScaler()), ("scale2", StandardScaler()),
+             ("lr", LinearRegression())],
+            [ps1, ps1, ps2], ["x1", "x2"], y_col="y",
+        )
+
+    fast, slow, built = _fit_both(monkeypatch, make, panel)
+    assert built == 0
+    _assert_same(fast, slow, panel)
+
+
+# the scaler never trains on period 4 but passes it on in fold 0's test
+# group; the final step trains on it in folds 1 and 2
+_SCALE_SKIPS_4 = [([0, 1, 2], [0, 1, 2, 3, 4, 5]),
+                  ([0, 1, 2, 3, 5], [6, 7, 8, 9])]
+_FINAL_FOLDS = [([0, 1, 2, 3], [5, 6]), ([0, 1, 2, 3, 4, 5, 6], [7, 8]),
+                ([0, 1, 2, 3, 4, 5, 6, 7, 8], [9])]
+
+
+def test_null_x_period_poisons_the_same_folds(spark, monkeypatch):
+    import numpy as np
+
+    df = _rand_panel(spark, bad={(4, 1): None})
+    make = _scale_then(
+        LinearRegression(), PanelSplit.from_folds(_SCALE_SKIPS_4),
+        PanelSplit.from_folds(_FINAL_FOLDS),
+    )
+    fast, slow, built = _fit_both(monkeypatch, make, df)
+    assert built == 0
+    coefs = [m.coef_ for m in fast.fitted_steps_["final"][1]]
+    assert np.isfinite(coefs[0]).all()
+    assert np.isnan(coefs[1]).all() and np.isnan(coefs[2]).all()
+    _assert_same(fast, slow, df)
+
+
+@pytest.mark.parametrize("value,period", [
+    (float("nan"), 4), (float("inf"), 4), (float("-inf"), 4),
+    (float("nan"), 1),
+])
+def test_non_finite_x_takes_the_materialized_path(
+    spark, monkeypatch, value, period
+):
+    """A non-finite moment in a period the view reads (period 4), or a
+    non-finite scaler parameter (the scaler trains on period 1), sends
+    the fit to the materialized OOF frame. The final step ignores x, so
+    the fit itself stays finite."""
+    from panelsplit_spark import MeanRegressor
+
+    df = _rand_panel(spark, bad={(period, 0): value})
+    make = _scale_then(
+        MeanRegressor(), PanelSplit.from_folds(_SCALE_SKIPS_4),
+        PanelSplit.from_folds(_FINAL_FOLDS),
+    )
+    fast, slow, built = _fit_both(monkeypatch, make, df)
+    assert built == 1
+    _assert_same(fast, slow, df)
+
+
+def test_overlapping_oof_groups_count_every_copy(spark, monkeypatch):
+    """Periods 4-6 are in both scaler folds' test groups, so the OOF
+    frame holds two differently scaled copies of their rows."""
+    from panelsplit_spark import Ridge
+
+    df = _rand_panel(spark, seed=3)
+    overlap = PanelSplit.from_folds([
+        ([0, 1, 2], [0, 1, 2, 3, 4, 5, 6]),
+        ([0, 1, 2, 3, 4], [4, 5, 6, 7, 8, 9]),
+    ])
+    make = _scale_then(
+        Ridge(alpha=0.5), overlap, PanelSplit.from_folds(_FINAL_FOLDS)
+    )
+    fast, slow, built = _fit_both(monkeypatch, make, df)
+    assert built == 0
+    _assert_same(fast, slow, df)
+
+
+def test_return_group_train_through_the_view(spark, monkeypatch):
+    df = _rand_panel(spark, seed=4)
+    ps = PanelSplit(df, "period", n_splits=3)
+    fast, slow, built = _fit_both(
+        monkeypatch,
+        _scale_then(LinearRegression(), ps, ps, return_group="train"), df,
+    )
+    assert built == 0
+    _assert_same(fast, slow, df)
+
+
+def test_mean_regressor_final_step_through_the_view(spark, monkeypatch):
+    from panelsplit_spark import MeanRegressor
+
+    df = _rand_panel(spark, seed=5)
+    ps = PanelSplit(df, "period", n_splits=3)
+    ps_s = PanelSplit(df, "period", n_splits=3,
+                      include_first_train_in_test=True)
+    fast, slow, built = _fit_both(
+        monkeypatch, _scale_then(MeanRegressor(), ps_s, ps), df
+    )
+    assert built == 0
+    _assert_same(fast, slow, df)
+
+
+def test_pipeline_fit_from_a_warm_cube_starts_no_job(spark):
+    """Once ``cross_val_fit`` has filled the frame's moment cube, a
+    scaler -> ridge fit on the same frame and features runs no Spark
+    job: both steps resolve from the memoised cube."""
+    from panelsplit_spark import Ridge, cross_val_fit
+
+    df = _rand_panel(spark, seed=6)
+    ps = PanelSplit(df, "period", n_splits=3)
+    ps_s = PanelSplit(df, "period", n_splits=3,
+                      include_first_train_in_test=True)
+    cross_val_fit(LinearRegression(), df, FEATS3, "y", ps)
+    with spark_jobs(spark) as jobs:
+        _scale_then(Ridge(alpha=1.0), ps_s, ps)().fit(df)
+    assert jobs == []
+    with spark_jobs(spark) as jobs:
+        df.count()  # the probe does see this thread's jobs
+    assert jobs
+
+
+def test_fit_caches_only_frames_read_twice(spark, panel, monkeypatch):
+    """The OOF frame feeding only the final (generic) fit is not cached;
+    a frame the next step both fits on and transforms is, and every
+    cached frame is released before ``fit`` returns."""
+    from panelsplit_spark import FirstColumnRegressor, IdentityTransformer
+    from panelsplit_spark.utils.storage import pinned_rdd_ids
+
+    ps1 = PanelSplit(panel, "period", n_splits=3,
+                     include_first_train_in_test=True)
+    ps2 = PanelSplit(panel, "period", n_splits=3)
+    calls = []
+    cls = type(panel)
+    real = cls.cache
+
+    def counting(self):
+        calls.append(1)
+        return real(self)
+
+    monkeypatch.setattr(cls, "cache", counting)
+    before = len(pinned_rdd_ids(spark))
+    SequentialCVPipeline(
+        [("scale", StandardScaler()), ("first", FirstColumnRegressor())],
+        [ps1, ps2], ["x1", "x2"], y_col="y",
+    ).fit(panel)
+    assert calls == []
+    SequentialCVPipeline(
+        [("scale", StandardScaler()), ("id", IdentityTransformer()),
+         ("first", FirstColumnRegressor())],
+        [ps1, ps1, ps2], ["x1", "x2"], y_col="y",
+    ).fit(panel)
+    assert len(calls) == 1
+    assert len(pinned_rdd_ids(spark)) == before

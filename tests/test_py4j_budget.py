@@ -2,11 +2,16 @@
 quoting its SQL-text expressions rely on.
 
 Each wide expression of the fast path (the moment aggregates, the
-prediction and scaler projections, the pipeline's feature expansion) is
-built as SQL text and parsed JVM-side in one call; composed through the
-Column API it cost several py4j round trips per node. The budgets pin
-the SQL-text form with headroom (measured: cube 304, each projection 8,
-pipeline fit 400); the Column-API form measured 2916, 523 / 615 and 4240.
+prediction and scaler projections, the pipeline's feature expansion,
+the metric aggregates) is built as SQL text and parsed JVM-side in one
+call; composed through the Column API it cost several py4j round trips
+per node. The budgets pin the SQL-text form with headroom (measured:
+cube 304, each projection 8, per_fold_scores over seven metrics about
+200, the grid-score frame about 100); the Column-API form measured 2916,
+523 / 615, about 1,400 and about 800. A scaler -> ridge pipeline fit is
+one cube build (about 350; 0 when the cube is warm), down from about 700
+(about 350-570 warm) when it built and aggregated the scaler's OOF
+frame.
 """
 
 import numpy as np
@@ -23,12 +28,15 @@ from panelsplit_spark import (
     cross_val_predict,
 )
 from panelsplit_spark.operators.linear_fastpath import (
+    _grid_score_frame,
     linear_predict_frame,
     scaler_transform_frame,
     suffstats_fit,
 )
+from panelsplit_spark.operators.metrics import per_fold_scores
 
 N_FEATURES = 8
+METRICS = ["mse", "rmse", "mae", "max_error", "accuracy", "medae", "r2"]
 
 
 def _panel(spark, names=None, y="y"):
@@ -101,12 +109,43 @@ def test_scaler_transform_frame_round_trips(panel):
     assert n.calls <= 40, n.calls
 
 
-def test_two_step_pipeline_fit_round_trips(panel):
-    df, feats, ps = panel
-    pipe = _scale_ridge(df, feats, "y", ps)
+def test_two_step_pipeline_fit_round_trips(spark, panel):
+    """Cold, the fit is the frame's one cube build; warm, both steps
+    resolve from the memoised cube without a round trip."""
+    _, feats, _ = panel
+    df = _panel(spark)[0]  # a new frame: the weakly keyed cube cache is cold
+    pipe = _scale_ridge(df, feats, "y", PanelSplit(df, "period", n_splits=3))
     with count_py4j() as n:
         pipe.fit(df)
-    assert n.calls <= 800, n.calls
+    assert n.calls <= 450, n.calls
+    with count_py4j() as n:
+        pipe.fit(df)
+    assert n.calls <= 10, n.calls
+
+
+def test_per_fold_scores_round_trips(panel):
+    df, feats, ps = panel
+    models = cross_val_fit(LinearRegression(), df, feats, "y", ps)
+    preds = cross_val_predict(models, df, feats, ps, keep_cols=["rid", "y"])
+    with count_py4j() as n:
+        for metric in METRICS:
+            per_fold_scores(preds, "y", "prediction", metric)
+    assert n.calls <= 400, n.calls
+
+
+def test_grid_score_frame_round_trips(panel):
+    df, feats, ps = panel
+    grid = [
+        cross_val_fit(Ridge(alpha=a), df, feats, "y", ps)
+        for a in (0.1, 1.0, 10.0, 100.0)
+    ]
+    assigned = ps.assign_columns(df, [*feats, "y"], ("test",))
+    with count_py4j() as n:
+        out = _grid_score_frame(
+            assigned, grid, feats, "y", {m: m for m in METRICS}
+        )
+    assert len(out.columns) == 3 + 6 + 4  # keys, metrics, r2 sums
+    assert n.calls <= 200, n.calls
 
 
 # a backtick, a space and a dot in every feature, target and output name

@@ -91,3 +91,14 @@ def test_release_all_pinned_scopes_moment_memo_to_one_invocation(spark):
         assert len(calls) == 2, "post-release invocation must recompute"
     finally:
         lf._fold_moments = real
+
+
+def test_release_all_pinned_empties_the_sql_cache_index(spark):
+    """``df.cache()`` relations leave the cache manager's index too, so
+    a re-planned query cannot resolve to a released block."""
+    df = spark.range(50).selectExpr("id * 3 AS x")
+    df.cache().count()
+    assert df.storageLevel.useMemory
+    release_all_pinned(spark)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert not df.storageLevel.useMemory
