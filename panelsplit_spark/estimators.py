@@ -106,6 +106,13 @@ def _as_1d(y) -> np.ndarray:
     return np.asarray(y, dtype=np.float64).reshape(-1)
 
 
+def _check_finite_X(X: np.ndarray) -> None:
+    """sklearn's rule for linear fits: a NaN or ±Inf feature value is an
+    input error, not an untyped ``LinAlgError`` from the solver."""
+    if not np.isfinite(X).all():
+        raise ValueError("Input X contains NaN or infinity.")
+
+
 class MeanRegressor(BaseEstimator):
     """Predicts the train-set mean of y. SQL-expressible closed form —
     the engine's primary differential-oracle estimator."""
@@ -138,6 +145,7 @@ class LinearRegression(BaseEstimator):
 
     def fit(self, X, y, sample_weight=None):
         X = _as_2d(X)
+        _check_finite_X(X)
         y = _as_1d(y)
         if self.fit_intercept:
             X = np.hstack([np.ones((len(X), 1)), X])
@@ -166,6 +174,7 @@ class Ridge(LinearRegression):
 
     def fit(self, X, y, sample_weight=None):
         X = _as_2d(X)
+        _check_finite_X(X)
         y = _as_1d(y)
         if sample_weight is not None:
             w = np.sqrt(_as_1d(sample_weight))

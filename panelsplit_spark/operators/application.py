@@ -294,10 +294,13 @@ def _make_fit_fn(
         kwargs = {}
         if sample_weight_col is not None and use_weight:
             kwargs["sample_weight"] = sub[sample_weight_col].to_numpy()
-        if y is not None:
-            est.fit(X, y, **kwargs)
-        else:
-            est.fit(X, **kwargs)
+        try:
+            if y is not None:
+                est.fit(X, y, **kwargs)
+            else:
+                est.fit(X, **kwargs)
+        except ValueError as e:
+            raise ValueError(f"Fold {fold_id}: {e}") from e
         return pd.DataFrame(
             {"fold_id": [fold_id], "model": [pickle.dumps(est)]}
         )

@@ -29,7 +29,7 @@ from __future__ import annotations
 
 from typing import List, Optional, Sequence
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, Observation, Window, functions as F
 
 from ..functions.hashing import (
     MINHASH_P,
@@ -39,6 +39,7 @@ from ..functions.hashing import (
     word_ngrams,
     word_tokens,
 )
+from ..functions.sql import sql_ident
 from ..functions.vector import as_double, cosine_similarity
 
 __all__ = [
@@ -79,11 +80,10 @@ def _ensure_parallelism(df: DataFrame, min_parts: Optional[int] = None
     target = min_parts or min(sess.sparkContext.defaultParallelism, 64)
     # Plan-safe parallelism estimate: count source files via the scan's
     # FileIndex (never df.rdd, which forces plan->RDD conversion and
-    # defeats AQE). Non-file sources report no files -> leave untouched.
-    try:
-        n_files = len(df.inputFiles())
-    except Exception:
-        n_files = 0
+    # defeats AQE). Non-file sources (createDataFrame, range, a
+    # checkpoint) report no files -> leave untouched; a streaming frame
+    # cannot list its files at all (inputFiles raises) and is left too.
+    n_files = 0 if df.isStreaming else len(df.inputFiles())
     if 0 < n_files < target:
         return df.repartition(target)
     return df
@@ -327,8 +327,11 @@ def _shingle_pair_core(
         # semi-join. localCheckpoint cuts the lineage: each downstream
         # reference would otherwise inline the whole upstream LSH plan
         # — at production scale write the pair set to a table instead.
-        candidates = candidates.select("id_a", "id_b").localCheckpoint(
-            eager=True
+        n_cands = Observation()
+        candidates = (
+            candidates.select("id_a", "id_b")
+            .observe(n_cands, F.expr("count(1) AS n"))
+            .localCheckpoint(eager=True)
         )
         ids = (
             candidates.select(F.col("id_a").alias(id_col))
@@ -363,14 +366,14 @@ def _shingle_pair_core(
             )
             .agg(F.count(F.lit(1)).alias("n_inter"))
         )
-    elif candidates.count() < _ARRAY_VERIFY_MIN_CANDS:
+    elif n_cands.get["n"] < _ARRAY_VERIFY_MIN_CANDS:
         # Small candidate set: the classic candidates⋈shingles⋈shingles
         # explode join is CHEAPER here than the packed-array branch
         # below, whose fixed costs (bijection-check pass, array
         # checkpoint, two broadcast builds) only amortize once the pair
         # list is large (measured: at 320k pairs the explode join wins
         # by ~2 s; at 3.2M pairs the array branch wins by ~16 s). The
-        # count is free — `candidates` was just checkpointed.
+        # count was observed on the candidate checkpoint's own job.
         sh = sh.localCheckpoint(eager=True)
         sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
         inter = (
@@ -884,13 +887,17 @@ def connected_components(
     hits into dedup groups (keep ``id == cluster``, drop the rest).
 
     Distributed min-label propagation over the symmetrized edge list
-    plus a self-loop ``(x, x)`` per node: each round is ONE join of the
-    labels onto the edges and ONE grouped aggregate per node — ``min`` of
-    the neighbours' labels is the new label and the same ``min`` over the
-    self-loop row alone is the previous one, so the change test reads the
-    round's own checkpointed frame (no join back to the old labels).
-    Round 1 is the seed ``groupBy(u).min(v)`` (every label starts as the
-    node's own id). Converges in O(component diameter) rounds (near-dup
+    plus a self-loop ``(x, x)`` on each end of every pair: each round is
+    ONE join of the labels onto the edges and ONE grouped aggregate per
+    node — ``min`` of the neighbours' labels is the new label and the
+    same ``min`` over the self-loop rows alone is the previous one. The
+    round's change count is observed on the round's own checkpoint job
+    (an :class:`~pyspark.sql.Observation`), so a round costs no job
+    beyond its join and aggregate. Round 1 is the seed
+    ``groupBy(u).min(v)`` (every label starts as the node's own id).
+    Duplicate edges and self-loops are kept: they leave every ``min``
+    unchanged, and dropping them would cost a shuffle. Converges in
+    O(component diameter) rounds (near-dup
     clusters are shallow; star-contraction variants cut this to O(log d),
     see :func:`connected_components_star`). The label frame is
     ``localCheckpoint``-ed each round so the plan does not grow with the
@@ -901,55 +908,43 @@ def connected_components(
     Wholly expressible as joins/aggregates — the oracle twin is a
     recursive CTE computing min-over-transitive-closure.
     """
-    u, v = F.col("u"), F.col("v")
-    pairs = pairs.select(
-        F.col(id_a).cast("long").alias("u"),
-        F.col(id_b).cast("long").alias("v"),
-    ).where(u.isNotNull() & v.isNotNull())
     # both orientations plus a self-loop on each end
     edges = (
-        pairs.select(
-            F.inline(
-                F.array(
-                    F.struct(u, v),
-                    F.struct(v.alias("u"), u.alias("v")),
-                    F.struct(u, u.alias("v")),
-                    F.struct(v.alias("u"), v),
-                )
-            )
+        pairs.selectExpr(
+            f"CAST({sql_ident(id_a)} AS BIGINT) AS u",
+            f"CAST({sql_ident(id_b)} AS BIGINT) AS v",
         )
-        .distinct()
+        .where("u IS NOT NULL AND v IS NOT NULL")
+        .selectExpr(
+            "inline(array(named_struct('u', u, 'v', v),"
+            " named_struct('u', v, 'v', u), named_struct('u', u, 'v', u),"
+            " named_struct('u', v, 'v', v)))"
+        )
         .localCheckpoint(eager=False)
     )
     # round 1: min over the closed neighbourhood, from the edges alone
     labels = (
-        edges.groupBy("u").agg(F.min("v").alias("label"))
+        edges.groupBy("u").agg(F.expr("min(v) AS label"))
         .localCheckpoint(eager=True)
     )
     for _ in range(max_iter - 1):
-        nxt = (
-            edges.join(
-                labels.select(
-                    F.col("u").alias("v"), F.col("label").alias("vl")
-                ),
-                "v",
-            )
+        changed = Observation()
+        labels = (
+            edges.join(labels.selectExpr("u AS v", "label AS vl"), "v")
             .groupBy("u")
             .agg(
-                F.min("vl").alias("label"),
-                F.min(F.when(u == v, F.col("vl"))).alias("prev"),
+                F.expr("min(vl) AS label"),
+                F.expr("min(CASE WHEN u = v THEN vl END) AS prev"),
             )
+            .observe(changed, F.expr("count_if(label < prev) AS n"))
             .localCheckpoint(eager=True)
+            .select("u", "label")
         )
-        n_changed = (
-            nxt.where(F.col("label") < F.col("prev")).limit(1).count()
-        )
-        labels = nxt.select("u", "label")
-        if n_changed == 0:
+        if changed.get["n"] == 0:
             break
     else:
         # max_iter == 1 keeps the seed only if round 1 moved no label
-        if max_iter != 1 or labels.where(F.col("label") < u).limit(1).count():
+        if max_iter != 1 or labels.where("label < u").limit(1).count():
             # labels are only partially merged: a component with
             # diameter > max_iter would silently split into several
             # clusters downstream (keep-best would then keep one doc per
@@ -960,9 +955,7 @@ def connected_components(
                 f"connected_components did not converge in {max_iter} "
                 "rounds; raise max_iter (component diameter exceeds it)"
             )
-    return labels.select(
-        F.col("u").alias("id"), F.col("label").alias("cluster")
-    )
+    return labels.selectExpr("u AS id", "label AS cluster")
 
 
 def connected_components_star(
@@ -1430,14 +1423,22 @@ def prefix_filter_candidates(
     ``.distinct()`` already paid.  Integer basis points throughout; the
     bound check multiplies instead of dividing.
 
-    100 TB shape: one distinct-shingle shuffle, one shingle-keyed df
-    count, one per-doc window rank (rarest-first order, tie-broken by
-    the shingle string so both engines rank identically), and ONE
-    equi-join of the PREFIX tables — which are a small slice of the
-    full posting lists, and the frequency ordering puts precisely the
-    rarest (lowest fan-out) tokens in them.  The pair aggregation takes
-    count + max ranks per side; both maxes land on w* because document
-    rank order restricted to shared tokens is the global rarity order.
+    100 TB shape: one shingle-keyed shuffle for the document frequency
+    (a count window, so no join back to the shingle table), one
+    doc-keyed shuffle that ranks each document's shingles ONCE into a
+    sorted list (rarest-first, tie-broken by the shingle string so both
+    engines rank identically), and ONE equi-join of the PREFIX slices
+    of those lists. The index prefix is never longer than the probing
+    one, so both join sides slice the same exploded list — no second
+    rank pass. The prefixes are a small slice of the full posting
+    lists, and the frequency ordering puts precisely the rarest (lowest
+    fan-out) tokens in them. The count window shuffles every (doc,
+    shingle) row where a partial aggregate would shuffle one row per
+    distinct shingle and partition; it saves the aggregate's separate
+    job and the join back, which cost more at corpus-shard sizes. The
+    pair aggregation takes count + max ranks per side; both maxes land
+    on w* because document rank order restricted to shared tokens is
+    the global rarity order.
 
     Returns DISTINCT (id_a, id_b) with id_a < id_b — feed to
     ``ngram_jaccard_pairs(candidates=...)`` for verification.
@@ -1448,20 +1449,17 @@ def prefix_filter_candidates(
         shingles
         if shingles is not None
         else doc_shingles(df, text_col, id_col, shingle_n)
-    ).select(F.col(id_col).alias("__id"), "shingle")
-    dfreq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("__df"))
-    w = Window.partitionBy("__id").orderBy(
-        F.col("__df").asc(), F.col("shingle").asc()
-    )
-    # the per-doc size rides the SAME partitionBy-id window shuffle as
-    # the rank (was: a separate groupBy + a 2nd join of the full
-    # shingle table)
+    ).selectExpr(f"{sql_ident(id_col)} AS __id", "shingle")
+    # each doc's shingles in rarest-first order, tie-broken by the
+    # shingle string so both engines rank identically
     ranked = (
-        sh.join(dfreq, "shingle")
-        .withColumn("__rk", F.row_number().over(w))
-        .withColumn(
-            "__n", F.count(F.lit(1)).over(Window.partitionBy("__id"))
+        sh.where("shingle IS NOT NULL")
+        .selectExpr(
+            "__id", "shingle", "count(1) OVER (PARTITION BY shingle) AS __df"
         )
+        .groupBy("__id")
+        .agg(F.expr("sort_array(collect_list(struct(__df, shingle))) AS __l"))
+        .selectExpr("__id", "__l", "CAST(size(__l) AS BIGINT) AS __n")
     )
     t_bp = int(threshold_bp)
     # PROBING prefix: n − ⌈t·n⌉ + 1 (the Jaccard prefix); INDEX prefix:
@@ -1473,47 +1471,36 @@ def prefix_filter_candidates(
     # the same exact guarantee with materially fewer equi-join rows
     # (the index prefix is ~⅓·n vs ~½·n at t = 0.5). All integer basis
     # points: ⌈n·2t/(1+t)⌉ = (2·t_bp·n + (10000+t_bp) − 1) div
-    # (10000+t_bp).
-    probe = ranked.where(
-        F.col("__rk")
-        <= F.col("__n")
-        - F.expr(f"(__n * {t_bp} + 9999) div 10000")
-        + 1
-    ).select("__id", "shingle", "__n", "__rk")
-    index = ranked.where(
-        F.col("__rk")
-        <= F.col("__n")
-        - F.expr(
-            f"(__n * {2 * t_bp} + {10000 + t_bp} - 1) div {10000 + t_bp}"
-        )
-        + 1
-    ).select("__id", "shingle", "__n", "__rk")
-    a = probe.select(
-        F.col("__id").alias("id_a"),
-        F.col("shingle"),
-        F.col("__n").alias("__na"),
-        F.col("__rk").alias("__rka"),
+    # (10000+t_bp). The index prefix is never longer than the probing
+    # one, so both sides are slices of the same exploded probing prefix.
+    n_probe = f"__n - (__n * {t_bp} + 9999) div 10000 + 1"
+    n_index = (
+        f"__n - (__n * {2 * t_bp} + {10000 + t_bp} - 1) div {10000 + t_bp}"
+        " + 1"
     )
-    b = index.select(
-        F.col("__id").alias("id_b"),
-        F.col("shingle"),
-        F.col("__n").alias("__nb"),
-        F.col("__rk").alias("__rkb"),
+    probe = ranked.selectExpr(
+        "__id",
+        "__n",
+        f"{n_index} AS __ni",
+        "posexplode(slice(__l, 1, "
+        f"CAST(greatest({n_probe}, 0) AS INT))) AS (__pos, __e)",
+    ).selectExpr(
+        "__id", "__e.shingle AS shingle", "__n", "__pos + 1 AS __rk", "__ni"
+    )
+    a = probe.selectExpr(
+        "__id AS id_a", "shingle", "__n AS __na", "__rk AS __rka"
+    )
+    b = probe.where("__rk <= __ni").selectExpr(
+        "__id AS id_b", "shingle", "__n AS __nb", "__rk AS __rkb"
     )
     return (
         a.join(b, "shingle")
+        # size order (probing side is the larger set, id tiebreak) —
+        # the asymmetric-prefix validity condition; size filter:
+        # t·|A| ≤ |B| (≤ |A| is implied by the order)
         .where(
-            # size order (probing side is the larger set, id tiebreak) —
-            # the asymmetric-prefix validity condition
-            (
-                (F.col("__nb") < F.col("__na"))
-                | (
-                    (F.col("__nb") == F.col("__na"))
-                    & (F.col("id_b") < F.col("id_a"))
-                )
-            )
-            # size filter: t·|A| ≤ |B| (≤ |A| is implied by the order)
-            & (F.col("__nb") * 10000 >= F.col("__na") * t_bp)
+            "(__nb < __na OR (__nb = __na AND id_b < id_a))"
+            f" AND __nb * 10000 >= __na * {t_bp}"
         )
         # per-pair |P| + max rank on each side (both maxes land on w*,
         # the most frequent shared prefix token) — the groupBy replaces
@@ -1521,30 +1508,22 @@ def prefix_filter_candidates(
         # positional filter
         .groupBy("id_a", "id_b", "__na", "__nb")
         .agg(
-            F.count(F.lit(1)).alias("__p"),
-            F.max("__rka").alias("__ra"),
-            F.max("__rkb").alias("__rb"),
+            F.expr("count(1) AS __p"),
+            F.expr("max(__rka) AS __ra"),
+            F.expr("max(__rkb) AS __rb"),
         )
         # positional filter: (|P| + min(|A|-rk_A(w*), |B|-rk_B(w*)))
         # ·(1+t) ≥ t·(|A|+|B|), in basis points (× instead of ÷:
         # exact integers)
         .where(
-            (
-                F.col("__p")
-                + F.least(
-                    F.col("__na") - F.col("__ra"),
-                    F.col("__nb") - F.col("__rb"),
-                )
-            )
-            * (10000 + t_bp)
-            >= (F.col("__na") + F.col("__nb")) * t_bp
+            "(__p + least(__na - __ra, __nb - __rb))"
+            f" * {10000 + t_bp} >= (__na + __nb) * {t_bp}"
         )
         # size order put the larger doc on the a side; restore the
         # id_a < id_b output contract (each unordered pair was produced
         # in exactly one orientation, so no distinct is needed)
-        .select(
-            F.least("id_a", "id_b").alias("id_a"),
-            F.greatest("id_a", "id_b").alias("id_b"),
+        .selectExpr(
+            "least(id_a, id_b) AS id_a", "greatest(id_a, id_b) AS id_b"
         )
     )
 

@@ -447,6 +447,13 @@ def _solve_from_moments(
             rhs = np.concatenate([[r["sy"]], sxy])
         else:
             g, rhs = sxx, sxy
+        if not np.isfinite(g).all():
+            # NaN or ±Inf in a feature (a NULL poisons the fold above)
+            # would fail the SVD with an untyped LinAlgError
+            raise ValueError(
+                f"Fold {fid}: a training feature value is non-finite "
+                f"(NaN or ±Inf); {type(est).__name__} cannot fit it."
+            )
         if type(est) is Ridge:
             pen = est.alpha * np.eye(g.shape[0])
             if est.fit_intercept:

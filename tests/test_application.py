@@ -542,6 +542,44 @@ def test_nan_moment_poisons_only_folds_that_train_on_it(spark, nan_col):
     np.testing.assert_allclose(got[2], want[2], atol=1e-8, equal_nan=True)
 
 
+@pytest.mark.parametrize("bad", [float("nan"), float("inf")])
+def test_non_finite_feature_raises_naming_the_fold(spark, bad):
+    """A NaN or Inf feature value (not NULL) in a period the last fold
+    trains on is an input error naming that fold, on the closed-form
+    path and on the grouped-pandas path, as sklearn rejects it; numpy's
+    untyped ``LinAlgError`` never reaches the caller. A NULL feature
+    keeps its NaN-coefficient result."""
+    import numpy as np
+
+    from panelsplit_spark.estimators import Ridge
+
+    rows = _panel_rows()
+    rows[4] = (bad, *rows[4][1:])
+    schema = "x1 double, x2 double, period int, y double"
+    df = spark.createDataFrame(rows, schema)
+    ps = PanelSplit(df, "period", n_splits=3)
+    for est in (LinearRegression(), Ridge(alpha=1.0)):
+        with pytest.raises(
+            ValueError, match="Fold 2: a training feature value is non-finite"
+        ):
+            cross_val_fit(est, df, ["x1", "x2"], "y", ps)
+    with pytest.raises(
+        Exception, match="Fold 2: Input X contains NaN or infinity"
+    ):
+        cross_val_fit(SlowLinearRegression(), df, ["x1", "x2"], "y", ps)
+    for est in (_FastLinearRegression(), Ridge()):
+        with pytest.raises(ValueError, match="Input X contains NaN"):
+            est.fit(np.array([[1.0], [bad]]), np.array([1.0, 2.0]))
+
+    rows[4] = (None, *rows[4][1:])
+    models = cross_val_fit(
+        LinearRegression(), spark.createDataFrame(rows, schema),
+        ["x1", "x2"], "y", ps,
+    )
+    assert np.isnan(models[2].coef_).all()
+    assert np.isfinite(models[0].coef_).all()
+
+
 def test_masked_fold_sum_keeps_ieee_semantics_per_fold():
     """Fold sums over a cube with NaN / ±Inf entries: a fold sees only
     the entries of its own member rows, summed as numpy would."""

@@ -1,5 +1,6 @@
-"""py4j round trips of the closed-form CV fast path, and the identifier
-quoting its SQL-text expressions rely on.
+"""py4j round trips of the closed-form CV fast path and of the dedup
+prefix filter and clustering, and the identifier quoting their SQL-text
+expressions rely on.
 
 Each wide expression of the fast path (the moment aggregates, the
 prediction and scaler projections, the pipeline's feature expansion,
@@ -11,7 +12,7 @@ cube 304, each projection 8, per_fold_scores over seven metrics about
 523 / 615, about 1,400 and about 800. A scaler -> ridge pipeline fit is
 one cube build (about 350; 0 when the cube is warm), down from about 700
 (about 350-570 warm) when it built and aggregated the scaler's OOF
-frame.
+frame. The dedup budgets are in their tests' docstrings.
 """
 
 import numpy as np
@@ -32,6 +33,11 @@ from panelsplit_spark.operators.linear_fastpath import (
     linear_predict_frame,
     scaler_transform_frame,
     suffstats_fit,
+)
+from panelsplit_spark.operators.dedup import (
+    connected_components,
+    doc_shingles,
+    prefix_filter_candidates,
 )
 from panelsplit_spark.operators.metrics import per_fold_scores
 
@@ -188,3 +194,40 @@ def test_odd_column_names_match_plain_names(spark):
     assert piped(odd, ODD, ODD_Y, ps_odd) == piped(
         plain, feats, "y", ps_plain
     )
+
+
+def _docs(spark):
+    rng = np.random.default_rng(3)
+    words = [f"w{i}" for i in range(400)]
+    rows = []
+    for i in range(60):
+        text = [words[j] for j in rng.integers(0, len(words), 30)]
+        rows.append((2 * i + 1, " ".join(text)))
+        rows.append((2 * i + 2, " ".join(text[:-3] + ["a", "b", "c"])))
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def test_prefix_filter_candidates_round_trips(spark):
+    """The ranked lists, both prefix slices, the pair join and its
+    filters are SQL text (about 130 round trips; the Column-API form
+    made about 1,060)."""
+    docs = _docs(spark)
+    sh = doc_shingles(docs).localCheckpoint()
+    with count_py4j() as n:
+        cands = prefix_filter_candidates(docs, threshold_bp=5000, shingles=sh)
+    assert cands.columns == ["id_a", "id_b"]
+    assert n.calls <= 200, n.calls
+    assert cands.count() == 60
+
+
+def test_connected_components_round_trips(spark):
+    """The edge list and the round body are SQL text: a whole call on
+    a six-node path (the seed round and six more), its jobs included,
+    makes about 360 round trips (about 1,270 before)."""
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 6)], "id_a long, id_b long"
+    )
+    with count_py4j() as n:
+        out = connected_components(pairs).collect()
+    assert {r["cluster"] for r in out} == {1}
+    assert n.calls <= 450, n.calls
