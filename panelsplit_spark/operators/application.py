@@ -422,6 +422,7 @@ def cross_val_predict(
         fast_df = linear_predict_frame(
             assigned, fitted_estimators, list(feature_cols), method,
             list(keep) + ["fold_id"], output_col,
+            source=df, cv=cv, role=return_group,
         )
         if fast_df is not None:
             return fast_df

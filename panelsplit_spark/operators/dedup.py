@@ -30,6 +30,7 @@ from __future__ import annotations
 from typing import List, Optional, Sequence
 
 from pyspark.sql import DataFrame, Observation, Window, functions as F
+from pyspark.sql import types as T
 
 from ..functions.hashing import (
     MINHASH_P,
@@ -39,7 +40,7 @@ from ..functions.hashing import (
     word_ngrams,
     word_tokens,
 )
-from ..functions.sql import sql_ident
+from ..functions.sql import sql_ident, sql_literal
 from ..functions.vector import as_double, cosine_similarity
 
 __all__ = [
@@ -334,8 +335,8 @@ def _shingle_pair_core(
             .localCheckpoint(eager=True)
         )
         ids = (
-            candidates.select(F.col("id_a").alias(id_col))
-            .union(candidates.select(F.col("id_b").alias(id_col)))
+            candidates.selectExpr(f"id_a AS {sql_ident(id_col)}")
+            .union(candidates.selectExpr(f"id_b AS {sql_ident(id_col)}"))
             .distinct()
         )
         sh = sh.join(F.broadcast(ids), id_col, "left_semi")
@@ -375,16 +376,17 @@ def _shingle_pair_core(
         # by ~2 s; at 3.2M pairs the array branch wins by ~16 s). The
         # count was observed on the candidate checkpoint's own job.
         sh = sh.localCheckpoint(eager=True)
-        sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
+        sizes = sh.groupBy(id_col).agg(F.expr("count(1) AS n_sh"))
         inter = (
             candidates.select("id_a", "id_b")
-            .join(sh.select(F.col(id_col).alias("id_a"), "shingle"), "id_a")
+            .join(sh.selectExpr(f"{sql_ident(id_col)} AS id_a", "shingle"),
+                  "id_a")
             .join(
-                sh.select(F.col(id_col).alias("id_b"), "shingle"),
+                sh.selectExpr(f"{sql_ident(id_col)} AS id_b", "shingle"),
                 ["id_b", "shingle"],
             )
             .groupBy("id_a", "id_b")
-            .agg(F.count(F.lit(1)).alias("n_inter"))
+            .agg(F.expr("count(1) AS n_inter"))
         )
     else:
         # Pack each candidate doc's distinct shingles into ONE array and
@@ -413,49 +415,36 @@ def _shingle_pair_core(
         # finding, round 7).
         sh = sh.localCheckpoint(eager=True)
         chk = sh.agg(
-            F.countDistinct("shingle").alias("s"),
-            F.countDistinct(F.xxhash64("shingle")).alias("h"),
+            F.expr("count(DISTINCT shingle) AS s"),
+            F.expr("count(DISTINCT xxhash64(shingle)) AS h"),
         ).collect()[0]
-        tok = (
-            F.xxhash64("shingle") if chk["s"] == chk["h"]
-            else F.col("shingle")
-        )
+        tok = "xxhash64(shingle)" if chk["s"] == chk["h"] else "shingle"
         arrs = sh.groupBy(id_col).agg(
-            F.collect_list(tok).alias("__arr")
+            F.expr(f"collect_list({tok}) AS __arr")
         ).localCheckpoint(eager=True)
-        sizes = arrs.select(
-            F.col(id_col), F.size("__arr").alias("n_sh")
-        )
+        sizes = arrs.selectExpr(sql_ident(id_col), "size(__arr) AS n_sh")
         inter = (
             candidates.select("id_a", "id_b")
             .join(
-                F.broadcast(
-                    arrs.select(
-                        F.col(id_col).alias("id_a"),
-                        F.col("__arr").alias("__aa"),
-                    )
-                ),
+                F.broadcast(arrs.selectExpr(
+                    f"{sql_ident(id_col)} AS id_a", "__arr AS __aa"
+                )),
                 "id_a",
             )
             .join(
-                F.broadcast(
-                    arrs.select(
-                        F.col(id_col).alias("id_b"),
-                        F.col("__arr").alias("__ab"),
-                    )
-                ),
+                F.broadcast(arrs.selectExpr(
+                    f"{sql_ident(id_col)} AS id_b", "__arr AS __ab"
+                )),
                 "id_b",
             )
-            .select(
+            .selectExpr(
                 "id_a",
                 "id_b",
-                F.size(F.array_intersect("__aa", "__ab")).alias(
-                    "n_inter"
-                ),
+                "size(array_intersect(__aa, __ab)) AS n_inter",
                 # set sizes ride along for free — callers skip the two
                 # sizes joins whenever these columns are present
-                F.size("__aa").alias("__na"),
-                F.size("__ab").alias("__nb"),
+                "size(__aa) AS __na",
+                "size(__ab) AS __nb",
                 # Pushdown barrier: without a nondeterministic field in
                 # this Project, Catalyst pushes this filter AND the
                 # caller's threshold filter through it into the
@@ -466,14 +455,32 @@ def _shingle_pair_core(
                 # the column keeps it alive through column pruning;
                 # monotonically_increasing_id() is non-negative by
                 # construction, so results are identical.
-                F.monotonically_increasing_id().alias("__nd"),
+                "monotonically_increasing_id() AS __nd",
             )
             # the old join form only materialized pairs sharing ≥1
             # shingle; keep that contract for downstream ratios
-            .where((F.col("n_inter") > 0) | (F.col("__nd") < 0))
+            .where("n_inter > 0 OR __nd < 0")
             .drop("__nd")
         )
     return inter, sizes
+
+
+def _with_sizes(inter: DataFrame, sizes: DataFrame, id_col: str
+                ) -> DataFrame:
+    """``(id_a, id_b, n_inter, n_a, n_b)``: the intersection counts of
+    :func:`_shingle_pair_core` with both set sizes, inline on the
+    packed-array path, else joined from ``sizes``."""
+    if "__na" in inter.columns:
+        return inter.selectExpr(
+            "id_a", "id_b", "n_inter", "__na AS n_a", "__nb AS n_b"
+        )
+    return inter.join(
+        sizes.selectExpr(f"{sql_ident(id_col)} AS id_a", "n_sh AS n_a"),
+        "id_a",
+    ).join(
+        sizes.selectExpr(f"{sql_ident(id_col)} AS id_b", "n_sh AS n_b"),
+        "id_b",
+    )
 
 
 def ngram_jaccard_pairs(
@@ -513,32 +520,12 @@ def ngram_jaccard_pairs(
         df, text_col, id_col, shingle_n, candidates, max_shingle_df,
         shingles=shingles,
     )
-    if "__na" in inter.columns:  # candidate path: sizes ride inline
-        sized = inter.select(
-            "id_a", "id_b", "n_inter",
-            F.col("__na").alias("n_a"), F.col("__nb").alias("n_b"),
-        )
-    else:
-        sized = inter.join(
-            sizes.select(
-                F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a")
-            ),
-            "id_a",
-        ).join(
-            sizes.select(
-                F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b")
-            ),
-            "id_b",
-        )
-    jac = sized.select(
-        "id_a",
-        "id_b",
-        (
-            F.col("n_inter")
-            / (F.col("n_a") + F.col("n_b") - F.col("n_inter"))
-        ).alias("jaccard"),
+    jac = _with_sizes(inter, sizes, id_col).selectExpr(
+        "id_a", "id_b", "n_inter / (n_a + n_b - n_inter) AS jaccard"
     )
-    return jac.where(F.col("jaccard") >= F.lit(threshold))
+    return jac.where(
+        f"jaccard >= {sql_literal(float(threshold), T.DoubleType())}"
+    )
 
 
 def ngram_containment_pairs(
@@ -572,32 +559,13 @@ def ngram_containment_pairs(
         df, text_col, id_col, shingle_n, candidates, max_shingle_df,
         shingles=shingles,
     )
-    if "__na" in inter.columns:  # candidate path: sizes ride inline
-        sized = inter.select(
-            "id_a", "id_b", "n_inter",
-            F.col("__na").alias("n_a"), F.col("__nb").alias("n_b"),
-        )
-    else:
-        sized = inter.join(
-            sizes.select(F.col(id_col).alias("id_a"),
-                         F.col("n_sh").alias("n_a")),
-            "id_a",
-        ).join(
-            sizes.select(F.col(id_col).alias("id_b"),
-                         F.col("n_sh").alias("n_b")),
-            "id_b",
-        )
-    out = sized.select(
-        "id_a",
-        "id_b",
-        "n_a",
-        "n_b",
-        "n_inter",
-        (
-            F.col("n_inter") / F.least(F.col("n_a"), F.col("n_b"))
-        ).alias("containment"),
+    out = _with_sizes(inter, sizes, id_col).selectExpr(
+        "id_a", "id_b", "n_a", "n_b", "n_inter",
+        "n_inter / least(n_a, n_b) AS containment",
     )
-    return out.where(F.col("containment") >= F.lit(threshold))
+    return out.where(
+        f"containment >= {sql_literal(float(threshold), T.DoubleType())}"
+    )
 
 
 def simhash(

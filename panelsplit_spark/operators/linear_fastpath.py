@@ -8,7 +8,7 @@ is a function of second-order moments — OLS / ridge / mean / scaler —
 the fold fit collapses to ONE distributed aggregation over the raw rows,
 grouped by period instead of by fold:
 
-    groupBy(period[, snapshot]).agg(Σw, Σwy, Σwxᵢ, Σwxᵢy, Σwxᵢxⱼ, null flags)
+    groupBy(period[, snapshot]).agg(Σw, Σwy, Σwy², Σwxᵢ, Σwxᵢy, Σwxᵢxⱼ, flags)
 
 Fold moments are sums of period moments, so the driver gets every
 fold's moments from one numpy product — a fold × period 0/1 train
@@ -34,6 +34,13 @@ period. A scaler → linear pipeline therefore fits every step from the
 raw frame's one cube, without building the scaler's OOF frame (see
 ``docs/SCALE_NOTES.md``, "Moment propagation").
 
+The same cube scores the fits: each fold's test rows have moments
+from the test-membership matrix, and a closed-form predictor's squared
+error over them is a quadratic form in those moments. mse, rmse and r2
+of a candidate grid, or of a prediction frame this module built, come
+without a pass over the rows (see ``docs/SCALE_NOTES.md``, "Scores from
+moments").
+
 The produced models are ordinary estimator objects (coef_/intercept_/
 mean_ set), indistinguishable from pandas-path fits to downstream code.
 """
@@ -41,10 +48,11 @@ mean_ set), indistinguishable from pandas-path fits to downstream code.
 from __future__ import annotations
 
 import json
+import math
 import threading
 import weakref
 from dataclasses import dataclass
-from typing import Any, List, Optional, Sequence
+from typing import Any, Dict, List, Optional, Sequence
 
 import numpy as np
 from pyspark.sql import Column, DataFrame, functions as F, types as T
@@ -61,8 +69,8 @@ from ..plans.fold_spec import FoldSpec
 
 __all__ = [
     "AffineStep", "scaler_view_step", "suffstats_fit",
-    "linear_predict_frame", "sweep_scores", "logistic_irls", "glm_irls",
-    "huber_irls",
+    "linear_predict_frame", "predicted_fold_scores", "sweep_scores",
+    "FoldFitError", "logistic_irls", "glm_irls", "huber_irls",
 ]
 
 # Per-period moment cubes are a function of (data, columns, period and
@@ -87,6 +95,12 @@ def _memo(df: DataFrame, key: Any, compute) -> Any:
         if key not in per_df:
             per_df[key] = compute()
         return per_df[key]
+
+
+def _recall(df: DataFrame, key: Any) -> Any:
+    """What :func:`_memo` holds for ``df`` and ``key``, else ``None``."""
+    with _CACHE_LOCK:
+        return _MOMENT_CACHE.get(df, {}).get(key)
 
 
 #: fast path covers at most this many features (d² aggregate columns)
@@ -138,7 +152,7 @@ def _fold_moments(
     where: Optional[Column] = None,
 ) -> _MomentCube:
     """One grouped aggregate over the raw rows that pass ``where``: per
-    (period[, snapshot]) Σw, Σwy, Σwxᵢ, Σwxᵢy, Σwxᵢxⱼ plus separate
+    (period[, snapshot]) Σw, Σwy, Σwy², Σwxᵢ, Σwxᵢy, Σwxᵢxⱼ plus separate
     any-NULL flags for x, y and the weight, collected to a driver-small
     cube."""
     src = df if where is None else df.where(where)
@@ -164,6 +178,7 @@ def _fold_moments(
         sums[f"sxy_{i}"] = f"{w} * {xi} * {y}"
         for j in range(i, len(xs)):
             sums[f"sxx_{i}_{j}"] = f"{w} * {xi} * {xs[j]}"
+    sums["syy"] = f"{w} * {y} * {y}"
     cols = list(sums)
     flags = ["__null_x", "__null_y", "__null_w"]
     aggs = [f"sum({t}) AS {c}" for c, t in sums.items()] + [
@@ -315,18 +330,24 @@ def _moment_rows(
     drop_na_in_y: bool,
     null_rule: str,
     view: Sequence[AffineStep] = (),
+    role: str = "train",
+    warm_only: bool = False,
 ) -> Optional[dict]:
-    """Per-fold moment rows for ``cv``'s train sets, from the frame's
+    """Per-fold moment rows for ``cv``'s ``role`` sets, from the frame's
     memoised cube: ``{fold_id: {"n", "sy", "sx_i", ..., "has_null"}}``,
-    folds without train rows left out. The cube covers only the rows
-    inside the splitter's train scope (scan range, snapshot values),
-    which is part of the memo key. A non-empty ``view`` reads the cube
-    through that scaler chain first; ``None`` when it cannot."""
+    folds without rows in that role left out. The cube covers only the
+    rows inside the splitter's train scope (scan range, snapshot
+    values), which is part of the memo key, so the test sets of a
+    splitter that is not plain are not in it. A non-empty ``view``
+    reads the cube through that scaler chain first; ``None`` when it
+    cannot, or when ``warm_only`` and the cube is not memoised yet."""
     where, scope = cv._train_scope(df)
     key = (
         tuple(feats), y_col, sample_weight_col, bool(drop_na_in_y),
         cv.period_col, cv.snapshot_col, scope,
     )
+    if warm_only and _recall(df, key) is None:
+        return None
     cube = _memo(df, key, lambda: _fold_moments(
         df, cv.period_col, cv.snapshot_col, feats, y_col,
         sample_weight_col, drop_na_in_y, where,
@@ -335,7 +356,7 @@ def _moment_rows(
         cube = _affine_cube(cube, view, len(feats))
         if cube is None:
             return None
-    member = cv.spec.member_matrix(cube.periods, cube.snapshots)
+    member = cv.spec.member_matrix(cube.periods, cube.snapshots, role=role)
     sums = _masked_sum(member, cube.sums)
     # columns of cube.nulls: x, y, weight
     poison = {"x": [0, 2], "y": [1, 2], "xy": [0, 1, 2]}[null_rule]
@@ -384,18 +405,35 @@ def suffstats_fit(
     return _solve_from_moments(estimator, rows, feats, cv.n_splits)
 
 
+class FoldFitError(ValueError):
+    """A fold the closed-form solve cannot fit: it has no training rows,
+    or a training feature value is NaN or ±Inf."""
+
+
+def _moment_arrays(r: dict, d: int):
+    """``(Σx, Σxy, Σxxᵀ)`` of moment row ``r`` as numpy arrays."""
+    sxx = np.empty((d, d))
+    for i in range(d):
+        for j in range(i, d):
+            sxx[i, j] = sxx[j, i] = r[f"sxx_{i}_{j}"]
+    sx = np.array([r[f"sx_{i}"] for i in range(d)])
+    sxy = np.array([r[f"sxy_{i}"] for i in range(d)])
+    return sx, sxy, sxx
+
+
 def _solve_from_moments(
     estimator: Any, rows: dict, feats: List[str], n_splits: int
 ) -> List[Any]:
     """Driver-side O(d³) per-fold solve from collected moment rows —
     shared by single fits and whole-grid candidate sweeps (which reuse
-    one moments pass for every hyper-parameter)."""
+    one moments pass for every hyper-parameter). Raises
+    :class:`FoldFitError` for a fold it cannot fit."""
     d = len(feats)
     models: List[Any] = []
     for fid in range(n_splits):
         r = rows.get(fid)
         if r is None or not r["n"]:
-            raise ValueError(
+            raise FoldFitError(
                 f"Fold {fid} has no training rows; cannot fit. "
                 "Use drop_splits() to remove degenerate folds first."
             )
@@ -433,12 +471,7 @@ def _solve_from_moments(
             est.coef_ = np.full(d, np.nan)
             models.append(est)
             continue
-        sxx = np.empty((d, d))
-        for i in range(d):
-            for j in range(i, d):
-                sxx[i, j] = sxx[j, i] = r[f"sxx_{i}_{j}"]
-        sx = np.array([r[f"sx_{i}"] for i in range(d)])
-        sxy = np.array([r[f"sxy_{i}"] for i in range(d)])
+        sx, sxy, sxx = _moment_arrays(r, d)
         if est.fit_intercept:
             g = np.empty((d + 1, d + 1))
             g[0, 0] = r["n"]
@@ -450,7 +483,7 @@ def _solve_from_moments(
         if not np.isfinite(g).all():
             # NaN or ±Inf in a feature (a NULL poisons the fold above)
             # would fail the SVD with an untyped LinAlgError
-            raise ValueError(
+            raise FoldFitError(
                 f"Fold {fid}: a training feature value is non-finite "
                 f"(NaN or ±Inf); {type(est).__name__} cannot fit it."
             )
@@ -504,6 +537,28 @@ def _linear_pred(terms: str, feature_cols: Sequence[str]) -> str:
     )
 
 
+@dataclass
+class _Predictions:
+    """How :func:`linear_predict_frame` built a prediction frame: the
+    fold predictors ``terms`` applied to ``cv``'s ``role`` rows of
+    ``source``, projected to ``out_fields`` + ``output_col``.
+    ``null_rule`` names the columns whose NULLs make a prediction or
+    its error NULL (x and y, or y alone for MeanRegressor)."""
+
+    source: DataFrame
+    cv: Any
+    role: str
+    feats: List[str]
+    terms: List[List[float]]
+    null_rule: str
+    out_fields: List[str]
+    output_col: str
+
+
+#: memo key under which a prediction frame keeps its :class:`_Predictions`
+_PREDICTIONS = "predictions"
+
+
 def linear_predict_frame(
     assigned: DataFrame,
     fitted_estimators: List[Any],
@@ -511,13 +566,20 @@ def linear_predict_frame(
     method: str,
     out_fields: Sequence[str],
     output_col: str,
+    source: Optional[DataFrame] = None,
+    cv=None,
+    role: str = "test",
 ) -> Optional[DataFrame]:
     """Apply closed-form models as one arithmetic projection: each row
     looks its fold's ``[intercept, coef...]`` up in a literal array
     indexed by ``fold_id`` — the whole pass stays in codegen, with no
     Python workers, no join and no broadcast job. Returns ``None`` when
     any model is outside the closed-form family (caller falls back to
-    the broadcast-model pandas apply)."""
+    the broadcast-model pandas apply).
+
+    When ``assigned`` is ``cv``'s ``role`` rows of ``source``, the
+    returned frame remembers that in the moment-cube memo, so
+    :func:`predicted_fold_scores` can score it from ``source``'s cube."""
     if method != "predict":
         return None
     terms = [_linear_terms(m) for m in fitted_estimators]
@@ -526,10 +588,59 @@ def linear_predict_frame(
     families = {type(m) is MeanRegressor for m in fitted_estimators}
     if len(families) > 1:
         return None  # mixed families: keep the generic path
+    mean_only = families == {True}
     row = _literal_table(terms, 2) + "[fold_id]"
-    pred = _linear_pred(row, [] if families == {True} else feature_cols)
+    pred = _linear_pred(row, [] if mean_only else feature_cols)
     out = f"{pred} AS {sql_ident(output_col)}"
-    return assigned.selectExpr(*map(sql_ident, out_fields), out)
+    preds = assigned.selectExpr(*map(sql_ident, out_fields), out)
+    if source is not None:
+        _memo(preds, _PREDICTIONS, lambda: _Predictions(
+            source, cv, role, list(feature_cols), terms,
+            "y" if mean_only else "xy", list(out_fields), output_col,
+        ))
+    return preds
+
+
+def predicted_fold_scores(
+    preds: DataFrame, y_col: str, pred_col: str, metric: str
+) -> Optional[DataFrame]:
+    """Per-fold ``metric`` of a prediction frame that
+    :func:`linear_predict_frame` built from a source frame, answered
+    from the moments of each fold's scored rows in the source frame's
+    memoised cube: a ``VALUES`` frame ``(fold_id, score)`` whose
+    ``collect()`` starts no Spark job.
+
+    ``None`` (the caller scores the rows) unless ``preds`` is that
+    exact frame, ``metric`` is mse, rmse or r2, ``pred_col`` is its
+    output column, ``y_col`` a numeric column it kept, the splitter is
+    plain, the cube of (its features, ``y_col``, no weight, no NULL
+    drop) is memoised, and every fold's score can stand for the row
+    pass's (see :func:`_fold_score`)."""
+    p = _recall(preds, _PREDICTIONS)
+    if (
+        p is None or metric not in _MOMENT_METRICS
+        or pred_col != p.output_col or pred_col in p.out_fields
+        or y_col not in p.out_fields or y_col == "fold_id"
+        or p.out_fields.count("fold_id") != 1
+        or len(p.feats) > _MAX_FEATURES or not _plain_splitter(p.cv)
+        or len(p.terms) != len(p.cv.spec.folds)
+        or not isinstance(p.source.schema[y_col].dataType, T.NumericType)
+    ):
+        return None
+    rows = _moment_rows(
+        p.source, p.cv, p.feats, y_col, None, False, p.null_rule,
+        role=p.role, warm_only=True,
+    )
+    scores = _moment_scores(rows, p.terms, metric) if rows else None
+    if not scores:
+        return None
+    values = ", ".join(
+        f"({fid}, {sql_literal(v, T.DoubleType())})"
+        for fid, v in sorted(scores.items())
+    )
+    return preds.sparkSession.sql(
+        f"SELECT * FROM VALUES {values} AS t(fold_id, score)"
+    )
 
 
 def scaler_transform_frame(
@@ -606,6 +717,142 @@ def _grid_score_frame(
     return base.groupBy("__cand", "role", "fold_id").agg(*map(F.expr, aggs))
 
 
+#: metrics a fold's moments answer: each is a function of the fold's
+#: squared-error sum (and, for r2, of Σy² and Σy)
+_MOMENT_METRICS = ("mse", "rmse", "r2")
+
+#: a score from moments stands for the row pass's only while the
+#: rounding of its terms, bounded by 64 ulps of their magnitudes, stays
+#: below this share of the result (see docs/SCALE_NOTES.md, "Scores
+#: from moments")
+_CANCEL_TOL = 1e-9
+_ROUNDING = 64 * 2.0 ** -52
+
+
+def _fold_sse(terms: List[float], r: dict) -> Optional[float]:
+    """Σ(y − b₀ − βᵀx)² over the rows whose moments are ``r``, for
+    ``terms = [b₀, β...]`` (``[m]`` for MeanRegressor, which reads no
+    x), as the quadratic form
+
+        Σy² + n·b₀² + βᵀΣxxᵀβ − 2b₀Σy − 2βᵀΣxy + 2b₀βᵀΣx
+
+    NaN where the row pass gives NaN: a NULL the predictor reads
+    (``has_null``) or a NaN coefficient. ``None`` where the form cannot
+    stand for the row pass: a non-finite moment it reads, an infinite
+    coefficient, or a cancellation whose rounding, bounded by 64 ulps
+    of the terms' magnitudes, could exceed ``_CANCEL_TOL`` of the
+    result."""
+    b0, beta = terms[0], np.asarray(terms[1:], float)
+    sx, sxy, sxx = _moment_arrays(r, len(beta))
+    n, sy, syy = r["n"], r["sy"], r["syy"]
+    read = np.concatenate([[n, sy, syy], sx, sxy, sxx.ravel()])
+    if not np.isfinite(read).all() or np.isinf(terms).any():
+        return None
+    if r["has_null"] or np.isnan(terms).any():
+        return float("nan")
+    parts = np.concatenate([
+        [syy, n * b0 * b0, -2.0 * b0 * sy],
+        (np.outer(beta, beta) * sxx).ravel(),
+        -2.0 * beta * sxy,
+        2.0 * b0 * beta * sx,
+    ])
+    sse = float(parts.sum())
+    if _ROUNDING * float(np.abs(parts).sum()) > _CANCEL_TOL * sse:
+        return None
+    return sse
+
+
+def _fold_score(
+    terms: List[float], r: dict, metric: str
+) -> Optional[float]:
+    """``metric`` (one of ``_MOMENT_METRICS``) of the predictor
+    ``terms`` over the rows whose moments are ``r``, from their SSE as
+    the row pass computes it: ``mse = SSE/n``, ``rmse = √mse``,
+    ``r2 = 1 − SSE/(Σy² − (Σy)²/n)``. ``None`` when the rows must
+    answer: see :func:`_fold_sse`, and for r2 a zero or cancelled
+    denominator."""
+    sse = _fold_sse(terms, r)
+    if sse is None:
+        return None
+    n = r["n"]
+    if metric == "mse":
+        return sse / n
+    if metric == "rmse":
+        return math.sqrt(sse / n)
+    y2, mean_sq = r["syy"], r["sy"] ** 2 / n
+    denom = y2 - mean_sq
+    if denom == 0.0 or (
+        _ROUNDING * (y2 + mean_sq) > _CANCEL_TOL * abs(denom)
+    ):
+        return None
+    return 1.0 - sse / denom
+
+
+def _moment_scores(
+    rows: dict, terms: List[List[float]], metric: str
+) -> Optional[Dict[int, float]]:
+    """``{fold_id: score}`` of the fold predictors ``terms`` over the
+    folds of moment rows ``rows``; ``None`` if any fold must be scored
+    from its rows."""
+    out = {}
+    for fid, r in rows.items():
+        val = _fold_score(terms[fid], r, metric)
+        if val is None:
+            return None
+        out[fid] = float(val)
+    return out
+
+
+def _grid_from_moments(
+    rows: dict, models_per_cand: List[List[Any]], metrics: dict
+) -> Optional[dict]:
+    """Every candidate × test fold × metric score from the test moment
+    ``rows``, keyed like the grid-score pass; ``None`` if any must come
+    from the rows."""
+    scores: dict = {}
+    for ci, models in enumerate(models_per_cand):
+        terms = [_linear_terms(m) for m in models]
+        for mname, key in metrics.items():
+            got = _moment_scores(rows, terms, key)
+            if got is None:
+                return None
+            scores[(ci, "test", mname)] = got
+    return scores
+
+
+def _grid_from_rows(
+    df: DataFrame,
+    cv,
+    feats: List[str],
+    y_col: str,
+    roles: Sequence[str],
+    models_per_cand: List[List[Any]],
+    metrics: dict,
+) -> Optional[dict]:
+    """The same scores from one grouped pass over the ``roles`` rows
+    (:func:`_grid_score_frame`); ``None`` for a candidate outside the
+    closed-form family or a zero r2 denominator."""
+    assigned = cv.assign_columns(df, [*feats, y_col], tuple(roles))
+    grid = _grid_score_frame(assigned, models_per_cand, feats, y_col,
+                             metrics)
+    if grid is None:
+        return None
+    scores: dict = {}
+    for r in grid.collect():
+        for mname, key in metrics.items():
+            if key == "r2":
+                denom = r["__ss_y2"] - r["__s_y"] ** 2 / r["__n"]
+                if denom == 0.0:
+                    return None
+                val = 1.0 - r["__ss_res"] / denom
+            else:
+                val = r[f"__m_{mname}"]
+            scores.setdefault(
+                (r["__cand"], r["role"], mname), {}
+            )[r["fold_id"]] = float(val)
+    return scores
+
+
 def sweep_scores(
     estimators: List[Any],
     df: DataFrame,
@@ -618,15 +865,23 @@ def sweep_scores(
     drop_na_in_y: bool = False,
 ):
     """Score an ENTIRE candidate grid of closed-form estimators with at
-    most two Spark aggregates, independent of grid size.
+    most two Spark aggregates, independent of grid size, and none when
+    the frame's moment cube is warm and every metric is a squared-error
+    score of the test folds.
 
     1. the frame's cached moment cube (shared with ``suffstats_fit``)
        fits every candidate with an O(d³) driver solve each;
-    2. one pass over the fact rows, each paired with every candidate
-       through a literal ``(fold, candidate) → coefficients`` array,
-       computes every candidate × fold × metric aggregate
-       simultaneously — map-side partial aggregation, a few doubles per
-       group on the wire, no join and no broadcast job.
+    2. with roles ``("test",)``, metrics among mse/rmse/r2, no sample
+       weight, no ``drop_na_in_y`` and a plain splitter, the same cube's
+       test moments score every candidate × fold as a quadratic form
+       (:func:`_fold_sse`), with no pass over the rows;
+    3. otherwise, or where a fold's score from moments cannot stand for
+       the row pass (non-finite moment, cancellation, zero r2
+       denominator), one pass over the fact rows, each paired with
+       every candidate through a literal ``(fold, candidate) →
+       coefficients`` array, computes every candidate × fold × metric
+       aggregate simultaneously — map-side partial aggregation, a few
+       doubles per group on the wire, no join and no broadcast job.
 
     A 1000-point grid therefore costs the same cluster work as a single
     candidate — versus 1000 fit + 1000 score jobs on the generic path
@@ -638,6 +893,7 @@ def sweep_scores(
     ``(models_per_candidate, scores)`` where ``scores[(ci, role, mname)]``
     is the per-fold score list, or ``None`` if anything falls outside the
     closed-form/SQL-expressible envelope (caller uses the generic path).
+    A fold the solve cannot fit raises :class:`FoldFitError`.
     """
     from .metrics import _SQL_METRICS
 
@@ -666,23 +922,23 @@ def sweep_scores(
         for e in estimators
     ]
 
-    assigned = cv.assign_columns(df, [*feats, y_col], tuple(roles))
-    grid = _grid_score_frame(assigned, models_per_cand, feats, y_col,
-                             metrics)
-    if grid is None:
-        return None
-
-    scores: dict = {}
-    for r in grid.collect():
-        for mname, key in metrics.items():
-            if key == "r2":
-                denom = r["__ss_y2"] - r["__s_y"] ** 2 / r["__n"]
-                val = 1.0 - r["__ss_res"] / denom
-            else:
-                val = r[f"__m_{mname}"]
-            scores.setdefault(
-                (r["__cand"], r["role"], mname), {}
-            )[r["fold_id"]] = float(val)
+    scores = None
+    if (
+        tuple(roles) == ("test",) and sample_weight_col is None
+        and not drop_na_in_y and _plain_splitter(cv)
+        and set(metrics.values()) <= set(_MOMENT_METRICS)
+    ):
+        test = _moment_rows(
+            df, cv, feats, y_col, None, False, _null_rule(est0),
+            role="test",
+        )
+        scores = _grid_from_moments(test, models_per_cand, metrics)
+    if scores is None:
+        scores = _grid_from_rows(
+            df, cv, feats, y_col, roles, models_per_cand, metrics
+        )
+        if scores is None:
+            return None
     # Index by fold POSITION 0..n_splits-1, NaN-filling folds with zero
     # rows for a role — a positional list built from only the folds
     # present would silently shift later folds into the wrong

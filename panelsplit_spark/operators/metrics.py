@@ -735,11 +735,29 @@ def per_fold_scores(
     ``accuracy``, ``medae``, ``max_error``, ``r2``) or any Python callable
     ``f(y_true, y_pred, **kw) -> float`` (run per fold via grouped-map
     pandas UDF).
+
+    ``mse``, ``rmse`` and ``r2`` of the exact frame a closed-form
+    ``cross_val_predict`` returned (``y_col`` one of its kept columns,
+    ``pred_col`` its output, ``fold_col="fold_id"``) come from the
+    source frame's memoised moment cube instead, with no pass over the
+    rows: a literal frame whose ``collect()`` starts no Spark job
+    (``linear_fastpath.predicted_fold_scores``; fallbacks in
+    ``docs/SCALE_NOTES.md``, "Scores from moments"). Otherwise one
+    grouped aggregate over ``preds`` scores each fold.
     """
     if callable(metric):
         fast = _fastpath_name(metric, metric_kwargs)
         if fast is not None:
             metric, metric_kwargs = fast, {}
+    if (
+        isinstance(metric, str) and fold_col == "fold_id"
+        and not metric_kwargs
+    ):
+        from .linear_fastpath import predicted_fold_scores
+
+        scored = predicted_fold_scores(preds, y_col, pred_col, metric)
+        if scored is not None:
+            return scored
     if isinstance(metric, str):
         # Spark aggregates SKIP NULLs; numpy metrics poison on NaN.
         # Normalize numeric NULL→NaN so the JVM fast path reproduces the

@@ -200,12 +200,17 @@ class BaseSearch:
     ) -> Optional[List[Dict[str, Any]]]:
         """Whole-grid fast path: when the pipeline is a single
         closed-form CV step and every scorer is a SQL-expressible
-        predict metric, fit AND score the entire candidate grid in two
-        Spark jobs (one cached moment aggregate + one grid-scoring
-        aggregate) via ``linear_fastpath.sweep_scores`` — cluster work
-        independent of grid size. Returns per-candidate result dicts in
-        the ``_fit_and_score`` shape, or None to use the generic path."""
-        from .linear_fastpath import sweep_scores
+        predict metric, fit AND score the entire candidate grid from
+        one cached moment aggregate via ``linear_fastpath.sweep_scores``
+        — cluster work independent of grid size. Squared-error scorers
+        (mse, rmse, r2) of the test folds score from that aggregate's
+        test moments, so a search after a fit on the same frame starts
+        no Spark job; other scorers add one grid-scoring aggregate.
+        Returns per-candidate result dicts in the ``_fit_and_score``
+        shape, or None to use the generic path, which also takes a
+        fold the closed-form solve cannot fit (``FoldFitError``) and
+        reports it per candidate. Any other error propagates."""
+        from .linear_fastpath import FoldFitError, sweep_scores
         from .metrics import _fastpath_name
 
         pipe = self.estimator
@@ -247,44 +252,39 @@ class BaseSearch:
             ("test", "train") if self.return_train_score else ("test",)
         )
         t0 = time.time()
-        # guard covers result assembly too: a fully missing
-        # (cand, role, metric) key must mean generic-path fallback,
-        # never a crashed GridSearch.fit (ADVICE r01)
         try:
             res = sweep_scores(
                 ests, df, pipe.feature_cols, pipe.y_col, cv, metrics,
                 roles=roles,
             )
-            if res is None:
-                return None
-            _, folded = res
-            n_splits = cv.get_n_splits()
-            nan_row = [float("nan")] * n_splits
-            per_cand = (time.time() - t0) / max(len(candidates), 1)
-            results: List[Dict[str, Any]] = []
-            for ci, params in enumerate(candidates):
-                out: Dict[str, Any] = {
-                    "params": params,
-                    "fit_time": per_cand,
-                    "score_time": 0.0,
-                }
-                for mname, scorer in scorers.items():
-                    sign = getattr(scorer, "_sign", 1.0)
-                    out[f"test_{mname}"] = [
+        except FoldFitError:
+            return None
+        if res is None:
+            return None
+        _, folded = res
+        n_splits = cv.get_n_splits()
+        nan_row = [float("nan")] * n_splits
+        per_cand = (time.time() - t0) / max(len(candidates), 1)
+        results: List[Dict[str, Any]] = []
+        for ci, params in enumerate(candidates):
+            out: Dict[str, Any] = {
+                "params": params,
+                "fit_time": per_cand,
+                "score_time": 0.0,
+            }
+            for mname, scorer in scorers.items():
+                sign = getattr(scorer, "_sign", 1.0)
+                out[f"test_{mname}"] = [
+                    sign * v
+                    for v in folded.get((ci, "test", mname), nan_row)
+                ]
+                if self.return_train_score:
+                    out[f"train_{mname}"] = [
                         sign * v
-                        for v in folded.get((ci, "test", mname), nan_row)
+                        for v in folded.get((ci, "train", mname), nan_row)
                     ]
-                    if self.return_train_score:
-                        out[f"train_{mname}"] = [
-                            sign * v
-                            for v in folded.get(
-                                (ci, "train", mname), nan_row
-                            )
-                        ]
-                results.append(out)
-            return results
-        except Exception:
-            return None  # generic path will surface per-candidate errors
+            results.append(out)
+        return results
 
     def _score_all(self, pipe, df, scorers, out, prefix: str) -> None:
         """Score all metrics, computing (and caching) ONE prediction pass

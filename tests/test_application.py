@@ -723,9 +723,11 @@ def test_closed_form_apply_and_sweep_plans_have_no_broadcast(spark):
 
     lf._grid_score_frame = capture
     try:
+        # mae keeps the grid on the row pass (squared-error scores
+        # alone come from the moment cube, with no grid frame)
         res = lf.sweep_scores(
             [Ridge(alpha=0.1), Ridge(alpha=10.0)], df, ["x"], "y", ps,
-            {"mse": "mse"},
+            {"mse": "mse", "mae": "mae"},
         )
     finally:
         lf._grid_score_frame = orig

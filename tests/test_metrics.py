@@ -346,3 +346,219 @@ def test_check_multimetric():
     assert set(d2) == {"a"}
     d3 = M.check_multimetric_scoring("r2")
     assert set(d3) == {"score"}
+
+
+# ----------------------------------------------------------------------
+# per-fold scores from the moment cube (linear_fastpath.
+# predicted_fold_scores) against the row pass
+# ----------------------------------------------------------------------
+
+FEATS = ["x0", "x1", "x2"]
+
+
+def _cv_panel(spark, offset=0.0, edit=None):
+    """A seeded 14-period panel: y = 5 + x·b + noise (+ ``offset``).
+    ``edit(period, i, x, y)`` may return a replacement ``(x, y)``."""
+    rng = np.random.default_rng(11)
+    rows = []
+    for p in range(14):
+        for i in range(30):
+            x = [float(v) for v in rng.normal(size=3)]
+            y = float(5.0 + x[0] - 2.0 * x[1] + 0.5 * x[2]
+                      + rng.normal() + offset)
+            if edit is not None:
+                x, y = edit(p, i, x, y)
+            rows.append((p * 100 + i, p, *x, y))
+    return spark.createDataFrame(
+        rows, "rid long, period int, x0 double, x1 double, x2 double, "
+        "y double",
+    )
+
+
+def _fast_preds(df, est, **split):
+    from panelsplit_spark import PanelSplit, cross_val_fit, cross_val_predict
+
+    ps = PanelSplit(df, "period", n_splits=split.pop("n_splits", 4),
+                    **split)
+    models = cross_val_fit(est, df, FEATS, "y", ps)
+    return cross_val_predict(models, df, FEATS, ps)
+
+
+def _scored(spark, frame, metric):
+    """``({fold: score}, jobs)`` of per_fold_scores over ``frame``, or
+    ``(exception class name, jobs)`` when the scoring raises."""
+    from helpers import spark_jobs
+
+    with spark_jobs(spark) as jobs:
+        try:
+            rows = M.per_fold_scores(frame, "y", "prediction", metric)
+            out = {r["fold_id"]: r["score"] for r in rows.collect()}
+        except Exception as e:  # the row pass may raise (ANSI division)
+            out = type(e).__name__
+    return out, len(jobs)
+
+
+def _same(got, want):
+    if isinstance(want, str) or isinstance(got, str):
+        return got == want
+    return sorted(got) == sorted(want) and all(
+        (np.isnan(got[k]) and np.isnan(want[k]))
+        or got[k] == pytest.approx(want[k], rel=1e-9, abs=0.0)
+        for k in want
+    )
+
+
+def _estimators():
+    from panelsplit_spark import LinearRegression, MeanRegressor, Ridge
+
+    return {
+        "ols": LinearRegression(),
+        "ridge": Ridge(alpha=3.0),
+        "mean": MeanRegressor(),
+        "ols_no_intercept": LinearRegression(fit_intercept=False),
+    }
+
+
+SPLITS = {
+    "plain": {},
+    "gap": {"gap": 2},
+    "test_size": {"test_size": 2, "n_splits": 3},
+    "first_train_in_test": {"include_first_train_in_test": True},
+}
+METRICS_FROM_MOMENTS = [
+    "mse", "rmse", "r2",
+    M.mean_squared_error, M.root_mean_squared_error, M.r2_score,
+]
+
+
+@pytest.mark.parametrize("split", sorted(SPLITS))
+@pytest.mark.parametrize("kind", sorted(_estimators()))
+def test_scores_from_moments_match_row_pass(spark, kind, split):
+    """A closed-form cross_val_predict frame scores from the memoised
+    cube with no Spark job, within 1e-9 of the row pass over the same
+    predictions (a derived frame always takes the row pass)."""
+    df = _cv_panel(spark)
+    preds = _fast_preds(df, _estimators()[kind], **dict(SPLITS[split]))
+    for metric in METRICS_FROM_MOMENTS:
+        got, jobs = _scored(spark, preds, metric)
+        want, row_jobs = _scored(spark, preds.where("true"), metric)
+        assert jobs == 0, (metric, jobs)
+        assert row_jobs > 0
+        assert _same(got, want), (metric, got, want)
+        assert all(np.isfinite(v) for v in got.values())
+
+
+def test_scores_from_moments_frame_shape(spark):
+    df = _cv_panel(spark)
+    preds = _fast_preds(df, _estimators()["ols"])
+    fast = M.per_fold_scores(preds, "y", "prediction", "mse")
+    rows = M.per_fold_scores(preds.where("true"), "y", "prediction", "mse")
+    assert fast.dtypes == rows.dtypes == [("fold_id", "int"),
+                                          ("score", "double")]
+
+
+@pytest.mark.parametrize("kind", ["ols", "mean"])
+def test_null_y_in_a_test_period_gives_nan(spark, kind):
+    def edit(p, i, x, y):
+        return x, (None if (p, i) == (12, 3) else y)
+
+    df = _cv_panel(spark, edit=edit)
+    preds = _fast_preds(df, _estimators()[kind])
+    for metric in ("mse", "rmse", "r2"):
+        got, jobs = _scored(spark, preds, metric)
+        want, _ = _scored(spark, preds.where("true"), metric)
+        assert jobs == 0
+        assert _same(got, want), (metric, got, want)
+        # period 12 is the test set of fold 2 only (4 folds of one
+        # period each over periods 10-13)
+        assert np.isnan(got[2]) and not np.isnan(got[1])
+
+
+@pytest.mark.parametrize("kind", ["ols", "mean"])
+def test_null_x_poisons_linear_scores_only(spark, kind):
+    def edit(p, i, x, y):
+        return ([None, x[1], x[2]] if (p, i) == (13, 0) else x), y
+
+    df = _cv_panel(spark, edit=edit)
+    preds = _fast_preds(df, _estimators()[kind])
+    got, jobs = _scored(spark, preds, "mse")
+    want, _ = _scored(spark, preds.where("true"), "mse")
+    assert jobs == 0
+    assert _same(got, want), (got, want)
+    assert np.isnan(got[3]) == (kind == "ols")
+
+
+def _assert_row_pass(spark, preds, metric):
+    got, jobs = _scored(spark, preds, metric)
+    want, _ = _scored(spark, preds.where("true"), metric)
+    assert jobs > 0, metric
+    assert _same(got, want), (metric, got, want)
+    return got
+
+
+@pytest.mark.parametrize("bad", [float("nan"), float("inf"), -float("inf")])
+def test_non_finite_x_takes_the_row_pass(spark, bad):
+    """A NaN or ±Inf x in a period no fold trains on makes that fold's
+    test moments non-finite: the rows answer."""
+    def edit(p, i, x, y):
+        return ([bad, x[1], x[2]] if (p, i) == (13, 5) else x), y
+
+    df = _cv_panel(spark, edit=edit)
+    preds = _fast_preds(df, _estimators()["ols"])
+    for metric in ("mse", "r2"):
+        got = _assert_row_pass(spark, preds, metric)
+        assert not np.isfinite(got[3])
+
+
+def test_weighted_fit_takes_the_row_pass(spark):
+    """A weighted fit leaves only a weighted cube, which cannot answer
+    the unweighted row scores."""
+    from panelsplit_spark import LinearRegression, PanelSplit
+    from panelsplit_spark import cross_val_fit, cross_val_predict
+    from pyspark.sql import functions as F
+
+    df = _cv_panel(spark).withColumn("w", F.lit(2.0) + F.col("x0") ** 2)
+    ps = PanelSplit(df, "period", n_splits=4)
+    models = cross_val_fit(LinearRegression(), df, FEATS, "y", ps,
+                           sample_weight_col="w")
+    preds = cross_val_predict(models, df, FEATS, ps)
+    _assert_row_pass(spark, preds, "mse")
+
+
+def test_one_row_test_fold_r2_takes_the_row_pass(spark):
+    """r2 of a one-row fold has a zero denominator: the rows answer it
+    (with a Spark division error under ANSI), while mse still comes
+    from the cube."""
+    def edit(p, i, x, y):
+        # a residual far from 0 keeps the mse clear of the
+        # cancellation bound
+        return x, (y + 3.0 if (p, i) == (13, 0) else y)
+
+    df = _cv_panel(spark, edit=edit).where("period < 13 OR rid = 1300")
+    preds = _fast_preds(df, _estimators()["ols"])
+    _assert_row_pass(spark, preds, "r2")
+    got, jobs = _scored(spark, preds, "mse")
+    assert jobs == 0 and np.isfinite(got[3])
+
+
+def test_large_y_offset_takes_the_row_pass(spark):
+    """y ≈ 1e8 makes Σy² dwarf the SSE: the cancellation bound sends
+    the scores to the rows."""
+    df = _cv_panel(spark, offset=1e8)
+    preds = _fast_preds(df, _estimators()["ols"])
+    for metric in ("mse", "rmse", "r2"):
+        _assert_row_pass(spark, preds, metric)
+
+
+def test_derived_prediction_frame_takes_the_row_pass(spark):
+    df = _cv_panel(spark)
+    preds = _fast_preds(df, _estimators()["ols"])
+    got, jobs = _scored(spark, preds.where("fold_id > 0"), "mse")
+    assert jobs > 0 and sorted(got) == [1, 2, 3]
+
+
+def test_mae_still_aggregates_the_rows(spark):
+    df = _cv_panel(spark)
+    preds = _fast_preds(df, _estimators()["ols"])
+    got, jobs = _scored(spark, preds, "mae")
+    assert jobs > 0 and sorted(got) == [0, 1, 2, 3]

@@ -5,7 +5,14 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from panelsplit_spark import PanelSplit, Ridge
+from panelsplit_spark import (
+    LinearRegression,
+    MeanRegressor,
+    PanelSplit,
+    Ridge,
+    cross_val_fit,
+    cross_val_predict,
+)
 from panelsplit_spark.operators.model_selection import (
     GridSearch,
     ParameterGrid,
@@ -400,3 +407,164 @@ def test_n_jobs_concurrent_candidates_deterministic(spark, panel):
         )
     assert list(r1["mean_test_score"]) == list(r4["mean_test_score"])
     assert list(r1["rank_test_score"]) == list(r4["rank_test_score"])
+
+
+# ----------------------------------------------------------------------
+# squared-error grid scores from the moment cube
+# ----------------------------------------------------------------------
+
+
+def _wide_panel(spark, offset=0.0):
+    rng = np.random.default_rng(5)
+    rows = []
+    for p in range(10):
+        for _ in range(25):
+            x1, x2 = (float(v) for v in rng.normal(size=2))
+            rows.append((p, x1, x2, 4.0 + 2.0 * x1 - x2
+                         + float(rng.normal()) + offset))
+    return spark.createDataFrame(
+        rows, "period int, x1 double, x2 double, y double"
+    )
+
+
+def _search(df, est, grid, scoring, **split):
+    ps = PanelSplit(df, "period", n_splits=4, **split)
+    pipe = SequentialCVPipeline([("reg", est)], [ps], ["x1", "x2"],
+                                y_col="y")
+    return GridSearch(pipe, grid, scoring=scoring, refit=False)
+
+
+SQUARED = {
+    "mse": "neg_mean_squared_error",
+    "rmse": "neg_root_mean_squared_error",
+    "r2": "r2",
+}
+
+
+class _SlowLinear(LinearRegression):
+    """Outside the exact-type closed-form checks: generic path."""
+
+
+class _SlowMean(MeanRegressor):
+    """Outside the exact-type closed-form checks: generic path."""
+
+
+@pytest.mark.parametrize("split", [{}, {"gap": 1}, {"test_size": 2},
+                                   {"include_first_train_in_test": True}])
+@pytest.mark.parametrize("kind", ["ridge", "ols", "mean"])
+def test_squared_error_grid_from_moments_matches_generic(spark, kind,
+                                                         split):
+    """With the cube warm, the sweep scores every candidate with no
+    Spark job, within 1e-9 of the generic per-candidate path."""
+    from helpers import spark_jobs
+
+    df = _wide_panel(spark)
+    est, slow, grid = {
+        "ridge": (Ridge(), _SlowRidge(), {"reg__alpha": [0.1, 10.0]}),
+        "ols": (LinearRegression(), _SlowLinear(),
+                {"reg__fit_intercept": [True, False]}),
+        "mean": (MeanRegressor(), _SlowMean(), {}),
+    }[kind]
+    _search(df, est, grid, SQUARED, **split).fit(df)  # warms the cube
+    fast = _search(df, est, grid, SQUARED, **split)
+    with spark_jobs(spark) as jobs:
+        fast.fit(df)
+    assert jobs == []
+    generic = _search(df, slow, grid, SQUARED, **split).fit(df)
+    for m in SQUARED:
+        for j in range(4):
+            a = fast.cv_results_[f"split{j}_test_{m}"]
+            b = generic.cv_results_[f"split{j}_test_{m}"]
+            assert np.allclose(a, b, rtol=1e-9, atol=0.0), (m, j, a, b)
+
+
+def test_grid_fit_with_warm_cube_starts_no_job_and_mae_aggregates(
+    spark
+):
+    from helpers import spark_jobs
+
+    df = _wide_panel(spark)
+    grid = {"reg__alpha": [0.1, 1.0, 10.0]}
+    _search(df, Ridge(), grid, "neg_mean_squared_error").fit(df)
+    with spark_jobs(spark) as jobs:
+        _search(df, Ridge(), grid, "neg_mean_squared_error").fit(df)
+    assert jobs == []
+    with spark_jobs(spark) as jobs:
+        _search(df, Ridge(), grid, "neg_mean_absolute_error").fit(df)
+    assert len(jobs) > 0
+
+
+@pytest.mark.parametrize("case", ["offset", "weight"])
+def test_grid_fallbacks_score_the_rows(spark, case):
+    """A y offset of 1e8 (cancellation bound) and a sample weight keep
+    the grid on the row pass, with the generic path's scores."""
+    from helpers import spark_jobs
+
+    from panelsplit_spark.operators import linear_fastpath as lf
+
+    df = _wide_panel(spark, offset=1e8 if case == "offset" else 0.0)
+    df = df.withColumn("w", F.lit(1.0) + F.col("x1") ** 2)
+    ps = PanelSplit(df, "period", n_splits=4)
+    weight = "w" if case == "weight" else None
+    ests = [Ridge(alpha=0.1), Ridge(alpha=10.0)]
+    lf.sweep_scores(ests, df, ["x1", "x2"], "y", ps, {"m": "mse"},
+                    sample_weight_col=weight)  # warms the cube
+    with spark_jobs(spark) as jobs:
+        _, folded = lf.sweep_scores(
+            ests, df, ["x1", "x2"], "y", ps, {"m": "mse"},
+            sample_weight_col=weight,
+        )
+    assert len(jobs) > 0
+    for ci, est in enumerate(ests):
+        models = cross_val_fit(est, df, ["x1", "x2"], "y", ps,
+                               sample_weight_col=weight)
+        preds = cross_val_predict(models, df, ["x1", "x2"], ps)
+        want = {}
+        for r in preds.collect():
+            want.setdefault(r["fold_id"], []).append(
+                (r["y"] - r["prediction"]) ** 2
+            )
+        assert np.allclose(
+            folded[(ci, "test", "m")],
+            [np.mean(want[f]) for f in range(4)], rtol=1e-9, atol=0.0,
+        )
+
+
+def test_sweep_fold_fit_error_takes_generic_path(spark, panel,
+                                                 monkeypatch):
+    """A fold the closed-form solve cannot fit (here: no training rows)
+    sends the search to the generic path, which reports it per
+    candidate."""
+    from panelsplit_spark.operators.linear_fastpath import FoldFitError
+
+    ps = PanelSplit.from_folds([([99], [2]), ([1], [3])], "period")
+    pipe = SequentialCVPipeline([("reg", Ridge())], [ps], ["x1", "x2"],
+                                y_col="y")
+    calls = []
+    orig = GridSearch._fit_and_score
+
+    def spy(self, *a, **k):
+        calls.append(a[0])
+        return orig(self, *a, **k)
+
+    monkeypatch.setattr(GridSearch, "_fit_and_score", spy)
+    gs = GridSearch(pipe, {"reg__alpha": [1.0, 2.0]},
+                    scoring="neg_mean_squared_error", error_score="raise")
+    with pytest.raises(FoldFitError, match="Fold 0 has no training rows"):
+        gs.fit(panel)
+    assert calls == [{"reg__alpha": 1.0}]
+
+
+def test_sweep_other_errors_surface(spark, panel, monkeypatch):
+    """Any other error in the whole-grid sweep propagates instead of
+    silently switching to the generic path."""
+    from panelsplit_spark.operators import linear_fastpath as lf
+
+    def boom(*a, **k):
+        raise RuntimeError("sweep broke")
+
+    monkeypatch.setattr(lf, "sweep_scores", boom)
+    gs = GridSearch(_pipe(panel), {"reg__alpha": [1.0]},
+                    scoring="neg_mean_squared_error")
+    with pytest.raises(RuntimeError, match="sweep broke"):
+        gs.fit(panel)

@@ -1,6 +1,6 @@
 """py4j round trips of the closed-form CV fast path and of the dedup
-prefix filter and clustering, and the identifier quoting their SQL-text
-expressions rely on.
+prefix filter, verify step and clustering, and the identifier quoting
+their SQL-text expressions rely on.
 
 Each wide expression of the fast path (the moment aggregates, the
 prediction and scaler projections, the pipeline's feature expansion,
@@ -34,9 +34,11 @@ from panelsplit_spark.operators.linear_fastpath import (
     scaler_transform_frame,
     suffstats_fit,
 )
+from panelsplit_spark.operators import dedup
 from panelsplit_spark.operators.dedup import (
     connected_components,
     doc_shingles,
+    ngram_jaccard_pairs,
     prefix_filter_candidates,
 )
 from panelsplit_spark.operators.metrics import per_fold_scores
@@ -231,3 +233,25 @@ def test_connected_components_round_trips(spark):
         out = connected_components(pairs).collect()
     assert {r["cluster"] for r in out} == {1}
     assert n.calls <= 450, n.calls
+
+
+@pytest.mark.parametrize("array_branch", [False, True])
+def test_verify_chain_round_trips(spark, monkeypatch, array_branch):
+    """The candidate branches of the verify step and the Jaccard tail
+    are SQL text: a verify call over the prefix-filter candidates,
+    its candidate checkpoint and branch jobs included, makes about 170
+    round trips on either branch (about 520 and 750 before)."""
+    if array_branch:
+        monkeypatch.setattr(dedup, "_ARRAY_VERIFY_MIN_CANDS", 0)
+    docs = _docs(spark)
+    sh = doc_shingles(docs).localCheckpoint()
+    cands = prefix_filter_candidates(
+        docs, threshold_bp=5000, shingles=sh
+    ).localCheckpoint()
+    with count_py4j() as n:
+        pairs = ngram_jaccard_pairs(
+            docs, threshold=0.5, candidates=cands, shingles=sh
+        )
+    assert pairs.columns == ["id_a", "id_b", "jaccard"]
+    assert n.calls <= 260, n.calls
+    assert pairs.count() == 60
